@@ -10,8 +10,12 @@ too (only the first survives). This is the engine's exactly-once
 backstop: re-runs re-read the log and write 0 new rows (laws 4/5,
 test_integration.py:214-237, 363-410).
 
-Spark design: ``dropDuplicates`` (map-side partial dedup, then one hash
-shuffle on the key) + LEFT ANTI join against the sink's key set. At
+Spark design: LEFT ANTI join against the sink's key set, then
+``dropDuplicates`` on the survivors. Both decisions depend on the key
+alone, so the order does not change the result, and the dedup aggregate
+(a sort-based aggregate over string columns) only sorts rows that are
+not in the sink already. Catalyst makes the same swap on its own
+(``PushDownLeftSemiAntiJoin``); the code states the executed order. At
 100 TB: the anti-join shuffles both sides on the dedup key unless the
 existing side fits the broadcast threshold — for incremental loads the
 "existing keys in the affected window" are pruned by the delta watermark
@@ -45,9 +49,8 @@ def dedup_against_existing(
     the executors eventually, while AQE's dynamic join selection already
     broadcasts a measured-small side without being forced."""
     keys = list(keys)
-    fresh = batch.dropDuplicates(keys)
     if existing is None:
-        return fresh
+        return batch.dropDuplicates(keys)
     # No dropDuplicates on the existing side: LEFT ANTI semantics are
     # insensitive to duplicate keys on the right, and deduplicating there
     # costs a full hash shuffle of the sink's key set. The broadcast
@@ -56,4 +59,4 @@ def dedup_against_existing(
     existing_keys = existing.select(*keys)
     if broadcast_existing:
         existing_keys = F.broadcast(existing_keys)
-    return fresh.join(existing_keys, on=keys, how="left_anti")
+    return batch.join(existing_keys, on=keys, how="left_anti").dropDuplicates(keys)

@@ -67,7 +67,7 @@ def scrub_flagged_persons(
             lambda iv: (event_date >= iv["f"]) & (event_date <= iv["t"]),
         ),
     ).otherwise(F.lit(False))
-    out = joined
-    for c in payload_cols:
-        out = out.withColumn(c, F.when(hit, F.lit(None)).otherwise(F.col(c)))
+    out = joined.withColumns(
+        {c: F.when(hit, F.lit(None)).otherwise(F.col(c)) for c in payload_cols}
+    )
     return out.drop("__k6_id", INTERVALS_COL)

@@ -27,8 +27,9 @@ class PayloadExprs:
     hash_bytes: Optional[Column]  # None -> raw value bytes
     schema_id: Optional[Column]  # Avro only
     # what allow-filters probe: the deserialized-and-filtered payload
-    # (reference src/kafka_source.py:207-218); None -> raw value string
-    filter_payload: Optional[Column]
+    # (reference src/kafka_source.py:207-218); the raw value string in
+    # string mode, where kafka_message is a JSON string literal
+    filter_payload: Column
 
 
 def payload_exprs(
@@ -50,11 +51,12 @@ def payload_exprs(
     can afford (see ``runner._AVRO_BRANCH_LIMIT``)."""
     mode = PayloadSchema(src.schema_type)
     if mode == PayloadSchema.STRING:
+        raw = F.col("value").cast("string")
         return PayloadExprs(
-            canonical=json_quote(F.col("value").cast("string")),
+            canonical=json_quote(raw),
             hash_bytes=None,
             schema_id=None,
-            filter_payload=None,
+            filter_payload=raw,
         )
     hash_bytes = None
     schema_id = None

@@ -5,11 +5,18 @@ Reference flow (src/main.py:55-66 → src/mapping.py:49-57): YAML
 ``CONSUMER_CONFIG`` → validated config → source poll loop → deserialize +
 filter → transform → k6 scrub → dedup-on-insert → sink, returning a
 ``ProcessSummary``. Here the validated :class:`PipelineSpec` compiles into
-ONE lazy DataFrame plan — source scan → envelope projection → payload ops
-→ transform projection → privacy join → anti-join — and the sink action
-executes it. Catalyst fuses the projections into a single codegen stage,
-so at 100 TB the whole spine is a scan-shaped map job plus at most two
-joins (broadcast k6 lookup, dedup anti-join).
+ONE lazy DataFrame plan — source scan → envelope projection → payload
+parse → privacy join → transform projection → anti-join → dedup — and the
+sink action executes it. Catalyst fuses the projections into a single
+codegen stage, so at 100 TB the whole spine is a scan-shaped map job plus
+at most two joins (broadcast k6 lookup, dedup anti-join).
+
+Each payload is parsed ONCE, like the reference's single ``json.loads``:
+one ``from_json`` into a struct (``_attach_payload_struct`` resolves its
+schema) feeds the allow-filter, a payload-keypath kode-6/7 key and every
+transform keypath, so all of them read the same value — duplicate keys
+included. String-mode payloads are JSON string literals; their
+allow-filter keeps probing the raw value text.
 
 Stage order matches the reference exactly:
 payload drop/flag inside deserialization (src/kafka_source.py:102-119),
@@ -21,6 +28,7 @@ INSERT (:97-104).
 from __future__ import annotations
 
 import datetime as dt
+import json
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,9 +57,14 @@ from dvh_airflow_kafka_spark.sinks.writers import (
     write_parquet_append,
 )
 from dvh_airflow_kafka_spark.sources.envelope import (
+    ENVELOPE_COLUMNS,
+    PAYLOAD_COL,
     events_as_kafka_frame,
+    payload_text,
     with_envelope,
+    with_text_leaves,
 )
+from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
 
 KAFKA_COLUMNS = {"key", "value", "topic", "partition", "offset", "timestamp"}
 
@@ -152,7 +165,7 @@ def _payload_rule_sources(spec: PipelineSpec, envelope_cols: set[str]) -> list[s
 
 
 # Inferred payload schemas keyed by (source path, schema mode, drop/flag
-# config): the sample-and-infer fallback costs two driver jobs and is
+# config): the sample-and-infer fallback costs four driver jobs and is
 # nondeterministic under sampling — running it once per distinct source
 # makes repeated ad-hoc runs stable and free. The declared-schema mode
 # never touches this.
@@ -161,46 +174,69 @@ _INFERRED_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
 def _attach_payload_struct(
     spark: SparkSession,
-    env: DataFrame,
-    keypaths: list[str],
+    sample_frame: Callable[[Optional[T.StructType]], DataFrame],
+    roots: list[str],
+    text_paths: list[list[str]],
     declared_schema: Optional[str] = None,
     cache_key: Optional[tuple] = None,
-) -> DataFrame:
-    """Expose payload keypaths to the transform DSL. The reference merges
-    the deserialized payload dict into the record, so transform ``src``
-    paths address payload fields directly (src/kafka_source.py:110-118 +
-    src/transform.py:176-185). Spark needs a schema:
+) -> T.StructType:
+    """The schema of the struct the assign plan parses each payload into.
 
-    - ``declared_schema`` (the spec's ``payload-schema`` DDL string) is
-      the production mode — zero extra jobs, and fields that first appear
-      late in the stream still resolve;
-    - otherwise infer from a bounded driver-side sample (one extra job at
-      plan-build time; ad-hoc exploration only).
+    One parse per row: the reference deserializes a message once and
+    merges the dict into the record, so the allow-filter, the kode-6/7
+    key and transform ``src`` paths all read that one dict
+    (src/kafka_source.py:110-118, src/transform.py:176-185). Here one
+    ``from_json`` per row feeds all three, so the struct carries:
+
+    - the transform ``roots`` from the payload schema — the
+      ``declared_schema`` (the spec's ``payload-schema`` DDL string, the
+      production mode: no jobs, and fields that first appear late in the
+      stream still resolve), or else a schema inferred from a bounded
+      sample;
+    - a STRING leaf for every keypath in ``text_paths`` (allow-filter
+      keys, the kode-6/7 key) that those roots lack.
+
+    The inference sample is ``sample_frame(schema)`` — the allow-filtered
+    and kode-6/7-scrubbed plan, built over a struct of just the
+    ``text_paths`` — cut to its first 1000 non-NULL ``kafka_message``
+    values: ad-hoc exploration only, as it costs up to three ``collect``
+    jobs for the ``limit`` (one of them builds the kode-6/7 broadcast)
+    plus one JSON-inference job at plan-build time. The caller builds the
+    counted plan after this returns, so no run counter observes the
+    sample.
 
     A transform ``src`` root absent from the schema is a HARD ERROR in
     both modes: silently skipping it would surface as an opaque
     AnalysisException (or a silently-NULL column) far downstream.
     """
-    if declared_schema is not None:
+    if not roots:
+        schema = T.StructType()
+    elif declared_schema is not None:
         schema = T.StructType.fromDDL(declared_schema)
     elif cache_key is not None and cache_key in _INFERRED_SCHEMA_CACHE:
         schema = _INFERRED_SCHEMA_CACHE[cache_key]
     else:
-        sample = [
-            r[0]
-            for r in env.select("kafka_message")
+        probe = with_text_leaves(T.StructType(), text_paths) if text_paths else None
+        sample = (
+            sample_frame(probe)
+            .select("kafka_message")
             .filter(F.col("kafka_message").isNotNull())
             .limit(1000)
-            .collect()
-        ]
-        if not sample:
+        )
+        # Collected and inferred inside the JVM: the same rows and the
+        # same inference as spark.read.json over an RDD of the strings,
+        # without shipping them through Python or starting a Python
+        # worker for the inference job.
+        jspark = spark._jsparkSession
+        strings = spark._jvm.org.apache.spark.sql.Encoders.STRING()
+        rows = getattr(sample._jdf, "as")(strings).collectAsList()
+        if rows.isEmpty():
             raise ValueError("cannot infer payload schema from an all-NULL payload")
-        schema = spark.read.json(spark.sparkContext.parallelize(sample)).schema
+        inferred = jspark.read().json(jspark.createDataset(rows, strings)).schema()
+        schema = T.StructType.fromJson(json.loads(inferred.json()))
         if cache_key is not None:
             _INFERRED_SCHEMA_CACHE[cache_key] = schema
-    parsed = F.from_json(F.col("kafka_message"), schema)
-    roots = {kp.split(".")[0] for kp in keypaths}
-    missing = roots - set(schema.fieldNames())
+    missing = set(roots) - set(schema.fieldNames())
     if missing:
         mode = "declared payload-schema" if declared_schema else "inferred schema"
         raise ValueError(
@@ -208,10 +244,8 @@ def _attach_payload_struct(
             f"{mode} (fields: {sorted(schema.fieldNames())}); declare them "
             f"in `payload-schema` or fix the transform src path"
         )
-    out = env
-    for root in sorted(roots):
-        out = out.withColumn(root, parsed[root])
-    return out
+    parsed = T.StructType([f for f in schema.fields if f.name in roots])
+    return with_text_leaves(parsed, text_paths)
 
 
 def run_pipeline(
@@ -234,8 +268,8 @@ def run_pipeline(
     reference probes Oracle per batch; a JDBC read of
     ``spec.target.k6_filter.filter_table`` plays that role in production).
     ``existing`` is the sink's current content for the dedup anti-join;
-    when None and the sink is a readable parquet path, it is read from
-    there (first load → no dedup needed).
+    when None and the sink path holds parquet data, it is read from there
+    (no data yet = first load, no dedup needed; a read error raises).
 
     ``schema: avro`` sources decode Confluent-framed values through the
     pure-Python codec; the writer schema comes from ``avro-schema`` in
@@ -292,13 +326,12 @@ def run_pipeline(
             delta_watermark_epoch_ms,
         )
 
-        try:
-            sink_df = load_parquet(spark, sink.path)
-        except Exception:
-            sink_df = None  # first load — no watermark yet
-        if sink_df is not None:
+        # no sink data yet = first load, no watermark; a sink that is
+        # there but cannot be read raises
+        if HadoopFs(spark, sink.path).has_data(sink.path):
             wm = delta_watermark_epoch_ms(
-                sink_df, sink.delta.get("delta-column", "kafka_timestamp")
+                load_parquet(spark, sink.path),
+                sink.delta.get("delta-column", "kafka_timestamp"),
             )
             if wm is not None:
                 src = src.model_copy(update={"starting_timestamp_ms": wm})
@@ -307,22 +340,30 @@ def run_pipeline(
     kafka_df = build_kafka_frame(spark, spec, bootstrap_servers)
     mode = PayloadSchema(src.schema_type)
 
-    def build_env(
-        frame: DataFrame,
-        avro_schema_json: Optional[str],
-        avro_schemas_by_id: Optional[dict] = None,
-    ) -> DataFrame:
-        pe = payload_exprs(src, avro_schema_json, avro_schemas_by_id)
-        return with_envelope(
-            frame,
-            key_codec=src.key_decoder,
-            message_filters=src.message_filters,
-            canonical_message=pe.canonical,
-            schema_id=pe.schema_id,
-            hash_bytes=pe.hash_bytes,
-            filter_payload=pe.filter_payload,
-        )
+    # Everything read from the payload goes through ONE parse per row
+    # (_attach_payload_struct): transform keypath roots, allow-filter
+    # keys (JSON/Avro — string mode probes the raw value text) and a
+    # payload-keypath kode-6/7 key.
+    envelope_cols = set(ENVELOPE_COLUMNS) | (
+        {"kafka_schema_id"} if mode == PayloadSchema.AVRO else set()
+    )
+    roots = sorted({p.split(".")[0] for p in _payload_rule_sources(spec, envelope_cols)})
+    k6 = sink.k6_filter
+    if k6 is not None and k6_lookup is None:
+        raise ValueError("k6-filter configured but no k6_lookup provided")
+    k6_path = None
+    if k6 is not None and (
+        k6.col_keypath_separator in k6.col or k6.col not in envelope_cols
+    ):
+        k6_path = k6.col.split(k6.col_keypath_separator)
+    text_paths = [] if mode == PayloadSchema.STRING else [
+        [r.key] for r in src.message_filters or ()
+    ]
+    if k6_path:
+        text_paths.append(k6_path)
 
+    avro_ids: list[int] = []
+    avro_schemas: dict = {}
     if mode == PayloadSchema.AVRO and src.avro_schema is None:
         from dvh_airflow_kafka_spark.sources.kafka import confluent_schema_id
 
@@ -355,84 +396,92 @@ def run_pipeline(
                 "(value NULL or < 5 bytes) — cannot resolve a writer "
                 "schema for them"
             )
-        ids = sorted(int(s) for s in sids)
-        if not ids:
+        avro_ids = sorted(int(s) for s in sids)
+        if not avro_ids:
             raise ValueError(
                 "cannot resolve the Avro writer schema from an empty "
                 "source; declare `avro-schema` in the config"
             )
-        schemas = schema_registry.schemas_for_ids(ids)
-        if len(ids) > _AVRO_BRANCH_LIMIT:
+        avro_schemas = schema_registry.schemas_for_ids(avro_ids)
+
+    def envelope(payload_schema: Optional[T.StructType]) -> DataFrame:
+        # JSON/Avro allow-filters probe the canonical payload, which the
+        # struct parses; string mode keeps probing the raw value text.
+        struct_filters = payload_schema is not None and mode != PayloadSchema.STRING
+
+        def build_env(
+            frame: DataFrame,
+            avro_schema_json: Optional[str],
+            avro_schemas_by_id: Optional[dict] = None,
+        ) -> DataFrame:
+            pe = payload_exprs(src, avro_schema_json, avro_schemas_by_id)
+            return with_envelope(
+                frame,
+                key_codec=src.key_decoder,
+                message_filters=src.message_filters,
+                canonical_message=pe.canonical,
+                schema_id=pe.schema_id,
+                hash_bytes=pe.hash_bytes,
+                filter_payload=None if struct_filters else pe.filter_payload,
+                payload_schema=payload_schema,
+            )
+
+        if not avro_ids:
+            return build_env(kafka_df, src.avro_schema)
+        if len(avro_ids) > _AVRO_BRANCH_LIMIT:
             # Scale path: ONE scan, writer schema resolved per row inside
             # the Arrow batch (avro_codec.avro_decode_multi_to_json_udf).
             # Branching per id re-scans the source and unions N plans —
             # right for a handful of schema versions (each branch keeps
             # its own whole-stage span and a static decoder), wrong for a
             # topic carrying hundreds of ids.
-            env = build_env(kafka_df, None, avro_schemas_by_id=schemas)
-        else:
-            # Per-id decode branches unioned back together — the
-            # reference reads each message with its own writer schema
-            # (src/kafka_source.py:129-151); here each id becomes one
-            # filtered branch over the same scan, so mixed-schema topics
-            # decode in a single run.
-            env = build_env(
-                kafka_df.filter(confluent_schema_id(F.col("value")) == ids[0]),
-                schemas[ids[0]],
-            )
-            for sid in ids[1:]:
-                env = env.unionByName(
-                    build_env(
-                        kafka_df.filter(
-                            confluent_schema_id(F.col("value")) == sid
-                        ),
-                        schemas[sid],
-                    )
-                )
-    else:
-        env = build_env(kafka_df, src.avro_schema)
-    # Counters ride the sink's job as an Observation on the envelope node
-    # — no second pass over the source (A2, operators/summary.py). Only
-    # worth attaching when run_pipeline itself executes the plan: for the
-    # memory sink the frame goes back to the caller lazily, and a
-    # CollectMetrics node would split the scan's whole-stage-codegen span
-    # in two on every downstream use; its lazy summary counts the
-    # envelope directly instead.
-    sink_executes = SinkKind(sink.type) != SinkKind.MEMORY
-    obs = None
-    if sink_executes:
-        env, obs = observe_summary(env)
+            return build_env(kafka_df, None, avro_schemas_by_id=avro_schemas)
+        # Per-id decode branches unioned back together — the reference
+        # reads each message with its own writer schema
+        # (src/kafka_source.py:129-151); here each id becomes one
+        # filtered branch over the same scan, so mixed-schema topics
+        # decode in a single run.
+        from dvh_airflow_kafka_spark.sources.kafka import confluent_schema_id
 
-    # P4/J2 privacy scrub happens sink-side BEFORE transform (reference
-    # src/oracle_target.py:88-95) — the transform may rename/drop the id.
-    if sink.k6_filter is not None:
-        if k6_lookup is None:
-            raise ValueError("k6-filter configured but no k6_lookup provided")
-        k6 = sink.k6_filter
-        sep = k6.col_keypath_separator
-        person = (
-            F.get_json_object(
-                F.col("kafka_message"), "$." + ".".join(k6.col.split(sep))
+        branches = [
+            build_env(
+                kafka_df.filter(confluent_schema_id(F.col("value")) == sid),
+                avro_schemas[sid],
             )
-            if sep in k6.col or k6.col not in env.columns
-            else F.col(k6.col)
-        )
-        env = scrub_flagged_persons(
+            for sid in avro_ids
+        ]
+        env = branches[0]
+        for branch in branches[1:]:
+            env = env.unionByName(branch)
+        return env
+
+    def scrub(env: DataFrame, payload_schema: Optional[T.StructType]) -> DataFrame:
+        # P4/J2 privacy scrub happens sink-side BEFORE transform
+        # (reference src/oracle_target.py:88-95) — the transform may
+        # rename/drop the id. It NULLs the parsed struct with the message.
+        if k6 is None:
+            return env
+        return scrub_flagged_persons(
             env,
             k6_lookup,
-            person_id=person,
+            person_id=payload_text(payload_schema, k6_path, F.col("kafka_message"))
+            if k6_path
+            else F.col(k6.col),
             event_ts=F.timestamp_millis(F.col(k6.timestamp))
             if k6.timestamp == "kafka_timestamp"
             else F.col(k6.timestamp),
+            payload_cols=("kafka_message",)
+            + ((PAYLOAD_COL,) if payload_schema is not None else ()),
             lookup_id_col=k6.filter_col,
         )
 
-    payload_srcs = _payload_rule_sources(spec, set(env.columns))
-    if payload_srcs:
-        env = _attach_payload_struct(
+    payload_schema = None
+    if roots or text_paths:
+        payload_schema = _attach_payload_struct(
             spark,
-            env,
-            payload_srcs,
+            lambda probe: scrub(envelope(probe), probe),
+            roots,
+            text_paths,
             declared_schema=src.payload_schema,
             cache_key=(
                 src.path,
@@ -447,16 +496,38 @@ def run_pipeline(
             else None,
         )
 
-    out = Transform(spec.transform, batch_time=batch_time).apply(env)
+    env = envelope(payload_schema)
+    # Counters ride the sink's job as an Observation on the envelope node
+    # — no second pass over the source (A2, operators/summary.py). The
+    # payload-schema sample above ran on a frame without it, so the
+    # counters read the sink's job only. Only worth attaching when
+    # run_pipeline itself executes the plan: for the memory sink the
+    # frame goes back to the caller lazily, and a CollectMetrics node
+    # would split the scan's whole-stage-codegen span in two on every
+    # downstream use; its lazy summary counts the envelope directly
+    # instead.
+    sink_executes = SinkKind(sink.type) != SinkKind.MEMORY
+    obs = None
+    if sink_executes:
+        env, obs = observe_summary(env)
+
+    out = scrub(env, payload_schema)
+    if payload_schema is not None:
+        # transform keypaths address payload roots as top-level columns
+        out = out.select(
+            *[c for c in out.columns if c != PAYLOAD_COL],
+            *[F.col(PAYLOAD_COL)[r].alias(r) for r in roots],
+        )
+    out = Transform(spec.transform, batch_time=batch_time).apply(out)
 
     # J1 dedup-on-insert (reference src/oracle_target.py:97-104).
     dedup_keys = sink.skip_duplicates_with or []
     if dedup_keys:
         if existing is None and SinkKind(sink.type) == SinkKind.PARQUET and sink.path:
-            try:
+            # no sink data yet = first load, nothing to dedup against;
+            # a sink that is there but cannot be read raises
+            if HadoopFs(spark, sink.path).has_data(sink.path):
                 existing = load_parquet(spark, sink.path)
-            except Exception:
-                existing = None  # first load — nothing to dedup against
         # no forced broadcast — `existing` is the sink's full key set,
         # unbounded over time; AQE broadcasts it dynamically while small
         out = dedup_against_existing(

@@ -9,19 +9,55 @@ offset timestamp``. This module turns it into the reference's envelope
     kafka_topic, kafka_hash (sha256 of raw value), kafka_message
     (canonical JSON of the filtered payload).
 
-All of it is a single narrow projection: no UDFs, no shuffle — at 100 TB
-this fuses with the scan into one codegen stage, and the sha256 runs
+All of it is narrow projections: no UDFs, no shuffle — at 100 TB this
+fuses with the scan into one codegen stage, and the sha256 runs
 vectorized in the JVM.
+
+One parse per payload: given a ``payload_schema``, ``with_envelope``
+parses the canonical message ONCE into the ``PAYLOAD_COL`` struct, in a
+projection of its own, and the allow-filter reads its keys from that
+struct. The runner reads the kode-6/7 person key and the transform
+keypaths from the same struct, so every reader of a row sees the same
+parse (the reference's single ``json.loads``, src/kafka_source.py:110).
+:func:`payload_text` gives a keypath's text exactly as
+``get_json_object`` would; duplicate keys are the one difference — the
+parse is last-wins, like ``json.loads``.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dvh_airflow_kafka_spark.config import AllowRule, KeyCodec
+
+ENVELOPE_COLUMNS = frozenset(
+    {
+        "kafka_key",
+        "kafka_timestamp",
+        "kafka_offset",
+        "kafka_partition",
+        "kafka_topic",
+        "kafka_hash",
+        "kafka_message",
+    }
+)
+# The parsed payload struct; NULL wherever ``kafka_message`` is NULL.
+PAYLOAD_COL = "__payload"
+
+# Leaf types whose string cast renders a JSON value exactly as
+# get_json_object does. Fractional and datetime casts do not ("1" read
+# as DOUBLE casts to "1.0"), so those leaves read the text directly.
+_EXACT_CAST_TYPES = (
+    T.BooleanType,
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+)
 
 
 def decode_key(key: Column, codec: KeyCodec | str = KeyCodec.UTF_8) -> Column:
@@ -56,18 +92,75 @@ def json_quote(text: Column) -> Column:
     return F.when(text.isNull(), F.lit(None)).otherwise(quoted)
 
 
+def with_text_leaves(
+    schema: T.StructType, paths: Sequence[Sequence[str]]
+) -> T.StructType:
+    """``schema`` plus a STRING leaf for every keypath in ``paths`` it
+    lacks, nested through struct fields. A path that runs into a
+    non-struct field is left as it is; :func:`payload_text` reads that
+    one from the text."""
+    for parts in paths:
+        schema = _with_text_leaf(schema, list(parts))
+    return schema
+
+
+def _with_text_leaf(schema: T.StructType, parts: list[str]) -> T.StructType:
+    head, rest = parts[0], parts[1:]
+    names = schema.fieldNames()
+    if head not in names:
+        leaf = _with_text_leaf(T.StructType(), rest) if rest else T.StringType()
+        return T.StructType(schema.fields + [T.StructField(head, leaf, True)])
+    field = schema[head]
+    if not rest or not isinstance(field.dataType, T.StructType):
+        return schema
+    nested = T.StructField(head, _with_text_leaf(field.dataType, rest), True)
+    return T.StructType([nested if f.name == head else f for f in schema.fields])
+
+
+def payload_text(
+    schema: T.StructType, parts: Sequence[str], raw: Column
+) -> Column:
+    """The JSON text at keypath ``parts``, as ``get_json_object(raw,
+    "$.a.b")`` returns it, read from the ``PAYLOAD_COL`` struct parsed
+    with ``schema`` from ``raw``:
+
+    - a STRING leaf is used as is: the parse renders a non-string value
+      as its JSON text, exactly like ``get_json_object``;
+    - an integral or boolean leaf is cast to string, and
+      ``get_json_object`` runs only on rows where the typed value is NULL
+      (a value of another JSON type, or an out-of-range number);
+    - any other leaf, or a path through a non-struct field, reads
+      ``get_json_object(raw, ...)``: the struct does not hold its text.
+    """
+    path = "$." + ".".join(parts)
+    col, dtype = F.col(PAYLOAD_COL), schema
+    for part in parts:
+        if not isinstance(dtype, T.StructType) or part not in dtype.fieldNames():
+            return F.get_json_object(raw, path)
+        col, dtype = col[part], dtype[part].dataType
+    if isinstance(dtype, T.StringType):
+        return col
+    if isinstance(dtype, _EXACT_CAST_TYPES):
+        return F.coalesce(col.cast("string"), F.get_json_object(raw, path))
+    return F.get_json_object(raw, path)
+
+
 def allow_filter_condition(
-    payload: Column, rules: Sequence[AllowRule], typed: bool = False
+    payload: Column,
+    rules: Sequence[AllowRule],
+    text: Optional[Callable[[str], Column]] = None,
 ) -> Column:
     """P3 message allow-filter (reference src/kafka_source.py:207-218):
     OR over ``{key, allowed_value}`` equality tests on *top-level* payload
-    fields. Returns the keep-condition; the caller NULLs ``kafka_message``
-    when it is false — rows are never dropped."""
+    fields. ``text(key)`` reads a key's JSON text; by default
+    ``get_json_object`` over the ``payload`` string. Returns the
+    keep-condition; the caller NULLs ``kafka_message`` when it is false —
+    rows are never dropped."""
+    read = text or (lambda key: F.get_json_object(payload, f"$.{key}"))
     conds = []
     for rule in rules:
-        field = payload[rule.key] if typed else F.get_json_object(payload, f"$.{rule.key}")
-        value = rule.allowed_value if typed else str(rule.allowed_value)
-        conds.append(field.isNotNull() & (field == F.lit(value)))
+        field = read(rule.key)
+        conds.append(field.isNotNull() & (field == F.lit(str(rule.allowed_value))))
     out = conds[0]
     for c in conds[1:]:
         out = out | c
@@ -83,6 +176,7 @@ def with_envelope(
     hash_bytes: Optional[Column] = None,
     filter_payload: Optional[Column] = None,
     passthrough: Sequence[str] = (),
+    payload_schema: Optional[T.StructType] = None,
 ) -> DataFrame:
     """S3/S5 + F9/F10: standard Kafka columns -> reference envelope.
 
@@ -100,6 +194,12 @@ def with_envelope(
       src/kafka_source.py:207-218 — pass the decoded JSON for Avro, the
       filtered payload when drop/flag ops ran); defaults to the raw
       value string.
+    - ``payload_schema`` appends ``PAYLOAD_COL``: the canonical message
+      parsed once with that schema, in its own projection, so the
+      optimizer cannot inline the parse into each reader. Without a
+      ``filter_payload`` the allow-filter then reads its keys from this
+      struct (the schema needs them: :func:`with_text_leaves`), and the
+      struct is NULLed wherever the message is.
     - ``schema_id`` (Avro mode) appends ``kafka_schema_id`` — the
       reference adds it to every Avro row (src/kafka_source.py:149);
       pass ``kafka.confluent_schema_id(F.col("value"))``.
@@ -108,15 +208,11 @@ def with_envelope(
       projections) need them without a re-join; still one narrow
       projection.
     """
-    emitted = {
-        "kafka_key",
-        "kafka_timestamp",
-        "kafka_offset",
-        "kafka_partition",
-        "kafka_topic",
-        "kafka_hash",
-        "kafka_message",
-    } | ({"kafka_schema_id"} if schema_id is not None else set())
+    emitted = set(ENVELOPE_COLUMNS) | (
+        {"kafka_schema_id"} if schema_id is not None else set()
+    )
+    if payload_schema is not None:
+        emitted.add(PAYLOAD_COL)
     clash = sorted(emitted & set(passthrough))
     if clash:
         raise ValueError(
@@ -127,7 +223,10 @@ def with_envelope(
     message = (
         canonical_message if canonical_message is not None else F.col("value").cast("string")
     )
-    if message_filters:
+    filter_struct = (
+        bool(message_filters) and payload_schema is not None and filter_payload is None
+    )
+    if message_filters and not filter_struct:
         probe = (
             filter_payload
             if filter_payload is not None
@@ -150,7 +249,25 @@ def with_envelope(
     if schema_id is not None:
         cols.append(schema_id.cast("long").alias("kafka_schema_id"))
     cols.extend(F.col(c) for c in passthrough)
-    return kafka_df.select(*cols)
+    env = kafka_df.select(*cols)
+    if payload_schema is None:
+        return env
+    env = env.withColumn(
+        PAYLOAD_COL, F.from_json(F.col("kafka_message"), payload_schema)
+    )
+    if not filter_struct:
+        return env
+    keep = allow_filter_condition(
+        F.col("kafka_message"),
+        message_filters,
+        text=lambda key: payload_text(payload_schema, [key], F.col("kafka_message")),
+    )
+    return env.withColumns(
+        {
+            c: F.when(keep, F.col(c)).otherwise(F.lit(None))
+            for c in ("kafka_message", PAYLOAD_COL)
+        }
+    )
 
 
 def events_as_kafka_frame(

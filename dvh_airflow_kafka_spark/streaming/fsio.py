@@ -71,6 +71,15 @@ class HadoopFs:
             self._fs.getFileStatus(p).isDirectory()
         )
 
+    def has_data(self, path: str) -> bool:
+        """Whether ``path`` holds data yet: it exists and lists an entry
+        that is not hidden (``_``/``.``-prefixed, such as the
+        ``_temporary`` a failed first write leaves). This is the one
+        test for "first load": callers read the path only when it holds
+        True and let every read error raise — an unreadable sink taken
+        for an empty one would let dedup-on-insert admit duplicates."""
+        return any(not n.startswith(("_", ".")) for n in self.list_names(path))
+
     # -- mutation --------------------------------------------------------
     def mkdirs(self, path: str) -> None:
         self._fs.mkdirs(self._p(path))

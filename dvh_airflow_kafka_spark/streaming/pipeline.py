@@ -48,6 +48,7 @@ from dvh_airflow_kafka_spark.sources.envelope import (
     events_as_kafka_frame,
     with_envelope,
 )
+from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
 from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
 KAFKA_COLUMNS = {"key", "value", "topic", "partition", "offset", "timestamp"}
@@ -209,10 +210,11 @@ def run_streaming_pipeline(
                 # the sink without reaching the sidecar append — probe
                 # the sink itself for this one batch (rare,
                 # crash-recovery only).
-                try:
-                    existing = spark.read.parquet(sink_path).select(*dedup_keys)
-                except Exception:
-                    existing = None  # sink does not exist yet
+                existing = (
+                    spark.read.parquet(sink_path).select(*dedup_keys)
+                    if HadoopFs(spark, sink_path).has_data(sink_path)
+                    else None  # sink has no data yet; read errors raise
+                )
             else:
                 existing = key_index.probe(out)  # bucket-pruned, keys-only
             # no forced broadcast: the existing-keys side is unbounded

@@ -7,12 +7,18 @@ import struct
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dvh_airflow_kafka_spark.config import AllowRule
 from dvh_airflow_kafka_spark.io import load_table
 from dvh_airflow_kafka_spark.operators import dedup_against_existing, scrub_flagged_persons
 from dvh_airflow_kafka_spark.sources import events_as_kafka_frame, with_envelope
-from dvh_airflow_kafka_spark.sources.envelope import decode_key
+from dvh_airflow_kafka_spark.sources.envelope import (
+    PAYLOAD_COL,
+    decode_key,
+    payload_text,
+    with_text_leaves,
+)
 
 
 @pytest.fixture(scope="module")
@@ -80,6 +86,85 @@ def test_rerun_writes_nothing_new(spark, sf_dir):
     half = events.filter(F.col("event_id") % 2 == 0)
     resume = dedup_against_existing(events, existing=half, keys=["event_id"])
     assert resume.count() == events.count() - half.count()
+
+
+def test_dedup_order_does_not_change_rows(spark):
+    """J1: anti-joining against the sink before collapsing within-batch
+    duplicates admits the same rows as collapsing first — both decisions
+    depend on the key alone. Duplicates here are whole-row redeliveries,
+    some of them of keys already in the sink; one key is NULL."""
+    rows = [(k, f"m{k}") for k in range(40)] * 3 + [(None, "m-null")] * 2
+    batch = spark.createDataFrame(rows, "k int, m string")
+    existing = spark.createDataFrame([(k,) for k in range(0, 40, 3)], "k int")
+    anti_first = dedup_against_existing(batch, existing, ["k"])
+    dedup_first = batch.dropDuplicates(["k"]).join(existing, on=["k"], how="left_anti")
+    got = sorted(anti_first.collect(), key=str)
+    assert got == sorted(dedup_first.collect(), key=str)
+    assert len(got) == 40 - len(range(0, 40, 3)) + 1
+
+
+# One parse per payload: the struct's text of a keypath equals
+# get_json_object's, except for duplicate keys (last-wins, like json.loads).
+_TEXT_CASES = {
+    "int": '{"k":1}',
+    "digit_string": '{"k":"1"}',
+    "float": '{"k":1.0}',
+    "exponent": '{"k":1e0}',
+    "negative_zero": '{"k":-0}',
+    "boolean": '{"k":true}',
+    "array": '{"k":[1, {"b" : 2}]}',
+    "object": '{"k":{"a": 1}}',
+    "escaped_string": '{"k":"a\\"b\\u00e5"}',
+    "json_null": '{"k":null}',
+    "malformed": '{"k":1',
+    "twenty_digit_int": '{"k":12345678901234567890}',
+    "whitespace": '{ "k" :  1 , "z": 2 }',
+    "top_level_array": '[{"k":1}]',
+    "empty_string": "",
+    "missing_key": '{"x":1}',
+    "top_level_string": '"k"',
+    "duplicate_key": '{"k":1,"k":2}',
+}
+
+
+@pytest.fixture(scope="module")
+def payload_texts(spark):
+    """Per case: get_json_object's text and the struct's text of ``k``
+    and of ``p.k`` (the case nested under ``p``), each read from a
+    STRING leaf and from a BIGINT leaf."""
+    names = list(_TEXT_CASES)
+    raws = [_TEXT_CASES[n] for n in names]
+    nested = ['{"p":' + (raw or '""') + "}" for raw in raws]
+    df = spark.createDataFrame(list(zip(raws, nested)), "raw string, nested string")
+    reads = []
+    for col, parts, typed in (
+        ("raw", ["k"], "k BIGINT"),
+        ("nested", ["p", "k"], "p STRUCT<k: BIGINT>"),
+    ):
+        path = "$." + ".".join(parts)
+        for schema in (
+            with_text_leaves(T.StructType(), [parts]),
+            T.StructType.fromDDL(typed),
+        ):
+            rows = (
+                df.withColumn(PAYLOAD_COL, F.from_json(col, schema))
+                .select(
+                    F.get_json_object(col, path).alias("expect"),
+                    payload_text(schema, parts, F.col(col)).alias("got"),
+                )
+                .collect()
+            )
+            reads.append(rows)
+    return {n: [rows[i] for rows in reads] for i, n in enumerate(names)}
+
+
+@pytest.mark.parametrize("case", list(_TEXT_CASES))
+def test_struct_text_equals_get_json_object(payload_texts, case):
+    for r in payload_texts[case]:
+        if case == "duplicate_key":  # the parse keeps the last value, like json.loads
+            assert r.got == "2" and r.expect == "1"
+        else:
+            assert r.got == r.expect, (_TEXT_CASES[case], r)
 
 
 def test_k6_scrub_nulls_payload_only_for_flagged_interval(spark, sf_dir):

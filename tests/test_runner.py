@@ -853,3 +853,230 @@ transform:
     for off, uid in expect.items():
         i = off % n_ids
         assert json.loads(by_off[off][2]) == {f"n{i}": uid}
+
+
+# --------------------------------------------------------------------------
+# One parse per payload: the allow-filter, the kode-6/7 key and the
+# transform keypaths all read one from_json struct
+# --------------------------------------------------------------------------
+
+
+def _person_log(spark, path: str, n: int) -> str:
+    """An events-shaped log of ``n`` rows whose payload is
+    ``{"k": 1|2|3, "person": {"id": <user_id>}, "kind": "view"}``."""
+    spark.range(n).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds(F.lit(1717200000) + F.col("id")).alias("ts"),
+        (F.col("id") % 50).alias("user_id"),
+        F.lit("view").alias("event_type"),
+        F.lit(1.0).alias("value"),
+        F.format_string(
+            '{"k":%d,"person":{"id":%d},"kind":"view"}',
+            F.col("id") % 3 + 1,
+            F.col("id") % 50,
+        ).alias("props"),
+    ).write.parquet(path)
+    return path
+
+
+def _person_yaml(log: str, target: str, extra: str = "") -> str:
+    return f"""
+source:
+  type: parquet
+  topic: events
+  schema: json
+  path: "{log}"
+  message-filters:
+    - {{key: k, allowed_value: 1}}
+    - {{key: k, allowed_value: 2}}
+{extra}target:
+{target}
+  k6-filter:
+    filter-table: skjerming
+    filter-col: off_id
+    col: person.id
+    timestamp: kafka_timestamp
+transform:
+  - {{src: kafka_offset, dst: kafka_offset}}
+  - {{src: kafka_message, dst: kafka_message}}
+  - {{src: person.id, dst: person_id}}
+  - {{src: kind, dst: kind}}
+"""
+
+
+def _k6_lookup(spark, ids):
+    return spark.createDataFrame(
+        [(str(i), "1900-01-01", "9999-12-31", 6) for i in ids],
+        "off_id string, gyldig_fra_dato string, gyldig_til_dato string, skjermet_kode int",
+    )
+
+
+def test_inferred_schema_run_counts_every_row_read(spark, tmp_path):
+    """The payload-schema sample runs before the counted plan is built,
+    so an inferred-schema parquet-sink run over more than the sample's
+    1000 rows reports every row read, not the sample's row count."""
+    n = 2500
+    log = _person_log(spark, str(tmp_path / "log"), n)
+    sink = str(tmp_path / "sink")
+    result = run_pipeline(
+        spark,
+        _person_yaml(
+            log,
+            f'  type: parquet\n  path: "{sink}"\n'
+            "  skip-duplicates-with: [kafka_offset]",
+        ),
+        k6_lookup=_k6_lookup(spark, [3]),
+    )
+    s = result.summary
+    assert s.event_count == s.data_count == s.non_empty_count == n
+    assert s.written_to_db_count == n
+    assert load_parquet(spark, sink).count() == n
+
+
+def test_assign_plan_parses_each_payload_once(spark, tmp_path):
+    """Plan guard: allow-filter + k6-filter on a payload keypath +
+    payload keypath rules optimize to exactly one from_json, and
+    get_json_object appears only as the NULL fallback of a typed leaf."""
+    import re
+
+    log = _person_log(spark, str(tmp_path / "log"), 200)
+    result = run_pipeline(
+        spark,
+        _person_yaml(log, "  type: memory\n  table: t_one_parse"),
+        k6_lookup=_k6_lookup(spark, [3]),
+    )
+    plan = result.dataframe._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bfrom_json\(", plan)) == 1, plan
+    fallbacks = re.findall(r"coalesce\(cast\(\S+ as string\), get_json_object\(", plan)
+    assert len(re.findall(r"get_json_object\(", plan)) == len(fallbacks), plan
+    rows = result.dataframe.collect()
+    assert len(rows) == 200
+    for r in rows:
+        kept = r.kafka_offset % 3 != 2 and r.kafka_offset % 50 != 3
+        assert (r.kafka_message is not None) == kept
+        assert r.person_id == (r.kafka_offset % 50 if kept else None)
+        assert r.kind == ("view" if kept else None)
+
+
+@pytest.mark.parametrize("declared", [False, True])
+def test_duplicate_key_person_is_scrubbed(spark, tmp_path, declared):
+    """Privacy regression: with a duplicated person id the kode-6/7 probe
+    and the transform read the same (last) value, so a flagged person is
+    never written unscrubbed under the id the probe did not check."""
+    log = str(tmp_path / "log")
+    payloads = [
+        '{"k":1,"person":{"id":7,"id":9},"kind":"view"}',
+        '{"k":1,"person":{"id":7},"kind":"view"}',
+    ]
+    spark.createDataFrame(
+        [(i, i, p) for i, p in enumerate(payloads)],
+        "event_id long, user_id long, props string",
+    ).select(
+        "event_id",
+        F.timestamp_seconds(F.lit(1717200000) + F.col("event_id")).alias("ts"),
+        "user_id",
+        F.lit("view").alias("event_type"),
+        F.lit(1.0).alias("value"),
+        "props",
+    ).write.parquet(log)
+    sink = str(tmp_path / "sink")
+    extra = '  payload-schema: "k INT, person STRUCT<id: BIGINT>, kind STRING"\n'
+    run_pipeline(
+        spark,
+        _person_yaml(
+            log,
+            f'  type: parquet\n  path: "{sink}"\n'
+            "  skip-duplicates-with: [kafka_offset]",
+            extra if declared else "",
+        ),
+        k6_lookup=_k6_lookup(spark, [9]),
+    )
+    rows = {r.kafka_offset: r for r in load_parquet(spark, sink).collect()}
+    assert rows[0].kafka_message is None and rows[0].person_id is None
+    assert rows[1].kafka_message is not None and rows[1].person_id == 7
+
+
+def test_string_mode_allow_filter_probes_raw_value(spark, sf_dir):
+    """schema: string stores JSON string literals, so a payload keypath
+    never resolves there; a k6 keypath still builds the payload struct,
+    and the allow-filter must keep probing the raw value text."""
+    yaml_text = f"""
+source:
+  type: parquet
+  topic: events
+  schema: string
+  path: "{os.path.join(sf_dir, 'events.parquet')}"
+  message-filters:
+    - {{key: k, allowed_value: 87}}
+target:
+  type: memory
+  table: t_string_mode
+  k6-filter:
+    filter-table: skjerming
+    filter-col: off_id
+    col: k
+    timestamp: kafka_timestamp
+transform:
+  - {{src: kafka_offset, dst: kafka_offset}}
+  - {{src: kafka_message, dst: kafka_message}}
+"""
+    result = run_pipeline(spark, yaml_text, k6_lookup=_k6_lookup(spark, [87]))
+    got = {r.kafka_offset: r.kafka_message for r in result.dataframe.collect()}
+    events = load_table(spark, sf_dir, "events").collect()
+    assert len(got) == len(events)
+    kept = 0
+    for ev in events:
+        if json.loads(ev.props).get("k") == 87:
+            kept += 1
+            assert got[ev.event_id] == json.dumps(ev.props, ensure_ascii=False)
+        else:
+            assert got[ev.event_id] is None
+    assert kept > 0
+
+
+# --------------------------------------------------------------------------
+# A sink that exists but cannot be read is never a "first load"
+# --------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("delta", [False, True])
+def test_unreadable_sink_raises(spark, sf_dir, tmp_path, delta):
+    """The dedup read (and the delta-watermark probe) must raise on a
+    sink that is there but unreadable: taking it for a missing sink would
+    re-append every row."""
+    sink = str(tmp_path / "sink")
+    yaml_text = _events_yaml(
+        sf_dir,
+        f"""  type: parquet
+  path: "{sink}"
+  skip-duplicates-with: [kafka_offset]"""
+        + (
+            "\n  delta:\n    delta-table: sink\n    delta-column: kafka_timestamp"
+            if delta
+            else ""
+        ),
+    )
+    run_pipeline(spark, yaml_text)
+    n = load_parquet(spark, sink).count()
+    # sorts before Spark's part files, so the footer probe meets it first
+    corrupt = os.path.join(sink, "part-0000-corrupt.parquet")
+    with open(corrupt, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_pipeline(spark, yaml_text)
+    os.remove(corrupt)
+    assert load_parquet(spark, sink).count() == n  # nothing admitted
+
+
+def test_sink_without_data_is_first_load(spark, tmp_path):
+    """A missing sink, or one holding only hidden entries (a failed first
+    write's ``_temporary``), has no data yet."""
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+
+    sink = str(tmp_path / "sink")
+    fs = HadoopFs(spark, sink)
+    assert not fs.has_data(sink)
+    os.makedirs(os.path.join(sink, "_temporary"))
+    assert not fs.has_data(sink)
+    open(os.path.join(sink, "part-0.parquet"), "wb").close()
+    assert fs.has_data(sink)
