@@ -49,9 +49,11 @@ ENVELOPE_COLUMNS = frozenset(
 PAYLOAD_COL = "__payload"
 
 # Leaf types whose string cast renders a JSON value exactly as
-# get_json_object does. Fractional and datetime casts do not ("1" read
-# as DOUBLE casts to "1.0"), so those leaves read the text directly.
+# get_json_object does (a STRING leaf holds the JSON text of any value).
+# Fractional and datetime casts do not ("1" read as DOUBLE casts to
+# "1.0"), so those leaves read the text directly.
 _EXACT_CAST_TYPES = (
+    T.StringType,
     T.BooleanType,
     T.ByteType,
     T.ShortType,
@@ -124,11 +126,14 @@ def payload_text(
     "$.a.b")`` returns it, read from the ``PAYLOAD_COL`` struct parsed
     with ``schema`` from ``raw``:
 
-    - a STRING leaf is used as is: the parse renders a non-string value
+    - a STRING leaf holds the text: the parse renders a non-string value
       as its JSON text, exactly like ``get_json_object``;
-    - an integral or boolean leaf is cast to string, and
-      ``get_json_object`` runs only on rows where the typed value is NULL
-      (a value of another JSON type, or an out-of-range number);
+    - an integral or boolean leaf is cast to string;
+    - either one falls back to ``get_json_object`` on rows where it is
+      NULL: a typed leaf holding a value of another JSON type or an
+      out-of-range number, or any leaf whose enclosing struct the parse
+      NULLed because a sibling field failed to convert (PERMISSIVE mode
+      without ``spark.sql.json.enablePartialResults``);
     - any other leaf, or a path through a non-struct field, reads
       ``get_json_object(raw, ...)``: the struct does not hold its text.
     """
@@ -138,8 +143,6 @@ def payload_text(
         if not isinstance(dtype, T.StructType) or part not in dtype.fieldNames():
             return F.get_json_object(raw, path)
         col, dtype = col[part], dtype[part].dataType
-    if isinstance(dtype, T.StringType):
-        return col
     if isinstance(dtype, _EXACT_CAST_TYPES):
         return F.coalesce(col.cast("string"), F.get_json_object(raw, path))
     return F.get_json_object(raw, path)

@@ -124,6 +124,9 @@ _TEXT_CASES = {
     "missing_key": '{"x":1}',
     "top_level_string": '"k"',
     "duplicate_key": '{"k":1,"k":2}',
+    # the parse cannot convert the sibling "x" to BIGINT, so without
+    # partial results it NULLs the whole enclosing struct
+    "failing_sibling": '{"k":1,"x":"a"}',
 }
 
 
@@ -131,30 +134,39 @@ _TEXT_CASES = {
 def payload_texts(spark):
     """Per case: get_json_object's text and the struct's text of ``k``
     and of ``p.k`` (the case nested under ``p``), each read from a
-    STRING leaf and from a BIGINT leaf."""
+    STRING leaf alone, a STRING leaf beside a BIGINT sibling ``x``, and
+    a BIGINT leaf — with JSON partial results on and off."""
     names = list(_TEXT_CASES)
     raws = [_TEXT_CASES[n] for n in names]
     nested = ['{"p":' + (raw or '""') + "}" for raw in raws]
     df = spark.createDataFrame(list(zip(raws, nested)), "raw string, nested string")
     reads = []
-    for col, parts, typed in (
-        ("raw", ["k"], "k BIGINT"),
-        ("nested", ["p", "k"], "p STRUCT<k: BIGINT>"),
-    ):
-        path = "$." + ".".join(parts)
-        for schema in (
-            with_text_leaves(T.StructType(), [parts]),
-            T.StructType.fromDDL(typed),
-        ):
-            rows = (
-                df.withColumn(PAYLOAD_COL, F.from_json(col, schema))
-                .select(
-                    F.get_json_object(col, path).alias("expect"),
-                    payload_text(schema, parts, F.col(col)).alias("got"),
-                )
-                .collect()
-            )
-            reads.append(rows)
+    conf = "spark.sql.json.enablePartialResults"
+    before = spark.conf.get(conf)
+    try:
+        for partial in ("true", "false"):
+            spark.conf.set(conf, partial)
+            for col, parts, sibling, typed in (
+                ("raw", ["k"], "x BIGINT", "k BIGINT"),
+                ("nested", ["p", "k"], "p STRUCT<x: BIGINT>", "p STRUCT<k: BIGINT>"),
+            ):
+                path = "$." + ".".join(parts)
+                for schema in (
+                    with_text_leaves(T.StructType(), [parts]),
+                    with_text_leaves(T.StructType.fromDDL(sibling), [parts]),
+                    T.StructType.fromDDL(typed),
+                ):
+                    rows = (
+                        df.withColumn(PAYLOAD_COL, F.from_json(col, schema))
+                        .select(
+                            F.get_json_object(col, path).alias("expect"),
+                            payload_text(schema, parts, F.col(col)).alias("got"),
+                        )
+                        .collect()
+                    )
+                    reads.append(rows)
+    finally:
+        spark.conf.set(conf, before)
     return {n: [rows[i] for rows in reads] for i, n in enumerate(names)}
 
 

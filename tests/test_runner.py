@@ -936,7 +936,7 @@ def test_inferred_schema_run_counts_every_row_read(spark, tmp_path):
 def test_assign_plan_parses_each_payload_once(spark, tmp_path):
     """Plan guard: allow-filter + k6-filter on a payload keypath +
     payload keypath rules optimize to exactly one from_json, and
-    get_json_object appears only as the NULL fallback of a typed leaf."""
+    get_json_object appears only as the NULL fallback of a struct leaf."""
     import re
 
     log = _person_log(spark, str(tmp_path / "log"), 200)
@@ -947,7 +947,9 @@ def test_assign_plan_parses_each_payload_once(spark, tmp_path):
     )
     plan = result.dataframe._jdf.queryExecution().optimizedPlan().toString()
     assert len(re.findall(r"\bfrom_json\(", plan)) == 1, plan
-    fallbacks = re.findall(r"coalesce\(cast\(\S+ as string\), get_json_object\(", plan)
+    fallbacks = re.findall(
+        r"coalesce\((?:cast\()?[^\s,()]+(?: as string\))?, get_json_object\(", plan
+    )
     assert len(re.findall(r"get_json_object\(", plan)) == len(fallbacks), plan
     rows = result.dataframe.collect()
     assert len(rows) == 200
@@ -958,16 +960,10 @@ def test_assign_plan_parses_each_payload_once(spark, tmp_path):
         assert r.kind == ("view" if kept else None)
 
 
-@pytest.mark.parametrize("declared", [False, True])
-def test_duplicate_key_person_is_scrubbed(spark, tmp_path, declared):
-    """Privacy regression: with a duplicated person id the kode-6/7 probe
-    and the transform read the same (last) value, so a flagged person is
-    never written unscrubbed under the id the probe did not check."""
+def _run_payloads(spark, tmp_path, payloads, flagged, payload_schema=None):
+    """Run the k6 + allow-filter person pipeline over ``payloads`` (event
+    ids 0, 1, ...) into a parquet sink; the sink's rows by offset."""
     log = str(tmp_path / "log")
-    payloads = [
-        '{"k":1,"person":{"id":7,"id":9},"kind":"view"}',
-        '{"k":1,"person":{"id":7},"kind":"view"}',
-    ]
     spark.createDataFrame(
         [(i, i, p) for i, p in enumerate(payloads)],
         "event_id long, user_id long, props string",
@@ -980,20 +976,67 @@ def test_duplicate_key_person_is_scrubbed(spark, tmp_path, declared):
         "props",
     ).write.parquet(log)
     sink = str(tmp_path / "sink")
-    extra = '  payload-schema: "k INT, person STRUCT<id: BIGINT>, kind STRING"\n'
+    extra = f'  payload-schema: "{payload_schema}"\n' if payload_schema else ""
     run_pipeline(
         spark,
         _person_yaml(
             log,
             f'  type: parquet\n  path: "{sink}"\n'
             "  skip-duplicates-with: [kafka_offset]",
-            extra if declared else "",
+            extra,
         ),
-        k6_lookup=_k6_lookup(spark, [9]),
+        k6_lookup=_k6_lookup(spark, flagged),
     )
-    rows = {r.kafka_offset: r for r in load_parquet(spark, sink).collect()}
+    return {r.kafka_offset: r for r in load_parquet(spark, sink).collect()}
+
+
+@pytest.mark.parametrize("declared", [False, True])
+def test_duplicate_key_person_is_scrubbed(spark, tmp_path, declared):
+    """Privacy regression: with a duplicated person id the kode-6/7 probe
+    and the transform read the same (last) value, so a flagged person is
+    never written unscrubbed under the id the probe did not check."""
+    payloads = [
+        '{"k":1,"person":{"id":7,"id":9},"kind":"view"}',
+        '{"k":1,"person":{"id":7},"kind":"view"}',
+    ]
+    rows = _run_payloads(
+        spark,
+        tmp_path,
+        payloads,
+        [9],
+        "k INT, person STRUCT<id: BIGINT>, kind STRING" if declared else None,
+    )
     assert rows[0].kafka_message is None and rows[0].person_id is None
     assert rows[1].kafka_message is not None and rows[1].person_id == 7
+
+
+@pytest.mark.parametrize("partial", ["true", "false"])
+def test_failing_sibling_field_keeps_scrub_and_filter(spark, tmp_path, partial):
+    """A person field that fails to convert to its declared type must not
+    hide the person id or the allow-filter key: without JSON partial
+    results the parse NULLs the whole row, and the kode-6/7 key and the
+    allow-filter key then read the payload text instead."""
+    payloads = [
+        '{"k":1,"person":{"id":9,"age":"x"},"kind":"view"}',  # flagged
+        '{"k":1,"person":{"id":7,"age":"x"},"kind":"view"}',  # allowed
+        '{"k":3,"person":{"id":7,"age":"x"},"kind":"view"}',  # filtered
+    ]
+    conf = "spark.sql.json.enablePartialResults"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, partial)
+    try:
+        rows = _run_payloads(
+            spark,
+            tmp_path,
+            payloads,
+            [9],
+            "person STRUCT<id: STRING, age: INT>, kind STRING",
+        )
+    finally:
+        spark.conf.set(conf, before)
+    assert rows[0].kafka_message is None and rows[0].person_id is None
+    assert rows[1].kafka_message == payloads[1]
+    assert rows[2].kafka_message is None
 
 
 def test_string_mode_allow_filter_probes_raw_value(spark, sf_dir):

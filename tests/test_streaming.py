@@ -4,6 +4,8 @@ reference test_integration.py:363-410)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -60,6 +62,33 @@ def test_crash_after_write_then_resume_no_loss_no_dup(spark, source_dir, tmp_pat
     # the resumed run replayed the uncommitted batch (at-least-once) but
     # appended only the missing rows
     assert resumed.summary.event_count >= total - partial
+
+
+def test_crash_replay_over_unreadable_sink_raises(spark, source_dir, tmp_path):
+    """The replayed epoch probes the sink itself for its keys. A sink that
+    is there but cannot be read must fail the batch, not pass for an
+    empty one (which would re-append the rows the crashed try wrote)."""
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception, match="injected failure"):
+        run_streaming_pipeline(
+            spark, source_dir, sink, ckpt, fail_after_batches=2
+        )
+    partial = spark.read.parquet(sink).count()
+    # sorts before Spark's part files, so the footer probe meets it first
+    corrupt = os.path.join(sink, "part-0000-corrupt.parquet")
+    with open(corrupt, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_streaming_pipeline(spark, source_dir, sink, ckpt)
+    os.remove(corrupt)
+    assert spark.read.parquet(sink).count() == partial  # nothing appended
+    # once readable again, the replay resumes with no loss and no dup
+    run_streaming_pipeline(spark, source_dir, sink, ckpt)
+    total = spark.read.parquet(source_dir).count()
+    final = spark.read.parquet(sink)
+    assert final.count() == total
+    assert final.select("kafka_offset").distinct().count() == total
 
 
 def test_transform_and_filters_in_stream(spark, source_dir, tmp_path):
