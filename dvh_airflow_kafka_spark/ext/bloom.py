@@ -3,7 +3,7 @@
 The reference dedups an incoming batch with ``WHERE NOT EXISTS`` against
 the sink's key column (src/oracle_target.py:97-104). At 100 TB the sink
 side of that anti-join is the whole table; the streaming key index
-(``streaming/keyindex.py``) bounds it with a keys-only bucketed sidecar,
+(``streaming/keyindex.py``) bounds it with a keys-only sidecar,
 and this module adds the constant-size cousin: a Bloom filter over the
 sink keyset, materialised as a plain DataFrame of set bit positions.
 

@@ -26,11 +26,12 @@ from Oracle transactions:
 - **O(1) files read per batch (VERDICT r11 item 2)**: the dedup state
   a batch reads is ONE cumulative Bloom-bit snapshot (the latest
   ``bits_cum/b*`` dir; at most m = NUM_BITS rows, so writing the next
-  snapshot per batch is bounded work) plus the bucket-pruned keys-only
-  sidecar of ``streaming/keyindex.py`` for the exact anti-join — the
-  per-batch dir unions of rounds ≤11 (O(batches) listings per batch)
-  are gone from the hot path.  The sidecar is compacted in-drain every
-  ``compact_every`` batches, bounding its file count; only a
+  snapshot per batch is bounded work) plus the flat keys-only sidecar
+  of ``streaming/keyindex.py`` for the exact anti-join — the per-batch
+  dir unions of rounds ≤11 (O(batches) listings per batch) are gone
+  from the hot path.  Each batch appends one sidecar file, and the
+  sidecar is compacted in-drain to one file every ``compact_every``
+  batches, so a probe reads at most ``compact_every`` + 1 files; only a
   crash-REPLAY batch (detected by the sidecar's ``_attempted_<epoch>``
   marker) pays a full probe of the sink dirs below it, because its
   prior attempt may have reached the sink without reaching the sidecar
@@ -45,7 +46,7 @@ from Oracle transactions:
 - **Resident monitors in the same drain**: each batch also appends its
   admitted rows' MERGEABLE sketch partials — HLL register maxima
   (distinct users), ddsketch bucket counts (value quantiles), and
-  Misra-Gries candidate sets (heavy users).  Max-merge / sum-merge /
+  exact per-batch heavy-user candidates).  Max-merge / sum-merge /
   candidate-union + exact-verify over the partials reproduce the batch
   sketches over the full admitted set exactly (see
   ``catalog/q13_round11.streaming_ingest_capstone`` for the laws).
@@ -84,7 +85,8 @@ from pyspark.sql import functions as F
 
 from dvh_airflow_kafka_spark.config import AllowRule
 from dvh_airflow_kafka_spark.ext.bloom import bloom_dedup_with_bits, build_bloom
-from dvh_airflow_kafka_spark.ext.sketch import _misra_gries_partition, hll_bucket_rho
+from dvh_airflow_kafka_spark.ext.sketch import hll_bucket_rho
+from dvh_airflow_kafka_spark.ext.text import tokens
 from dvh_airflow_kafka_spark.operators import scrub_flagged_persons
 from dvh_airflow_kafka_spark.sources import events_as_kafka_frame, with_envelope
 from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
@@ -324,14 +326,29 @@ def _run_concurrent(thunks: Sequence[Callable[[], None]]) -> None:
             f.result()
 
 
+# the heavy-user monitor's tokens: whitespace tokens of the user id, the
+# same split ``ext.sketch.verify_candidate_counts`` counts by
+def _mg_tokens() -> Column:
+    return tokens(F.col("user_id").cast("string"))
+
+
+def _mg_token_total() -> Column:
+    """Aggregate for an ``Observation``: the frame's total heavy-user
+    token count, the n_b of the per-batch candidate bar."""
+    return F.coalesce(
+        F.sum(F.size(F.coalesce(_mg_tokens(), F.array()))), F.lit(0)
+    ).alias("n_tok")
+
+
 def _monitor_partial_thunks(
-    admitted: DataFrame, dirs: "IngestDirs", tag: str, mg_k: int
+    admitted: DataFrame, dirs: "IngestDirs", tag: str, mg_k: int, n_tok: int
 ) -> list:
     """The three mergeable monitor partials of one batch's admitted
     rows as independent write thunks — ONE definition shared by the
     live drain and the erasure rebuild, so a rebuilt partial is
     bit-identical to what the drain would have written over the same
-    rows."""
+    rows.  ``n_tok`` is the rows' token total (``_mg_token_total``,
+    observed on the caller's checkpoint of ``admitted``)."""
     from dvh_airflow_kafka_spark.catalog.q03_curation import (
         _ddsketch_buckets,
     )
@@ -349,21 +366,18 @@ def _monitor_partial_thunks(
         ).write.mode("overwrite").parquet(os.path.join(dirs.dd, tag))
 
     def _mg() -> None:
-        admitted.select(
-            F.col("user_id").cast("string").alias("__text")
-        ).mapInPandas(
-            lambda it: _misra_gries_partition(it, mg_k), schema="token string"
-        ).distinct().write.mode("overwrite").parquet(
-            os.path.join(dirs.mg, tag)
-        )
+        # exact per-batch candidates: the tokens whose batch count c
+        # clears c·k > n_b (fewer than k of them).  Pigeonhole makes the
+        # union over batches a superset of every token with global
+        # count C·k > N, which is what verify_candidate_counts keeps: if
+        # c·k ≤ n_b held in every batch, summing gives C·k ≤ N.
+        admitted.select(F.explode(_mg_tokens()).alias("token")).groupBy(
+            "token"
+        ).count().filter(F.col("count") * mg_k > n_tok).select(
+            "token"
+        ).write.mode("overwrite").parquet(os.path.join(dirs.mg, tag))
 
     return [_hll, _dd, _mg]
-
-
-def _write_monitor_partials(
-    admitted: DataFrame, dirs: "IngestDirs", tag: str, mg_k: int
-) -> None:
-    _run_concurrent(_monitor_partial_thunks(admitted, dirs, tag, mg_k))
 
 
 # --------------------------------------------------------------------------
@@ -434,7 +448,6 @@ def erase_users(
     *,
     mg_k: int = 64,
     key_cols: Sequence[str] = INGEST_KEY_COLS,
-    index_buckets: int = 16,
     purge_keys: bool = False,
 ) -> dict:
     """GDPR erasure CASCADE into the resident monitors (VERDICT r11
@@ -567,15 +580,18 @@ def erase_users(
                     .select(*key_cols)
                     .localCheckpoint()
                 )
-            # both counts ride the rewrite's one materialization as
-            # observed metrics (pre-join row count above the anti-join,
-            # kept count below it) instead of two dedicated count() jobs
+            # both counts (and the kept rows' token total for the
+            # heavy-user partial) ride the rewrite's one materialization
+            # as observed metrics (pre-join row count above the
+            # anti-join, kept count below it) instead of dedicated jobs
             # per affected tag
             o_before, o_kept = Observation(), Observation()
             kept = (
                 rows.observe(o_before, F.count(F.lit(1)).alias("n"))
                 .join(er, "user_id", "anti")
-                .observe(o_kept, F.count(F.lit(1)).alias("n"))
+                .observe(
+                    o_kept, F.count(F.lit(1)).alias("n"), _mg_token_total()
+                )
                 .localCheckpoint()
             )
             n_erased = int(o_before.get["n"]) - int(o_kept.get["n"])
@@ -590,7 +606,10 @@ def erase_users(
                 kept.write.parquet(out)
 
             _run_concurrent(
-                [_rows_out] + _monitor_partial_thunks(kept, dirs, tag, mg_k)
+                [_rows_out]
+                + _monitor_partial_thunks(
+                    kept, dirs, tag, mg_k, int(o_kept.get["n_tok"])
+                )
             )
             _swap_in(fs, dirs, out, bdir, f"sink__{tag}")
             return n_erased, gone
@@ -616,7 +635,7 @@ def erase_users(
 
     if purge_keys:
         _purge_key_material(
-            spark, fs, dirs, gone_keys, key_cols, index_buckets, tmp
+            spark, fs, dirs, gone_keys, key_cols, tmp
         )
     fs.delete(tmp)
     # every swap completed (each deleted its own trash entry) — drop
@@ -631,7 +650,6 @@ def _purge_key_material(
     dirs: IngestDirs,
     gone_keys: list[DataFrame],
     key_cols: list,
-    index_buckets: int,
     tmp: str,
 ) -> None:
     """The ``purge_keys=True`` arm of ``erase_users``: compact the key
@@ -641,8 +659,6 @@ def _purge_key_material(
     ``initial_bits`` when no batch has committed yet.  Both swaps are
     crash-consistent via the erase-trash protocol."""
     from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
-
-    from dvh_airflow_kafka_spark.streaming.keyindex import BUCKET_COL
 
     gone = None
     for g in gone_keys:
@@ -665,14 +681,9 @@ def _purge_key_material(
             "run a drain first or keep the default superset stance"
         )
     gone = gone.distinct().localCheckpoint()
-    kidx = SinkKeyIndex(
-        spark, dirs.sink, key_cols, n_buckets=index_buckets
-    )
+    kidx = SinkKeyIndex(spark, dirs.sink, key_cols)
     kidx.compact(purge=gone)
-    has_sidecar = any(
-        n.startswith(f"{BUCKET_COL}=") for n in fs.list_names(kidx.path)
-    )
-    if has_sidecar:
+    if kidx.has_data():
         sidecar_keys = (
             spark.read.parquet(kidx.path).select(*key_cols).distinct()
         )
@@ -907,7 +918,6 @@ def run_ingest_pipeline(
     fail_at_batch: Optional[int] = None,
     shared_initial: Optional[tuple[str, str]] = None,
     key_cols: Sequence[str] = INGEST_KEY_COLS,
-    index_buckets: int = 16,
     compact_every: int = 8,
     topic: "str | Column" = "events",
     epoch_offset: Optional[int] = None,
@@ -939,9 +949,10 @@ def run_ingest_pipeline(
     of silently mis-probing.
 
     ``shuffle_partitions`` right-sizes the per-batch aggregation
-    exchanges (Bloom-bit distinct, monitor partial groupBys, sidecar
-    bucket writes) exactly as ``drain_to_memory``'s same-named knob
-    right-sizes state partitions: the cost of each tiny artifact job
+    exchanges (Bloom-bit distincts, monitor partial groupBys) exactly
+    as ``drain_to_memory``'s same-named knob right-sizes state
+    partitions (the sidecar append has no exchange to size, and its
+    compaction writes one file): the cost of each tiny artifact job
     has a fixed per-partition term (task launch + commit file), so the
     partition count should track the MICRO-BATCH's data volume, not
     the cluster width.  A production drain sizes it to steady-state
@@ -974,37 +985,29 @@ def run_ingest_pipeline(
     epoch_offset = _settle_epoch_offset(fs, dirs, checkpoint_dir, epoch_offset)
     init_rows = spark.read.parquet(dirs.initial)
     init_bits = spark.read.parquet(dirs.initial_bits)
-    kidx = SinkKeyIndex(spark, dirs.sink, key_cols, n_buckets=index_buckets)
+    kidx = SinkKeyIndex(spark, dirs.sink, key_cols)
     kidx.seed(init_rows.select(*key_cols))
 
     def process(batch_df: DataFrame, raw_batch_id: int) -> None:
         batch_id = raw_batch_id + epoch_offset
         sess = batch_df.sparkSession
         bfs = HadoopFs(sess, dirs.work_dir)
-        # one compute for the whole batch: the transform feeds the
-        # bucket-probe collect, both bloom_dedup branches, and the
-        # dropDuplicates — without the checkpoint each consumer would
-        # re-run the envelope + scrub lineage.  The A2 pre-dedup count
-        # rides the SAME scan as an observed metric (the transform is
-        # row-preserving, see ingest_transform) instead of a second
-        # batch_df.count() source scan (VERDICT r12 "wrong" #2).
+        # one compute for the whole batch: the transform feeds both
+        # bloom_dedup branches and the dropDuplicates — without the
+        # checkpoint each consumer would re-run the envelope + scrub
+        # lineage.  The A2 pre-dedup count rides the SAME scan as an
+        # observed metric (the transform is row-preserving, see
+        # ingest_transform) instead of a second batch_df.count() source
+        # scan (VERDICT r12 "wrong" #2).
         obs = Observation()
         rows = (
             ingest_transform(batch_df, lookup, message_filters, topic)
-            # the probe's bucket set rides the same scan as a second
-            # observed metric (dropDuplicates keeps one row per key, so
-            # the pre-dedup distinct-bucket set is identical) — the
-            # dedicated per-batch bucket-collect job is gone
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.collect_set(kidx.bucket_expr()).alias("bks"),
-            )
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .dropDuplicates(key_cols)
             .localCheckpoint()
         )
         # dedup state, bounded: ONE cumulative bit snapshot (≤ m rows)
-        # + the bucket-pruned keys sidecar.  A re-attempted epoch probes
+        # + the keys-only sidecar.  A re-attempted epoch probes
         # the real sink dirs below it instead — its prior try may have
         # appended to the sink without reaching the sidecar.
         replay = kidx.begin_epoch(batch_id)
@@ -1022,29 +1025,32 @@ def run_ingest_pipeline(
                 ).select(*key_cols)
             )
             sink_dirs_read = len(_batch_dirs(bfs, dirs.sink, batch_id)) + 1
+            key_files_read = 0
         else:
-            probe = kidx.probe(rows, buckets=list(obs.get["bks"]))
+            probe = kidx.probe(rows)
             prior_keys = (
                 probe
                 if probe is not None
                 else sess.createDataFrame([], rows.select(*key_cols).schema)
             )
             sink_dirs_read = 0
+            key_files_read = len(probe.inputFiles()) if probe is not None else 0
         dirs.probe_log.append(
             {
                 "batch_id": batch_id,
                 "replay": replay,
                 "bits_dirs_read": 1,
                 "sink_dirs_read": sink_dirs_read,
+                "key_files_read": key_files_read,
             }
         )
-        # one compute feeding the 5 artifact writes below; the admitted
-        # count rides the materialization as an observed metric instead
-        # of a dedicated post-checkpoint count() job
+        # one compute feeding the artifact writes below; the admitted
+        # count and token total ride the materialization as observed
+        # metrics instead of dedicated post-checkpoint jobs
         adm_obs = Observation()
         admitted = (
             bloom_dedup_with_bits(rows, prior_keys, prior_bits, key_cols)
-            .observe(adm_obs, F.count(F.lit(1)).alias("n"))
+            .observe(adm_obs, F.count(F.lit(1)).alias("n"), _mg_token_total())
             .localCheckpoint()
         )
         tag = f"b{batch_id:05d}"
@@ -1065,8 +1071,8 @@ def run_ingest_pipeline(
         # (guide §2.6) instead of as ~8 sequential tiny jobs.  Ordering
         # contracts preserved: the sink write precedes the sidecar
         # append INSIDE one thread (ST3), and each chain keeps its own
-        # internal order (bits before cum snapshot before retention;
-        # append before compact).  A crash mid-pool can tear any subset
+        # internal order (cum snapshot before retention; append before
+        # compact).  A crash mid-pool can tear any subset
         # of artifacts — the same replay law covers it: the checkpoint
         # has not committed, so the whole batch recomputes against dirs
         # strictly below it and overwrites every artifact.
@@ -1090,24 +1096,24 @@ def run_ingest_pipeline(
             counts["n_rows"] = int(obs.get["n"])
             counts["n_adm"] = int(adm_obs.get["n"])
 
-        def _bits_chain() -> None:
+        def _bits() -> None:
             # the per-batch bit artifact's write IS its materialization
             # (admitted is checkpointed, so the bloom aggregation runs
-            # once inside the write job — the previous dedicated
-            # localCheckpoint job was a third driver round trip on this
-            # chain, the measured per-batch critical path); the
-            # cumulative snapshot then unions the just-committed
-            # artifact back in, an ≤ m-row read
-            new_bits = build_bloom(admitted, _ingest_key(key_cols))
-            bits_path = os.path.join(dirs.bits, tag)
-            new_bits.write.mode("overwrite").parquet(bits_path)
-            # next batch's ONE-dir dedup read; ≤ m rows so the rewrite
-            # is bounded work regardless of how much the sink accreted
-            prior_bits.unionByName(
-                sess.read.schema("pos BIGINT").parquet(bits_path)
-            ).distinct().write.mode(
+            # once inside the write job)
+            build_bloom(admitted, _ingest_key(key_cols)).write.mode(
                 "overwrite"
-            ).parquet(os.path.join(dirs.bits_cum, tag))
+            ).parquet(os.path.join(dirs.bits, tag))
+
+        def _bits_cum() -> None:
+            # next batch's ONE-dir dedup read; ≤ m rows so the rewrite
+            # is bounded work regardless of how much the sink accreted.
+            # Built from ``admitted`` directly rather than by re-reading
+            # the bits artifact, so the two writes run side by side.
+            prior_bits.unionByName(
+                build_bloom(admitted, _ingest_key(key_cols))
+            ).distinct().write.mode("overwrite").parquet(
+                os.path.join(dirs.bits_cum, tag)
+            )
             # retention: only the LATEST snapshot below a batch is ever
             # read (a replay of batch N reads the newest < N, i.e.
             # N-1), so keep this batch's and the previous one and drop
@@ -1116,8 +1122,10 @@ def run_ingest_pipeline(
                 bfs.delete(old)
 
         _run_concurrent(
-            [_sink_then_keys_chain, _counts_chain, _bits_chain]
-            + _monitor_partial_thunks(admitted, dirs, tag, mg_k)
+            [_sink_then_keys_chain, _counts_chain, _bits, _bits_cum]
+            + _monitor_partial_thunks(
+                admitted, dirs, tag, mg_k, int(adm_obs.get["n_tok"])
+            )
         )
         n_rows, n_adm = counts["n_rows"], counts["n_adm"]
         dirs.summary["event_count"] += n_rows

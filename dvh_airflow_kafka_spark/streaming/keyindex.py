@@ -5,12 +5,25 @@ indexed table — O(batch · log sink) per batch (reference
 src/oracle_target.py:97-104). A parquet sink has no index, and re-reading
 the whole sink every micro-batch is O(sink) work per batch — unbounded
 growth as the sink accretes, the classic streaming scale-killer. This
-module maintains the missing index: a keys-only parquet sidecar
-hash-partitioned into a fixed number of buckets, so a batch's probe reads
-only the buckets its own keys hash into (static partition pruning) and
-only the key columns (column pruning). Per-batch probe cost is
-O(batch + touched-buckets' share of distinct keys), independent of the
-sink's payload width and of how many batches have run.
+module maintains the missing index: a flat keys-only parquet sidecar of
+the sink's dedup keys. A batch's probe reads only the key columns
+(column pruning) of a sidecar whose file count compaction bounds, so
+per-batch probe cost is independent of the sink's payload width and of
+how many batches have run.
+
+Why flat and not hash-bucketed: splitting the sidecar into n hash
+buckets would let a probe skip the buckets none of its keys hash into,
+but a batch of b distinct keys leaves on average only n·e^(−b/n) of the
+n buckets untouched — ≈0 once b is a few times n (16 buckets against a
+micro-batch of ~1,800 keys, or the reference's 5,000-row batches). The
+pruned probe would read the whole sidecar anyway, while every append
+paid an n-way exchange, n writer tasks and n files. So an append is one
+narrow ``coalesce(1)`` write — one file, no exchange — and the probe
+returns the whole sidecar.
+
+The file bound comes from compaction: :meth:`SinkKeyIndex.compact`
+rewrites the sidecar to ONE file of distinct keys, so a drain that
+compacts every c batches probes at most c + 1 files per batch.
 
 Crash-correctness — the sidecar is advisory; the *sink* stays the source
 of truth. Per epoch the order is: attempt-marker → probe → sink append →
@@ -20,16 +33,18 @@ probe on replay would miss those keys and duplicate them. The attempt
 marker closes it: a batch whose ``_attempted_<epoch>`` marker already
 exists is a RE-attempt (a prior try may have reached the sink), and
 probes the full sink for that one batch instead. So the rare crash-replay
-batch is O(sink) and every normal batch is O(batch) — the same amortized
-contract as the reference's indexed NOT EXISTS.
+batch is O(sink) and every normal batch reads only the keys-only sidecar
+— the same amortized contract as the reference's indexed NOT EXISTS.
 
 The sidecar tolerates duplicate keys (replays may append a key twice);
 the anti-join deduplicates the probe side, so duplicates cost bytes, not
-correctness. Appends accrete one small file per batch per touched
-bucket — :meth:`SinkKeyIndex.compact` rewrites the sidecar to one
-deduplicated file per bucket while PRESERVING the partition layout and
-the epoch markers (a generic flat compaction would flatten the
-``bucket=`` dirs and silently disable partition pruning).
+correctness; compaction drops them. Compaction carries the epoch and
+seed markers over.
+
+A sidecar written by the earlier bucketed layout (``__kidx_bucket=<n>``
+partition dirs) is flattened once when it is opened: a parquet read of
+bucket dirs plus flat files at the root silently drops the flat files'
+rows, which would admit duplicates.
 """
 
 from __future__ import annotations
@@ -37,9 +52,10 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-BUCKET_COL = "__kidx_bucket"
+# partition-dir prefix of the earlier hash-bucketed sidecar layout; read
+# only to flatten such a sidecar when it is opened
+_LEGACY_BUCKET_PREFIX = "__kidx_bucket="
 
 
 class _Fs:
@@ -95,37 +111,35 @@ class _Fs:
 
 
 class SinkKeyIndex:
-    """Keys-only, bucket-partitioned sidecar of a parquet sink's dedup
-    keys, living at ``<sink>__keys``."""
+    """Flat keys-only sidecar of a parquet sink's dedup keys, living at
+    ``<sink>__keys``."""
 
     def __init__(
         self,
         spark: SparkSession,
         sink_path: str,
         keys: Sequence[str],
-        n_buckets: int = 16,
     ) -> None:
         self.spark = spark
         self.path = sink_path.rstrip("/") + "__keys"
         self.keys = list(keys)
-        self.n_buckets = n_buckets
         self._fs = _Fs(spark, self.path)
-        # sidecar schema is fixed after the first write (key columns +
-        # the bucket partition column); cache it so per-batch probes
-        # skip the driver-side footer-inference pass (guide §6)
+        # sidecar schema is fixed after the first write (the key
+        # columns); cache it so per-batch probes skip the driver-side
+        # footer-inference pass (guide §6)
         self._schema = None
+        self._flatten_legacy_layout()
 
-    def _bucket(self) -> F.Column:
-        return F.pmod(
-            F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(self.n_buckets)
-        ).cast("int")
-
-    def bucket_expr(self) -> F.Column:
-        """The bucket-assignment expression, public so a caller can ride
-        it on an existing pass (e.g. an ``observe`` on the batch's first
-        materialization) and hand the result to :meth:`probe` instead of
-        paying a dedicated collect job."""
-        return self._bucket()
+    def _flatten_legacy_layout(self) -> None:
+        """Convert a sidecar written by the earlier hash-bucketed layout
+        (``__kidx_bucket=<n>`` dirs) to the flat one, once, before any
+        probe or append: a read over bucket dirs plus flat files at the
+        root drops the flat files' rows, and those missing keys would be
+        admitted as new. ``compact`` does the rewrite (it reads the key
+        columns only, so the bucket column falls away)."""
+        self._recover_interrupted_swap()
+        if any(n.startswith(_LEGACY_BUCKET_PREFIX) for n in self._fs.names()):
+            self.compact()
 
     def _recover_interrupted_swap(self) -> None:
         """Close the compaction crash window: ``compact`` swaps with
@@ -150,7 +164,7 @@ class SinkKeyIndex:
     def seed(self, keys: DataFrame) -> None:
         """Idempotently seed the sidecar with a pre-existing sink's keys
         (e.g. the ingest pipeline's initial sink), once per sidecar.
-        Marker-protected: bucket data present WITHOUT the ``_seeded``
+        Marker-protected: key data present WITHOUT the ``_seeded``
         marker means a crash tore a previous seed — since seeding
         precedes the first epoch, no batch keys can exist yet and the
         sidecar is safe to wipe and rebuild.  After the marker exists
@@ -163,7 +177,7 @@ class SinkKeyIndex:
         if self._fs.exists():
             self._fs.delete()
         self.append(keys)
-        self._fs.mkdirs()  # zero-row seeds write no bucket dirs
+        self._fs.mkdirs()
         self._fs.touch(marker)
 
     def begin_epoch(self, epoch_id: int) -> bool:
@@ -179,65 +193,49 @@ class SinkKeyIndex:
         self._fs.touch(marker)
         return False
 
-    def _has_data(self) -> bool:
-        return any(e.startswith(f"{BUCKET_COL}=") for e in self._fs.names())
+    def has_data(self) -> bool:
+        """Whether the sidecar holds key files yet. Markers and
+        ``_SUCCESS`` are ``_``-prefixed, so any other entry is data, as
+        is a legacy bucket dir."""
+        return any(
+            n.startswith(_LEGACY_BUCKET_PREFIX) or not n.startswith(("_", "."))
+            for n in self._fs.names()
+        )
 
-    def probe(
-        self, batch: DataFrame, buckets: Optional[list] = None
-    ) -> Optional[DataFrame]:
-        """Existing-keys frame pruned to the buckets ``batch``'s keys hash
-        into, or None when the index is empty. The bucket list is a
-        bounded driver collect (≤ n_buckets values) so the filter is a
-        static ``IN`` that Spark turns into partition pruning — the scan
-        never touches the other buckets' files.  Pass ``buckets`` (the
-        distinct values of :meth:`bucket_expr` over the batch) to skip
-        the collect job when a prior pass already computed them."""
-        if not self._has_data():
-            return None
-        if buckets is None:
-            buckets = [
-                r.b
-                for r in batch.select(
-                    self._bucket().alias("b")
-                ).distinct().collect()
-            ]
-        buckets = sorted(set(buckets))
-        if not buckets:
-            return None
+    def _read(self) -> DataFrame:
         if self._schema is None:
-            self._schema = self.spark.read.parquet(self.path).schema
-        idx = self.spark.read.schema(self._schema).parquet(self.path)
-        return idx.filter(F.col(BUCKET_COL).isin(buckets)).select(*self.keys)
+            self._schema = (
+                self.spark.read.parquet(self.path).select(*self.keys).schema
+            )
+        return (
+            self.spark.read.schema(self._schema)
+            .parquet(self.path)
+            .select(*self.keys)
+        )
+
+    def probe(self, batch: DataFrame) -> Optional[DataFrame]:
+        """Existing-keys frame for ``batch``'s anti-join, or None when the
+        index holds no data. It is the whole sidecar, column-pruned to
+        the key columns: with no bucket layout there is nothing to prune
+        by ``batch``'s keys, and, once the key schema is cached, building
+        the frame runs no job."""
+        if not self.has_data():
+            return None
+        return self._read()
 
     def append(self, fresh: DataFrame) -> None:
-        """Append the just-written rows' keys, partitioned by bucket.
-
-        The keys frame is shuffled onto the bucket column first so each
-        bucket dir gains exactly ONE file per append — without it every
-        input task writes a sliver into every bucket it touches
-        (tasks × buckets files per append, measured as the dominant
-        per-batch cost of the ingest drain's sidecar maintenance).
-
-        The exchange is pinned to ``n_buckets`` partitions (one writer
-        task per bucket — exactly the output-file contract above) rather
-        than left to the session shuffle-partition count: an explicit
-        partition count keeps AQE from inserting its per-stage
-        re-optimization barrier into this tiny two-stage job, a measured
-        ~1.0s → ~0.65s per append at micro-batch scale, and at any scale
-        one task per output file is the right write parallelism for a
-        keys-only frame."""
+        """Append the just-written rows' keys as ONE file: a narrow
+        ``coalesce(1)``, no exchange, one writer task. The sidecar gains
+        one file per append; ``compact`` folds them back to one."""
         (
             fresh.select(*self.keys)
-            .withColumn(BUCKET_COL, self._bucket())
-            .repartition(self.n_buckets, F.col(BUCKET_COL))
+            .coalesce(1)
             .write.mode("append")
-            .partitionBy(BUCKET_COL)
             .parquet(self.path)
         )
 
     def compact(self, purge: Optional[DataFrame] = None) -> None:
-        """Rewrite the sidecar to one DISTINCT-keys file per bucket,
-        keeping the ``bucket=`` partition layout (probe pruning) and the
+        """Rewrite the sidecar to ONE file of distinct keys, keeping the
         ``_attempted_*`` / ``_seeded`` markers (crash-replay detection /
         seed idempotence). Safe between drains or from inside a
         ``foreachBatch`` body (batches are sequential; the swap is
@@ -262,24 +260,15 @@ class SinkKeyIndex:
                 f"{base_name}.__old_"
             ):
                 _Fs(self.spark, f"{self.path.rsplit('/', 1)[0]}/{n}").delete()
-        if not self._has_data():
+        if not self.has_data():
             return
-        idx = self.spark.read.parquet(self.path).dropDuplicates(
-            self.keys + [BUCKET_COL]
-        )
+        idx = self._read().distinct()
         if purge is not None:
             idx = idx.join(
                 purge.select(*self.keys).distinct(), self.keys, "anti"
             )
         tmp = _Fs(self.spark, f"{self.path}.__compact_{uuid.uuid4().hex[:8]}")
-        (
-            # pinned like append(): one writer task per bucket, no AQE
-            # stage-replan barrier on a tiny job
-            idx.repartition(self.n_buckets, F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tmp._base.toString())
-        )
+        idx.coalesce(1).write.mode("overwrite").parquet(tmp._base.toString())
         # carry the epoch + seed markers over: losing ``_attempted_``
         # would blind crash-replay detection; losing ``_seeded`` would
         # make the next ``seed()`` call wipe the (batch-key-bearing!)

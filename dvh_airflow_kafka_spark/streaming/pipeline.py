@@ -78,7 +78,6 @@ def run_streaming_pipeline(
     error_where: Optional[str] = None,
     fail_on_non_critical: bool = False,
     quarantine_path: Optional[str] = None,
-    index_buckets: int = 16,
     source_spec=None,
 ) -> StreamingRun:
     """Drain an events-shaped parquet directory through the full spine and
@@ -110,11 +109,12 @@ def run_streaming_pipeline(
     Fatal errors are anything that makes foreachBatch raise — the query
     stops and the checkpoint replays the batch on restart.
 
-    The dedup probe is BOUNDED: a keys-only, bucket-partitioned sidecar
-    (``SinkKeyIndex``, ``index_buckets`` buckets) is probed instead of
-    re-reading the whole sink each batch — O(batch) per normal batch.
-    Only a crash-replayed epoch falls back to the full-sink probe (see
-    keyindex module docstring for the correctness argument).
+    The dedup probe is BOUNDED: a flat keys-only sidecar
+    (``SinkKeyIndex``) is probed instead of re-reading the whole sink
+    each batch — the key columns only, never the payload, and building
+    the probe runs no per-batch job. Only a crash-replayed epoch falls
+    back to the full-sink probe (see keyindex module docstring for the
+    correctness argument).
 
     ``source_spec`` (a config ``SourceSpec``) switches the envelope to
     the spec's full deserializer semantics via the shared
@@ -135,7 +135,7 @@ def run_streaming_pipeline(
     )
     run = StreamingRun()
     run.summary.committed_to_producer_count = 0
-    key_index = SinkKeyIndex(spark, sink_path, dedup_keys, n_buckets=index_buckets)
+    key_index = SinkKeyIndex(spark, sink_path, dedup_keys)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         n = batch_df.count()
@@ -198,40 +198,34 @@ def run_streaming_pipeline(
                 message_filters=message_filters,
             )
         out = transform.apply(env) if transform is not None else env
-        # persist BEFORE the probe: probe() collects the batch's distinct
-        # buckets from `out`, then the same frame feeds the anti-join and
-        # write — without pinning it the whole envelope+transform would
-        # run twice per batch, and a nondeterministic transform could
-        # make the probed bucket list diverge from the keys written.
-        out.persist()
-        try:
-            if key_index.begin_epoch(epoch_id):
-                # Re-attempted epoch: a prior try may have appended to
-                # the sink without reaching the sidecar append — probe
-                # the sink itself for this one batch (rare,
-                # crash-recovery only).
-                existing = (
-                    spark.read.parquet(sink_path).select(*dedup_keys)
-                    if HadoopFs(spark, sink_path).has_data(sink_path)
-                    else None  # sink has no data yet; read errors raise
-                )
-            else:
-                existing = key_index.probe(out)  # bucket-pruned, keys-only
-            # no forced broadcast: the existing-keys side is unbounded
-            # (the full sink on crash replay); AQE's dynamic join
-            # selection still broadcasts it whenever it measures small at
-            # runtime
-            fresh = dedup_against_existing(
-                out, existing, list(dedup_keys), broadcast_existing=False
+        if key_index.begin_epoch(epoch_id):
+            # Re-attempted epoch: a prior try may have appended to the
+            # sink without reaching the sidecar append — probe the sink
+            # itself for this one batch (rare, crash-recovery only).
+            existing = (
+                spark.read.parquet(sink_path).select(*dedup_keys)
+                if HadoopFs(spark, sink_path).has_data(sink_path)
+                else None  # sink has no data yet; read errors raise
             )
-            fresh.persist()
-            try:
-                write_parquet_append(fresh, sink_path)
-                key_index.append(fresh)
-            finally:
-                fresh.unpersist()
+        else:
+            existing = key_index.probe(out)  # keys-only, no job
+        # no forced broadcast: the existing-keys side is unbounded (the
+        # full sink on crash replay); AQE's dynamic join selection still
+        # broadcasts it whenever it measures small at runtime
+        fresh = dedup_against_existing(
+            out, existing, list(dedup_keys), broadcast_existing=False
+        )
+        # persist: the sink write and the sidecar append both read
+        # `fresh`; pinned, the envelope + transform + anti-join run once
+        # per batch and both see the same rows even under a
+        # nondeterministic transform (`out` has no other consumer since
+        # the probe reads only the sidecar)
+        fresh.persist()
+        try:
+            write_parquet_append(fresh, sink_path)
+            key_index.append(fresh)
         finally:
-            out.unpersist()
+            fresh.unpersist()
         run.summary.data_count += n
         run.summary.written_to_db_count += n
         run.batches += 1

@@ -415,36 +415,25 @@ def test_subscribe_lifecycle_multi_epoch_crash_resume(spark, sf_dir, tmp_path):
     assert run_c.summary.event_count == 0
 
 
-def test_sidecar_append_writes_one_file_per_touched_bucket(spark, tmp_path):
-    """Round-13 optimization law: ``SinkKeyIndex.append``'s pinned
-    exchange (``repartition(n_buckets, bucket)``) must preserve the
-    file-count contract the sidecar's probe cost model rests on — each
-    append adds exactly ONE parquet file to every bucket dir it
-    touches, never a per-input-task sliver fan-out."""
-    from dvh_airflow_kafka_spark.streaming.keyindex import (
-        BUCKET_COL,
-        SinkKeyIndex,
-    )
+def test_sidecar_append_writes_one_file_per_append(spark, tmp_path):
+    """``SinkKeyIndex.append`` is one narrow ``coalesce(1)`` write: each
+    append adds exactly ONE parquet file to the sidecar, however many
+    input partitions the keys frame has — never a per-task sliver
+    fan-out."""
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
     sink = str(tmp_path / "sink")
-    kidx = SinkKeyIndex(spark, sink, ["k"], n_buckets=4)
+    kidx = SinkKeyIndex(spark, sink, ["k"])
     keys = spark.range(0, 200).select(F.col("id").alias("k")).repartition(8)
 
-    def files_per_bucket() -> dict:
-        out = {}
-        for b in glob.glob(os.path.join(kidx.path, f"{BUCKET_COL}=*")):
-            out[os.path.basename(b)] = len(
-                [f for f in os.listdir(b) if f.endswith(".parquet")]
-            )
-        return out
+    def n_files() -> int:
+        return len([f for f in os.listdir(kidx.path) if f.endswith(".parquet")])
 
     kidx.append(keys)
-    first = files_per_bucket()
-    assert first and all(n == 1 for n in first.values())
+    assert n_files() == 1
     kidx.append(keys)
-    second = files_per_bucket()
-    # every touched bucket gained exactly one more file
-    assert all(second[b] == first[b] + 1 for b in first)
+    assert n_files() == 2
+    assert kidx.probe(keys).count() == 400  # duplicates cost bytes only
 
 
 def test_stream_source_schema_cached_per_path(spark, tmp_path):

@@ -127,39 +127,38 @@ def test_transform_and_filters_in_stream(spark, source_dir, tmp_path):
         assert '"k": 87' in r.kafka_message
 
 
-def test_dedup_probe_is_bucket_pruned(spark, tmp_path):
+def test_dedup_probe_is_column_pruned(spark, tmp_path):
     """The per-batch dedup read must NOT rescan the whole sink: the
-    SinkKeyIndex probe is partition-pruned to the batch's buckets and
-    column-pruned to the key columns (reference cost model: indexed
-    NOT-EXISTS, src/oracle_target.py:97-104)."""
-    from dvh_airflow_kafka_spark.streaming.keyindex import BUCKET_COL, SinkKeyIndex
+    SinkKeyIndex probe reads the keys-only sidecar, column-pruned to the
+    key columns (reference cost model: indexed NOT-EXISTS,
+    src/oracle_target.py:97-104)."""
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
     sink = str(tmp_path / "sink")
-    idx = SinkKeyIndex(spark, sink, ["k1"], n_buckets=8)
+    idx = SinkKeyIndex(spark, sink, ["k1"])
     corpus = spark.range(0, 1000).selectExpr("cast(id as string) k1", "id * 2 as payload")
     idx.append(corpus)  # sidecar stores keys only, never payload
     batch = spark.range(0, 3).selectExpr("cast(id as string) k1")
     probe = idx.probe(batch)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     scan = next(line for line in plan.splitlines() if "FileScan" in line)
-    # partition-pruned: a real IN filter on the bucket dirs, not a full scan
-    assert f"PartitionFilters: [{BUCKET_COL}" in scan and " IN (" in scan
     # column-pruned: the payload column never reaches the scan schema
     assert "ReadSchema: struct<k1:string>" in scan
-    # and the pruned read is a strict subset of the index
-    assert 0 < probe.count() < 1000
+    # the probe is the whole sidecar: a superset for any batch
+    assert probe.count() == 1000
 
 
 def test_keyindex_compact_preserves_pruning_and_markers(spark, tmp_path):
-    """Compaction must keep the bucket partition dirs (probe pruning),
-    the epoch markers (crash-replay detection), and the key set."""
+    """Compaction must fold the sidecar to one data file and keep the
+    epoch markers (crash-replay detection), the key set and the
+    column-pruned probe."""
     import os
 
-    from dvh_airflow_kafka_spark.streaming.keyindex import BUCKET_COL, SinkKeyIndex
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
-    idx = SinkKeyIndex(spark, str(tmp_path / "sink"), ["k1"], n_buckets=4)
+    idx = SinkKeyIndex(spark, str(tmp_path / "sink"), ["k1"])
     idx.begin_epoch(0)
-    for chunk in range(3):  # 3 appends -> several files per bucket
+    for chunk in range(3):  # 3 appends -> 3 files, overlapping keys
         idx.append(
             spark.range(chunk * 100, chunk * 100 + 150).selectExpr(
                 "cast(id as string) k1"
@@ -167,22 +166,42 @@ def test_keyindex_compact_preserves_pruning_and_markers(spark, tmp_path):
         )
     before = {r.k1 for r in spark.read.parquet(idx.path).select("k1").collect()}
     idx.compact()
-    dirs = [e for e in os.listdir(idx.path) if e.startswith(f"{BUCKET_COL}=")]
-    assert len(dirs) == 4
-    assert all(
-        sum(f.endswith(".parquet") for f in os.listdir(os.path.join(idx.path, d))) == 1
-        for d in dirs
-    )
+    data = [e for e in os.listdir(idx.path) if e.endswith(".parquet")]
+    assert len(data) == 1
     assert os.path.exists(os.path.join(idx.path, "_attempted_0"))
     assert idx.begin_epoch(0) is True  # marker survived the rewrite
-    after = {r.k1 for r in spark.read.parquet(idx.path).select("k1").collect()}
-    assert after == before  # dedup dropped only exact duplicate keys
+    after = spark.read.parquet(idx.path).select("k1")
+    assert after.count() == len(before)  # exact duplicate keys dropped
+    assert {r.k1 for r in after.collect()} == before
     probe = idx.probe(spark.range(0, 2).selectExpr("cast(id as string) k1"))
     plan = probe._jdf.queryExecution().executedPlan().toString()
-    # pruning intact: a real bucket predicate inside PartitionFilters
-    # (renders as `IN (...)` for several buckets, `= n` for one)
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert BUCKET_COL in pf and pf.strip()
+    assert "ReadSchema: struct<k1:string>" in plan
+
+
+def test_keyindex_flattens_legacy_bucketed_sidecar(spark, tmp_path):
+    """A sidecar written by the earlier hash-bucketed layout is
+    flattened when opened: a parquet read of ``__kidx_bucket=<n>`` dirs
+    plus flat files at the root drops the flat files' rows, so without
+    the conversion the keys appended after an upgrade would vanish from
+    the probe and be admitted again."""
+    import os
+
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
+
+    sink = str(tmp_path / "sink")
+    spark.range(0, 100).select(
+        F.col("id").alias("k"),
+        F.pmod(F.xxhash64("id"), F.lit(4)).cast("int").alias("__kidx_bucket"),
+    ).write.partitionBy("__kidx_bucket").parquet(sink + "__keys")
+    open(os.path.join(sink + "__keys", "_attempted_3"), "w").close()
+
+    idx = SinkKeyIndex(spark, sink, ["k"])
+    idx.append(spark.range(100, 110).select(F.col("id").alias("k")))
+    every = spark.range(0, 110).select(F.col("id").alias("k"))
+    got = {r.k for r in idx.probe(every).collect()}
+    assert got == set(range(110))
+    assert not any(e.startswith("__kidx_bucket=") for e in os.listdir(idx.path))
+    assert idx.begin_epoch(3) is True  # markers carried over
 
 
 def test_keyindex_crash_window_falls_back_to_sink(spark, tmp_path):
@@ -277,7 +296,7 @@ def test_keyindex_recovers_interrupted_compaction_swap(spark, tmp_path):
     from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex, _Fs
 
     sink = str(tmp_path / "sink")
-    idx = SinkKeyIndex(spark, sink, ["event_id"], n_buckets=4)
+    idx = SinkKeyIndex(spark, sink, ["event_id"])
     batch = spark.createDataFrame([(i,) for i in range(50)], "event_id long")
     assert idx.begin_epoch(0) is False
     idx.append(batch)

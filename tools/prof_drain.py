@@ -47,13 +47,6 @@ wrap_method(ki.SinkKeyIndex, "seed")
 
 import dvh_airflow_kafka_spark.streaming.ingest as ing
 wrap_method(ing.HadoopFs, "__init__", "HadoopFs.init")
-orig_wmp = ing._write_monitor_partials
-def wmp(*a, **k):
-    t0 = time.time(); r = orig_wmp(*a, **k)
-    PH["_write_monitor_partials(total)"] += time.time() - t0
-    NC["_write_monitor_partials(total)"] += 1
-    return r
-ing._write_monitor_partials = wmp
 
 from dvh_airflow_kafka_spark.catalog import REGISTRY
 from dvh_airflow_kafka_spark.session import get_spark
