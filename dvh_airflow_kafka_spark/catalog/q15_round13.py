@@ -415,6 +415,7 @@ def erasure_key_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         erase_users,
         run_ingest_pipeline,
     )
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
     from dvh_airflow_kafka_spark.streaming.stateful import read_event_stream
 
     events = load_table(spark, sf_dir, "events").select(
@@ -549,7 +550,7 @@ def erasure_key_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # probe-superset law re-checked against the PURGED sidecar: an
         # admitted key missing from the index would let a redelivery
         # back in — the count must be zero, published as the 0/1 law
-        side = spark.read.parquet(dirs.sink + "__keys").select(*key_cols)
+        side = SinkKeyIndex(spark, dirs.sink, key_cols).stored_keys()
         missing = adm.select(*key_cols).join(
             side, list(key_cols), "anti"
         ).count()

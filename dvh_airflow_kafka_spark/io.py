@@ -17,6 +17,11 @@ the raw ns long), range predicates on it cannot reach the parquet scan —
 only IsNotNull pushes. This is a property of the ns-fixture workaround,
 not the engine: on native µs/INT96 parquet (any production layout, incl.
 everything this engine writes) timestamp filters push down as usual.
+
+This module only reads and writes through Spark.  Driver-side metadata
+operations on a table path (exists, listing, sizes, the rename-aside
+swap that rewrites a directory in place) go through the package's one
+Hadoop FileSystem boundary, ``streaming/fsio.HadoopFs``.
 """
 
 from __future__ import annotations
@@ -197,83 +202,3 @@ def write_bucketed(
             sort_cols = [sort_cols]
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-class HadoopFs:
-    """Thin wrapper over the Hadoop FileSystem API for driver-side
-    metadata operations (rename/exists/delete/size) that must work on
-    whatever store the warehouse actually lives on — HDFS, S3A, local.
-    Driver-local ``os.*`` calls silently see a DIFFERENT filesystem on a
-    real deployment; every path-mutating maintenance operator goes
-    through this instead (same rationale as the streaming key index's
-    marker files, streaming/keyindex.py)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        jvm = spark._jvm
-        self._jpath = jvm.org.apache.hadoop.fs.Path
-        self._path = self._jpath(path)
-        self._fs = self._path.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def exists(self) -> bool:
-        return self._fs.exists(self._path)
-
-    def rename_to(self, dst: "HadoopFs") -> bool:
-        return self._fs.rename(self._path, dst._path)
-
-    def delete(self) -> None:
-        self._fs.delete(self._path, True)
-
-    def total_bytes(self, suffix: str = ".parquet") -> int:
-        """Recursive data-file byte total (footer-exact file sizes)."""
-        total = 0
-        it = self._fs.listFiles(self._path, True)
-        while it.hasNext():
-            st = it.next()
-            if st.getPath().getName().endswith(suffix):
-                total += st.getLen()
-        return total
-
-
-def swap_into_place(spark: SparkSession, tmp_out: str, path: str) -> None:
-    """Replace ``path`` with ``tmp_out`` as atomically as the underlying
-    store allows: rename the old directory aside, rename the new one in,
-    delete the old. Works on HDFS/S3A/local via the Hadoop FS API."""
-    import uuid as _uuid
-
-    old = HadoopFs(spark, path)
-    new = HadoopFs(spark, tmp_out)
-    trash = HadoopFs(spark, f"{path}.__old_{_uuid.uuid4().hex[:8]}")
-    if not old.rename_to(trash):
-        raise IOError(f"rename {path} -> trash failed")
-    if not new.rename_to(old):
-        trash.rename_to(old)  # roll back
-        raise IOError(f"rename {tmp_out} -> {path} failed")
-    trash.delete()
-
-
-def recover_interrupted_swap(spark: SparkSession, path: str) -> bool:
-    """Close :func:`swap_into_place`'s crash window: a failure between
-    the rename-aside and the rename-in leaves ``path`` missing while the
-    previous data sits whole in a ``.__old_*`` sibling. Restores the
-    sibling when the base is missing; returns True if a restore
-    happened. Every maintenance operator calls this before touching the
-    table, so an interrupted rewrite degrades to "the rewrite didn't
-    happen", never to a vanished table."""
-    base = HadoopFs(spark, path)
-    if base.exists():
-        return False
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path
-    parent = jpath(path).getParent()
-    fs = jpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if parent is None or not fs.exists(parent):
-        return False
-    name = path.rstrip("/").rsplit("/", 1)[-1]
-    orphans = sorted(
-        s.getPath().getName()
-        for s in fs.listStatus(parent)
-        if s.getPath().getName().startswith(f"{name}.__old_")
-    )
-    if not orphans:
-        return False
-    return bool(fs.rename(jpath(parent, orphans[0]), jpath(path)))

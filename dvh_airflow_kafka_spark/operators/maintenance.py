@@ -9,29 +9,31 @@ per-file listing, so a million 1 MB files can cost more than the data
 read. These two operators are the standard maintenance pair a lake table
 needs between appends.
 
-No table format (Delta/Iceberg) ships in this environment, so both
-operate on plain parquet directories with a write-to-side → atomic-swap
-protocol; on a real deployment the same call shape maps onto
-``OPTIMIZE`` / ``MERGE INTO``.
+No table format (Delta/Iceberg) ships in this environment, so every
+rewrite here writes to the side and replaces the directory with the one
+rename-aside swap of ``streaming/fsio`` (``HadoopFs.swap``; each
+operator first runs ``HadoopFs.recover``, so a rewrite interrupted
+between the renames degrades to "the rewrite didn't happen", never to a
+vanished table).  On a real deployment the same call shapes map onto
+``OPTIMIZE`` / ``MERGE INTO`` / ``DELETE WHERE``.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
 
-def _swap_into_place(spark: SparkSession, tmp_out: str, path: str) -> None:
-    """Replace ``path`` with ``tmp_out`` as atomically as the underlying
-    store allows — Hadoop FS API, so the swap works on HDFS/S3A, not
-    just a driver-local filesystem view (io.swap_into_place)."""
-    from dvh_airflow_kafka_spark.io import swap_into_place
 
-    swap_into_place(spark, tmp_out, path)
+def _rewrite(spark: SparkSession, out: DataFrame, path: str) -> None:
+    """Write ``out`` beside ``path`` and swap it in."""
+    fs = HadoopFs(spark, path)
+    tmp_out = fs.staging(path)
+    out.write.mode("overwrite").parquet(tmp_out)
+    fs.swap(tmp_out, path)
 
 
 def compact_parquet(
@@ -49,18 +51,15 @@ def compact_parquet(
     pruning) that interleaved appends destroyed. Returns the number of
     files written.
     """
-    from dvh_airflow_kafka_spark.io import HadoopFs, recover_interrupted_swap
-
-    recover_interrupted_swap(spark, path)
-    total = HadoopFs(spark, path).total_bytes()
+    fs = HadoopFs(spark, path)
+    fs.recover(path)
+    total = fs.total_bytes(path)
     n_files = max(1, -(-total // target_file_bytes))  # ceil
     df = spark.read.parquet(path)
     out = df.repartition(n_files)
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
-    tmp_out = f"{path}.__compact_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(tmp_out)
-    _swap_into_place(spark, tmp_out, path)
+    _rewrite(spark, out, path)
     return n_files
 
 
@@ -88,9 +87,7 @@ def merge_upsert(
     every remaining column descending — never ``dropDuplicates``, whose
     survivor depends on partition order and varies run to run.
     """
-    from dvh_airflow_kafka_spark.io import recover_interrupted_swap
-
-    recover_interrupted_swap(spark, target_path)
+    HadoopFs(spark, target_path).recover(target_path)
     order_cols = [version_col] if version_col else []
     order_cols += [c for c in updates.columns if c not in keys and c != version_col]
     if order_cols:
@@ -105,20 +102,15 @@ def merge_upsert(
     target = spark.read.parquet(target_path)
     kept = target.join(last.select(*keys), on=keys, how="left_anti")
     merged = kept.unionByName(last.select(*target.columns))
-    tmp_out = f"{target_path}.__merge_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp_out)
-    _swap_into_place(spark, tmp_out, target_path)
+    _rewrite(spark, merged, target_path)
 
 
 def file_stats(path: str) -> dict:
     """(n_files, total_bytes, min/max file bytes) for a parquet dir —
-    the before/after evidence for compaction."""
-    sizes = [
-        os.path.getsize(os.path.join(dirpath, f))
-        for dirpath, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    ]
+    the before/after evidence for compaction.  Listed through the
+    active session's Hadoop FS, so it sees the same files on any store
+    ``compact_parquet`` sizes from."""
+    sizes = HadoopFs(SparkSession.active(), path).data_file_sizes(path)
     return {
         "n_files": len(sizes),
         "total_bytes": sum(sizes),
@@ -167,9 +159,7 @@ def zorder_layout(
     that is the same cost as any global sort-rewrite — one pass, one
     exchange — and the range partitioner keeps output files evenly
     sized regardless of key skew."""
-    from dvh_airflow_kafka_spark.io import recover_interrupted_swap
-
-    recover_interrupted_swap(spark, path)
+    HadoopFs(spark, path).recover(path)
     df = spark.read.parquet(path)
     mm = df.agg(
         *[F.min(c).cast("double").alias(f"__mn_{c}") for c in cols],
@@ -197,9 +187,7 @@ def zorder_layout(
         .sortWithinPartitions("__z")
         .drop("__z", *[f"__mn_{c}" for c in cols], *[f"__mx_{c}" for c in cols])
     )
-    tmp_out = f"{path}.__zorder_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(tmp_out)
-    _swap_into_place(spark, tmp_out, path)
+    _rewrite(spark, out, path)
 
 
 def column_range_stats(path: str, cols: list[str]) -> dict:
@@ -259,14 +247,10 @@ def delete_where(
     need rewriting (partition-prune the predicate first) — pair with
     ``zorder_layout``/``write_bucketed`` so erasure targets stay
     clustered in few files."""
-    from dvh_airflow_kafka_spark.io import recover_interrupted_swap
-
-    recover_interrupted_swap(spark, path)
+    HadoopFs(spark, path).recover(path)
     df = spark.read.parquet(path)
     total = df.count()
     keep = df.filter(~predicate | predicate.isNull())
     kept = keep.count()
-    tmp_out = f"{path}.__delete_{uuid.uuid4().hex[:8]}"
-    keep.write.mode("overwrite").parquet(tmp_out)
-    _swap_into_place(spark, tmp_out, path)
+    _rewrite(spark, keep, path)
     return total, total - kept

@@ -1,39 +1,62 @@
-"""Hadoop FileSystem bindings for the ingest artifact layer.
+"""The package's one Hadoop FileSystem boundary, and its one swap.
 
-The ingest pipeline's crash-correctness rests on rename-based two-phase
-swaps and sentinel files (``streaming/ingest.py``); the reference gets
-the equivalent atomicity from Oracle transactions
-(src/oracle_target.py:106-115).  Until round 13 only the key sidecar
-(``streaming/keyindex.py``) drove those metadata ops through the Hadoop
-FileSystem API — the rest used driver-local ``os``/``glob``/``shutil``,
-which on an object-store deployment silently no-ops: the markers would
+Every driver-side metadata operation — exists, list, rename, delete,
+marker files, data-file sizes — goes through :class:`HadoopFs`, which
+resolves the filesystem from the path's scheme (``file://``,
+``hdfs://``, ``s3a://``…).  Driver-local ``os``/``glob``/``shutil`` calls
+would see a different filesystem on a real deployment: markers would
 never exist where the executors look, and every "atomic" swap would be
-a local-disk fiction (VERDICT r12 "missing" #1).  This module is the
-single FS boundary the whole artifact layer now goes through: resolve
-the filesystem from the path's scheme (``file://``, ``hdfs://``,
-``s3a://``…) and do every exists/list/rename/delete/marker/read/write
-there.
+a local-disk fiction.
+
+The reference makes each batch atomic with one Oracle commit
+(src/oracle_target.py:83-123).  A parquet directory gets the same
+effect from a rename-aside swap plus recovery, :meth:`HadoopFs.swap` /
+:meth:`HadoopFs.recover`, used by every rewrite-in-place: the
+maintenance operators, the key sidecar's compaction and erasure.
+Invariants:
+
+1. ``swap(new, dst)`` first recovers ``dst``, so the aside-half a
+   completed swap left behind is cleared before the next one starts:
+   at any crash point at most one half of a ``dst`` exists.
+2. The aside-half is the ``.``-prefixed sibling ``.<name>.__old``
+   (:meth:`HadoopFs.aside`), and a replacement is written to the
+   ``.``-prefixed sibling :meth:`HadoopFs.staging` before it is swapped
+   in.  Spark listings, ``has_data`` and batch-dir listings skip
+   ``.``-prefixed names, so neither is read as data — which matters
+   where ``dst`` sits inside a data root (erasure swaps ``sink/<tag>``).
+3. A rename-in that fails (``OSError``) rolls the half back in process.
+   Any other failure is treated as a crash and left for ``recover``.
+
+``recover(dst)``: when ``dst`` exists its halves are leftovers and are
+deleted; when it is missing, its one half is restored.  Two candidate
+halves for a missing ``dst`` raise instead of guessing which is
+newest: only the earlier ``<name>.__old_<hex>`` protocol, whose swap
+never cleared a completed swap's leftover, can leave that state, and
+recovery still accepts that visible name so tears on disk from it heal.
+
+``compact_sink``'s five-root marker protocol (``streaming/ingest.py``)
+is deliberately a second protocol: it is all-or-nothing across roots,
+which a per-directory swap cannot express.
 
 Atomic-rename contract: directory rename is atomic on HDFS-semantics
 stores (HDFS, local file://, ABFS, GCS connector); on S3A it is a
-non-atomic copy+delete.  The swap protocols remain CRASH-CONSISTENT
-there too — every swap is marker-guarded and rolled back/forward on
-recovery, so a torn copy is healed, not read — but the single-writer
-assumption becomes load-bearing: two concurrent drains on raw S3
+non-atomic copy+delete.  The swap stays CRASH-CONSISTENT there too —
+a torn copy is healed by recovery, not read — but the single-writer
+assumption becomes load-bearing: two concurrent writers on raw S3
 could interleave inside a swap.  Deployments there should front the
-sink with a rename-atomic layer; the module makes that requirement a
-documented contract instead of a silent local-only behavior.
-
-Note Hadoop's rename semantics differ from POSIX ``os.rename``: when
-the destination is an EXISTING directory, the source is moved INSIDE
-it (``mv`` semantics).  Every caller in this package renames onto a
-destination it has just verified or made absent; ``rename`` asserts
-the invariant loudly instead of nesting silently.
+sink with a rename-atomic layer.
 """
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import SparkSession
+
+
+def _split(path: str) -> tuple[str, str]:
+    parent, name = posixpath.split(path.rstrip("/"))
+    return parent or ".", name
 
 
 class HadoopFs:
@@ -90,10 +113,9 @@ class HadoopFs:
 
     def rename(self, src: str, dst: str) -> None:
         """Atomic move (on HDFS-semantics stores).  The destination must
-        NOT exist — Hadoop would otherwise move ``src`` INSIDE an
-        existing directory; every swap protocol in this package clears
-        the destination first, so an existing one is a protocol bug and
-        raises instead of nesting silently."""
+        NOT exist: unlike POSIX ``os.rename``, Hadoop moves ``src``
+        INSIDE an existing directory, so an existing one raises instead
+        of nesting silently."""
         if self._fs.exists(self._p(dst)):
             raise FileExistsError(f"rename destination exists: {dst}")
         if not self._fs.rename(self._p(src), self._p(dst)):
@@ -102,6 +124,72 @@ class HadoopFs:
     def delete(self, path: str) -> None:
         """Recursive delete; missing paths are a no-op."""
         self._fs.delete(self._p(path), True)
+
+    # -- the rename-aside swap -------------------------------------------
+    @staticmethod
+    def aside(dst: str) -> str:
+        """Where ``swap`` parks the old ``dst`` between its renames."""
+        parent, name = _split(dst)
+        return posixpath.join(parent, f".{name}.__old")
+
+    @staticmethod
+    def staging(dst: str) -> str:
+        """Where a replacement for ``dst`` is written before ``swap``
+        moves it in.  One fixed name per ``dst``: write it with
+        ``mode("overwrite")`` and a crashed write's leftover is replaced
+        by the next one."""
+        parent, name = _split(dst)
+        return posixpath.join(parent, f".{name}.__new")
+
+    def swap(self, new: str, dst: str) -> None:
+        """Replace ``dst`` (which may be absent) with ``new``: recover
+        ``dst``, rename it aside, rename ``new`` in, delete the aside
+        half.  See the module docstring for the invariants."""
+        self.recover(dst)
+        half = self.aside(dst)
+        moved = self.exists(dst)
+        if moved:
+            self.rename(dst, half)
+        try:
+            self.rename(new, dst)
+        except OSError:
+            if moved:
+                self.rename(half, dst)
+            raise
+        self.delete(half)
+
+    def recover(self, dst: str) -> bool:
+        """Heal ``dst`` after a crash inside ``swap``; True when a half
+        was restored.  Raises when ``dst`` is missing and more than one
+        half could be its last copy."""
+        parent, name = _split(dst)
+        halves = [
+            posixpath.join(parent, n)
+            for n in self.list_names(parent)
+            if n == f".{name}.__old" or n.startswith(f"{name}.__old_")
+        ]
+        if not halves:
+            return False
+        if self.exists(dst):
+            for half in halves:
+                self.delete(half)
+            return False
+        if len(halves) > 1:
+            raise RuntimeError(
+                f"{dst} is missing and {len(halves)} swap halves could be "
+                f"its last copy ({sorted(halves)}); restore one by hand"
+            )
+        self.rename(halves[0], dst)
+        return True
+
+    def torn_swaps(self, root: str) -> list[str]:
+        """The ``dst`` paths directly under ``root`` that have an
+        aside-half (pass each to ``recover``)."""
+        return [
+            posixpath.join(root, n[1 : -len(".__old")])
+            for n in self.list_names(root)
+            if n.startswith(".") and n.endswith(".__old")
+        ]
 
     # -- listing ---------------------------------------------------------
     def list_names(self, path: str) -> list[str]:
@@ -122,6 +210,23 @@ class HadoopFs:
         ]
         out.sort()
         return out
+
+    def data_file_sizes(self, path: str) -> list[int]:
+        """Byte sizes of the parquet files under ``path``, recursively
+        (footer-exact lengths); [] when ``path`` is missing."""
+        p = self._p(path)
+        if not self._fs.exists(p):
+            return []
+        sizes = []
+        it = self._fs.listFiles(p, True)
+        while it.hasNext():
+            st = it.next()
+            if st.getPath().getName().endswith(".parquet"):
+                sizes.append(st.getLen())
+        return sizes
+
+    def total_bytes(self, path: str) -> int:
+        return sum(self.data_file_sizes(path))
 
     # -- small control files (markers carrying JSON payloads) -------------
     def write_text(self, path: str, text: str) -> None:

@@ -50,15 +50,17 @@ from Oracle transactions:
   candidate-union + exact-verify over the partials reproduce the batch
   sketches over the full admitted set exactly (see
   ``catalog/q13_round11.streaming_ingest_capstone`` for the laws).
-- **Object-store-portable artifact layer (round 13, VERDICT r12
-  "missing" #1)**: every listing, rename, sentinel, and control file in
-  this module goes through ``streaming/fsio.HadoopFs`` — the same
-  Hadoop FileSystem boundary the key sidecar already used — so the
-  two-phase swaps and crash markers exist on whatever store the
+- **Object-store-portable artifact layer**: every listing, rename,
+  sentinel, and control file in this module goes through
+  ``streaming/fsio.HadoopFs``, the package's one Hadoop FileSystem
+  boundary, so the swaps and crash markers exist on whatever store the
   ``work_dir`` URI names (HDFS, ``file://``, S3A…), not just the
-  driver's local disk.  ``work_dir``/``checkpoint_dir`` may be plain
-  absolute paths or URIs.  See ``fsio``'s module docstring for the
-  rename-atomicity contract per store class.
+  driver's local disk.  Erasure replaces dirs with its one
+  ``HadoopFs.swap`` / ``HadoopFs.recover`` pair; ``compact_sink`` keeps
+  its own all-roots marker protocol.  ``work_dir``/``checkpoint_dir``
+  may be plain absolute paths or URIs.  See ``fsio``'s module docstring
+  for the swap invariants and the rename-atomicity contract per store
+  class.
 - **Persisted epoch contract (round 13, VERDICT r12 item 5)**: the
   ``epoch_offset`` a drain starts with is written to a control file
   keyed by its checkpoint path; a RESUMED drain verifies the caller's
@@ -381,13 +383,13 @@ def _monitor_partial_thunks(
 
 
 # --------------------------------------------------------------------------
-# Erasure swap bookkeeping.  Every dir ``erase_users`` replaces goes
-# through ONE trash root with destination-encoding entry names, so a
-# crash anywhere mid-swap is healed at the next entry point: destination
-# missing -> restore the original (re-running the erasure then redoes
-# it); destination present -> the swap completed, drop the leftover.
-# The trash lives OUTSIDE the data roots so a torn swap can never make a
-# ``b*`` listing raise or a reader see a half-state (ADVICE r12 #1).
+# Erasure swap recovery.  ``erase_users`` replaces dirs with
+# ``HadoopFs.swap``, whose aside-half is a hidden sibling of the dir it
+# replaces (``sink/.b00003.__old``): no listing or reader sees it, and a
+# crash anywhere mid-swap is healed at the next entry point.  Earlier
+# releases parked the old dir in ONE trash root with destination-encoding
+# entry names instead; that layout is still healed here, and
+# ``_erase_trash_dst`` is its one reader.
 # --------------------------------------------------------------------------
 _ERASE_TRASH = "__erase_trash"
 
@@ -403,6 +405,9 @@ def _erase_trash_dst(dirs: "IngestDirs", name: str) -> str:
 
 
 def _recover_erase_swaps(fs: HadoopFs, dirs: "IngestDirs") -> None:
+    for root in (dirs.work_dir, dirs.sink, dirs.bits_cum):
+        for dst in fs.torn_swaps(root):
+            fs.recover(dst)
     trash = os.path.join(dirs.work_dir, _ERASE_TRASH)
     for name, path in fs.list_children(trash):
         dst = _erase_trash_dst(dirs, name)
@@ -410,20 +415,6 @@ def _recover_erase_swaps(fs: HadoopFs, dirs: "IngestDirs") -> None:
             fs.delete(path)  # swap completed; the leftover is redundant
         else:
             fs.rename(path, dst)  # swap torn: restore the original
-    fs.delete(trash)
-
-
-def _swap_in(fs: HadoopFs, dirs: "IngestDirs", new: str, dst: str, trash_name: str) -> None:
-    """Replace ``dst`` with ``new`` crash-consistently: rename the old
-    dir into the trash under its destination-encoding name, rename the
-    new one in, drop the trash entry.  Any tear heals in
-    ``_recover_erase_swaps``."""
-    trash_root = os.path.join(dirs.work_dir, _ERASE_TRASH)
-    fs.mkdirs(trash_root)
-    trash = os.path.join(trash_root, trash_name)
-    if fs.exists(dst):
-        fs.rename(dst, trash)
-    fs.rename(new, dst)
     fs.delete(trash)
 
 
@@ -502,10 +493,12 @@ def erase_users(
       ``initial_bits`` to rebuild into (raises otherwise).
 
     Crash story: IDEMPOTENT, not transactional — re-running with the
-    same ``erased_users`` converges, and every dir swap goes through
-    the ``__erase_trash`` protocol healed at each entry point
-    (``_recover_erase_swaps``), so a crash can never strand a torn
-    name inside a data root.  Returns ``{"affected_batches",
+    same ``erased_users`` converges.  Every dir is rewritten to its
+    ``HadoopFs.staging`` sibling and replaced with ``HadoopFs.swap``
+    (``streaming/fsio``), whose hidden aside-half no reader lists; a
+    torn swap is healed at each entry point (``_recover_erase_swaps``:
+    here, in ``compact_sink`` and at ``run_ingest_pipeline`` start).
+    Returns ``{"affected_batches",
     "rows_erased", "initial_rows_erased"}``."""
     fs = dirs.fs(spark)
     _recover_erase_swaps(fs, dirs)
@@ -517,9 +510,6 @@ def erase_users(
     )
     stats = {"affected_batches": 0, "rows_erased": 0, "initial_rows_erased": 0}
     gone_keys: list[DataFrame] = []
-
-    tmp = os.path.join(dirs.work_dir, f"__erase_tmp_{uuid.uuid4().hex[:8]}")
-    fs.mkdirs(tmp)
 
     init = spark.read.parquet(dirs.initial)
     if purge_keys:
@@ -534,9 +524,9 @@ def erase_users(
     n_init = init.join(er, "user_id", "semi").count()
     if n_init:
         cow = os.path.join(dirs.work_dir, "initial_erased")
-        out = os.path.join(tmp, "initial_rows")
-        init.join(er, "user_id", "anti").write.parquet(out)
-        _swap_in(fs, dirs, out, cow, "initial")
+        out = fs.staging(cow)
+        init.join(er, "user_id", "anti").write.mode("overwrite").parquet(out)
+        fs.swap(out, cow)
         dirs.initial = cow
         stats["initial_rows_erased"] = n_init
 
@@ -564,7 +554,7 @@ def erase_users(
             (overlapped) → swap.  Returns (rows_erased, gone_keys_frame).
             Self-contained so the TAGS themselves can overlap (guide
             §2.6): each tag touches only its own sink/partial dirs and
-            its own uniquely-named trash entry, and the
+            its own swap halves, and the
             partials-before-own-swap crash contract (docstring step 3)
             holds per tag exactly as it did sequentially — a crash mid-
             fleet leaves some tags swapped and some not, the same states
@@ -595,7 +585,7 @@ def erase_users(
                 .localCheckpoint()
             )
             n_erased = int(o_before.get["n"]) - int(o_kept.get["n"])
-            out = os.path.join(tmp, tag)
+            out = fs.staging(bdir)
 
             # rewritten rows + the three partials all derive from the
             # checkpointed ``kept`` and are independent writes — overlap
@@ -603,7 +593,7 @@ def erase_users(
             # the partials-before-swap crash contract (docstring step 3)
             # is preserved
             def _rows_out() -> None:
-                kept.write.parquet(out)
+                kept.write.mode("overwrite").parquet(out)
 
             _run_concurrent(
                 [_rows_out]
@@ -611,7 +601,7 @@ def erase_users(
                     kept, dirs, tag, mg_k, int(o_kept.get["n_tok"])
                 )
             )
-            _swap_in(fs, dirs, out, bdir, f"sink__{tag}")
+            fs.swap(out, bdir)
             return n_erased, gone
 
         # 2-3 tags in flight is plenty (guide §2.6) — enough to back-fill
@@ -634,13 +624,7 @@ def erase_users(
                 gone_keys.append(gone)
 
     if purge_keys:
-        _purge_key_material(
-            spark, fs, dirs, gone_keys, key_cols, tmp
-        )
-    fs.delete(tmp)
-    # every swap completed (each deleted its own trash entry) — drop
-    # the now-empty trash root so its absence signals a clean state
-    fs.delete(os.path.join(dirs.work_dir, _ERASE_TRASH))
+        _purge_key_material(spark, fs, dirs, gone_keys, key_cols)
     return stats
 
 
@@ -650,14 +634,13 @@ def _purge_key_material(
     dirs: IngestDirs,
     gone_keys: list[DataFrame],
     key_cols: list,
-    tmp: str,
 ) -> None:
     """The ``purge_keys=True`` arm of ``erase_users``: compact the key
     sidecar minus the erased keys, then rebuild the Bloom gate from the
     purged sidecar and swap it over the NEWEST ``bits_cum`` snapshot
     (the only one any future batch reads) — or over a work_dir-owned
-    ``initial_bits`` when no batch has committed yet.  Both swaps are
-    crash-consistent via the erase-trash protocol."""
+    ``initial_bits`` when no batch has committed yet.  Both are
+    ``HadoopFs.swap`` replacements, healed like every erase swap."""
     from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
     gone = None
@@ -683,26 +666,16 @@ def _purge_key_material(
     gone = gone.distinct().localCheckpoint()
     kidx = SinkKeyIndex(spark, dirs.sink, key_cols)
     kidx.compact(purge=gone)
-    if kidx.has_data():
-        sidecar_keys = (
-            spark.read.parquet(kidx.path).select(*key_cols).distinct()
-        )
-    else:
+    sidecar_keys = kidx.stored_keys()
+    if sidecar_keys is None:
         # no drain has seeded/appended yet: rebuild from the erased
         # initial directly (same superset, no index to read)
-        sidecar_keys = (
-            spark.read.parquet(dirs.initial).select(*key_cols).distinct()
-        )
-    new_bits = build_bloom(sidecar_keys, _ingest_key(key_cols))
-    if cum:
-        tag = cum[-1].rstrip("/").rsplit("/", 1)[-1]
-        out = os.path.join(tmp, f"bits_{tag}")
-        new_bits.write.parquet(out)
-        _swap_in(fs, dirs, out, cum[-1], f"bitscum__{tag}")
-    else:
-        out = os.path.join(tmp, "initial_bits")
-        new_bits.write.parquet(out)
-        _swap_in(fs, dirs, out, owned_init_bits, "initialbits")
+        sidecar_keys = spark.read.parquet(dirs.initial).select(*key_cols)
+    new_bits = build_bloom(sidecar_keys.distinct(), _ingest_key(key_cols))
+    dst = cum[-1] if cum else owned_init_bits
+    out = fs.staging(dst)
+    new_bits.write.mode("overwrite").parquet(out)
+    fs.swap(out, dst)
 
 
 _COMPACT_SENTINEL = "_COMPACTED"
@@ -793,6 +766,9 @@ def compact_sink(
     crashes for the pytest ('after_tmp', 'mid_swap')."""
     fs = dirs.fs(spark)
     recover_sink_compaction(spark, dirs)
+    # a torn erase swap leaves a batch dir missing from the listings:
+    # consolidating without it would drop its rows
+    _recover_erase_swaps(fs, dirs)
     bdirs = _batch_dirs(fs, dirs.sink)
     if len(bdirs) < 2:
         return {"compacted_dirs": 0, "tag": None}

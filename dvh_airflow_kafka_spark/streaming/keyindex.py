@@ -39,7 +39,13 @@ batch is O(sink) and every normal batch reads only the keys-only sidecar
 The sidecar tolerates duplicate keys (replays may append a key twice);
 the anti-join deduplicates the probe side, so duplicates cost bytes, not
 correctness; compaction drops them. Compaction carries the epoch and
-seed markers over.
+seed markers over.  Its rename swap is ``streaming/fsio``'s one
+``HadoopFs.swap``, and every entry point (``seed``, ``begin_epoch``,
+opening the sidecar) first runs ``HadoopFs.recover``: a crash between
+the swap's renames would otherwise leave no sidecar, and a probe of
+"no index" would admit duplicates.  All marker, listing and rename
+bookkeeping goes through the same FS boundary, so it works on whatever
+store the sink lives on.
 
 A sidecar written by the earlier bucketed layout (``__kidx_bucket=<n>``
 partition dirs) is flattened once when it is opened: a parquet read of
@@ -53,61 +59,11 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+
 # partition-dir prefix of the earlier hash-bucketed sidecar layout; read
 # only to flatten such a sidecar when it is opened
 _LEGACY_BUCKET_PREFIX = "__kidx_bucket="
-
-
-class _Fs:
-    """Thin wrapper over the Hadoop FileSystem API for the sidecar's
-    marker/listing/rename bookkeeping. The sink and index data already go
-    through Spark; driving the metadata ops through
-    ``Path.getFileSystem`` makes the crash-replay machinery work on any
-    store the deployment writes to (HDFS, S3A, local ``file://``) instead
-    of silently no-opping off-box — on a driver-local ``os.*`` view of an
-    object store the markers would never exist and every probe would
-    degrade to "no index"."""
-
-    def __init__(self, spark: SparkSession, base: str) -> None:
-        jvm = spark._jvm
-        self._jpath = jvm.org.apache.hadoop.fs.Path
-        self._base = self._jpath(base)
-        self._fs = self._base.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def child(self, name: str):
-        return self._jpath(self._base, name)
-
-    def exists(self, path=None) -> bool:
-        return self._fs.exists(path if path is not None else self._base)
-
-    def mkdirs(self) -> None:
-        self._fs.mkdirs(self._base)
-
-    def touch(self, path) -> bool:
-        return self._fs.createNewFile(path)
-
-    def names(self) -> list[str]:
-        if not self.exists():
-            return []
-        return [s.getPath().getName() for s in self._fs.listStatus(self._base)]
-
-    def sibling_names(self) -> list[str]:
-        """Entries next to the base dir (used to find orphaned swap
-        halves after a crash mid-compaction)."""
-        parent = self._base.getParent()
-        if parent is None or not self._fs.exists(parent):
-            return []
-        return [s.getPath().getName() for s in self._fs.listStatus(parent)]
-
-    def rename_sibling_to_base(self, name: str) -> bool:
-        parent = self._base.getParent()
-        return self._fs.rename(self._jpath(parent, name), self._base)
-
-    def rename_to(self, dst: "_Fs") -> bool:
-        return self._fs.rename(self._base, dst._base)
-
-    def delete(self) -> None:
-        self._fs.delete(self._base, True)
 
 
 class SinkKeyIndex:
@@ -123,7 +79,7 @@ class SinkKeyIndex:
         self.spark = spark
         self.path = sink_path.rstrip("/") + "__keys"
         self.keys = list(keys)
-        self._fs = _Fs(spark, self.path)
+        self._fs = HadoopFs(spark, self.path)
         # sidecar schema is fixed after the first write (the key
         # columns); cache it so per-batch probes skip the driver-side
         # footer-inference pass (guide §6)
@@ -137,29 +93,12 @@ class SinkKeyIndex:
         root drops the flat files' rows, and those missing keys would be
         admitted as new. ``compact`` does the rewrite (it reads the key
         columns only, so the bucket column falls away)."""
-        self._recover_interrupted_swap()
-        if any(n.startswith(_LEGACY_BUCKET_PREFIX) for n in self._fs.names()):
+        self._fs.recover(self.path)
+        if any(
+            n.startswith(_LEGACY_BUCKET_PREFIX)
+            for n in self._fs.list_names(self.path)
+        ):
             self.compact()
-
-    def _recover_interrupted_swap(self) -> None:
-        """Close the compaction crash window: ``compact`` swaps with
-        rename-aside → rename-in, and a crash BETWEEN the renames leaves
-        no base dir while the old index sits in a ``.__old_*`` sibling.
-        Without recovery the next probe would see "no index", skip the
-        sink probe, and silently admit duplicates — so before any epoch
-        work, if the base is missing but a swap half exists, restore it
-        (the conservative choice: the old pre-compaction index is always
-        a correct superset probe)."""
-        if self._fs.exists():
-            return
-        base_name = self.path.rstrip("/").rsplit("/", 1)[-1]
-        orphans = sorted(
-            n
-            for n in self._fs.sibling_names()
-            if n.startswith(f"{base_name}.__old_")
-        )
-        if orphans:
-            self._fs.rename_sibling_to_base(orphans[0])
 
     def seed(self, keys: DataFrame) -> None:
         """Idempotently seed the sidecar with a pre-existing sink's keys
@@ -170,14 +109,13 @@ class SinkKeyIndex:
         sidecar is safe to wipe and rebuild.  After the marker exists
         the sidecar is never wiped (``compact`` carries the marker
         over)."""
-        self._recover_interrupted_swap()
-        marker = self._fs.child("_seeded")
-        if self._fs.exists() and self._fs.exists(marker):
+        self._fs.recover(self.path)
+        marker = f"{self.path}/_seeded"
+        if self._fs.exists(marker):
             return
-        if self._fs.exists():
-            self._fs.delete()
+        self._fs.delete(self.path)
         self.append(keys)
-        self._fs.mkdirs()
+        self._fs.mkdirs(self.path)
         self._fs.touch(marker)
 
     def begin_epoch(self, epoch_id: int) -> bool:
@@ -185,9 +123,9 @@ class SinkKeyIndex:
         prior attempt exists — the caller must then probe the sink itself
         (the prior attempt may have appended to the sink without reaching
         the sidecar append)."""
-        self._recover_interrupted_swap()
-        self._fs.mkdirs()
-        marker = self._fs.child(f"_attempted_{epoch_id}")
+        self._fs.recover(self.path)
+        self._fs.mkdirs(self.path)
+        marker = f"{self.path}/_attempted_{epoch_id}"
         if self._fs.exists(marker):
             return True
         self._fs.touch(marker)
@@ -199,10 +137,16 @@ class SinkKeyIndex:
         is a legacy bucket dir."""
         return any(
             n.startswith(_LEGACY_BUCKET_PREFIX) or not n.startswith(("_", "."))
-            for n in self._fs.names()
+            for n in self._fs.list_names(self.path)
         )
 
-    def _read(self) -> DataFrame:
+    def stored_keys(self) -> Optional[DataFrame]:
+        """Every key the sidecar holds (duplicates included), or None
+        when it holds none.  The one read of the sidecar: it is
+        column-pruned to the key columns, and, once the key schema is
+        cached, building the frame runs no job."""
+        if not self.has_data():
+            return None
         if self._schema is None:
             self._schema = (
                 self.spark.read.parquet(self.path).select(*self.keys).schema
@@ -215,13 +159,10 @@ class SinkKeyIndex:
 
     def probe(self, batch: DataFrame) -> Optional[DataFrame]:
         """Existing-keys frame for ``batch``'s anti-join, or None when the
-        index holds no data. It is the whole sidecar, column-pruned to
-        the key columns: with no bucket layout there is nothing to prune
-        by ``batch``'s keys, and, once the key schema is cached, building
-        the frame runs no job."""
-        if not self.has_data():
-            return None
-        return self._read()
+        index holds no data. It is the whole sidecar (``stored_keys``):
+        with no bucket layout there is nothing to prune by ``batch``'s
+        keys."""
+        return self.stored_keys()
 
     def append(self, fresh: DataFrame) -> None:
         """Append the just-written rows' keys as ONE file: a narrow
@@ -250,33 +191,21 @@ class SinkKeyIndex:
         stays a superset of the (erased) sink's keys because the erased
         rows are gone from the sink too; a re-delivered erased message
         is then ADMITTED by design — the caller chooses that policy."""
-        import uuid
-
-        self._recover_interrupted_swap()
-        # clear stale swap halves from an earlier interrupted compaction
-        base_name = self.path.rstrip("/").rsplit("/", 1)[-1]
-        for n in self._fs.sibling_names():
-            if n.startswith(f"{base_name}.__compact_") or n.startswith(
-                f"{base_name}.__old_"
-            ):
-                _Fs(self.spark, f"{self.path.rsplit('/', 1)[0]}/{n}").delete()
-        if not self.has_data():
+        stored = self.stored_keys()
+        if stored is None:
             return
-        idx = self._read().distinct()
+        idx = stored.distinct()
         if purge is not None:
             idx = idx.join(
                 purge.select(*self.keys).distinct(), self.keys, "anti"
             )
-        tmp = _Fs(self.spark, f"{self.path}.__compact_{uuid.uuid4().hex[:8]}")
-        idx.coalesce(1).write.mode("overwrite").parquet(tmp._base.toString())
+        tmp = self._fs.staging(self.path)
+        idx.coalesce(1).write.mode("overwrite").parquet(tmp)
         # carry the epoch + seed markers over: losing ``_attempted_``
         # would blind crash-replay detection; losing ``_seeded`` would
         # make the next ``seed()`` call wipe the (batch-key-bearing!)
         # sidecar and rebuild it initial-keys-only — silent duplicates
-        for entry in self._fs.names():
+        for entry in self._fs.list_names(self.path):
             if entry.startswith("_attempted_") or entry == "_seeded":
-                tmp.touch(tmp.child(entry))
-        trash = _Fs(self.spark, f"{self.path}.__old_{uuid.uuid4().hex[:8]}")
-        self._fs.rename_to(trash)
-        tmp.rename_to(self._fs)
-        trash.delete()
+                self._fs.touch(f"{tmp}/{entry}")
+        self._fs.swap(tmp, self.path)

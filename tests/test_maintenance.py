@@ -3,6 +3,7 @@ shrink, matched keys replaced, unmatched appended."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dvh_airflow_kafka_spark.io import load_table
@@ -121,27 +122,114 @@ def test_maintenance_recovers_interrupted_swap(spark, sf_dir, tmp_path):
     happen', never to a vanished table."""
     from pyspark.sql import functions as F
 
-    from dvh_airflow_kafka_spark.io import (
-        HadoopFs,
-        load_table,
-        recover_interrupted_swap,
-    )
+    from dvh_airflow_kafka_spark.io import load_table
     from dvh_airflow_kafka_spark.operators.maintenance import compact_parquet
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
     path = str(tmp_path / "ev")
     ev.write.parquet(path)
     n = spark.read.parquet(path).count()
+    fs = HadoopFs(spark, path)
     # simulate: base renamed aside, replacement never landed
-    assert HadoopFs(spark, path).rename_to(
-        HadoopFs(spark, path + ".__old_cafe01")
-    )
-    assert not HadoopFs(spark, path).exists()
-    assert recover_interrupted_swap(spark, path) is True
+    fs.rename(path, path + ".__old_cafe01")
+    assert not fs.exists(path)
+    assert fs.recover(path) is True
     assert spark.read.parquet(path).count() == n
     # the maintenance ops self-heal: rename aside again, then compact
-    assert HadoopFs(spark, path).rename_to(
-        HadoopFs(spark, path + ".__old_cafe02")
-    )
+    fs.rename(path, fs.aside(path))
     compact_parquet(spark, path, target_file_bytes=1 << 30)
     assert spark.read.parquet(path).count() == n
+
+
+class _Crash(Exception):
+    """A process death, as seen by the code it interrupts: not an
+    ``OSError``, so ``swap`` does not roll back in process."""
+
+
+def _ids(spark, path):
+    return sorted(r.id for r in spark.read.parquet(path).collect())
+
+
+def test_swap_recovery_restores_newest_copy(spark, tmp_path, monkeypatch):
+    """A completed rewrite whose aside-half survived, an append, then a
+    swap crashed between its renames: recovery must bring back the
+    newest copy, never the stale half of the earlier rewrite."""
+    from dvh_airflow_kafka_spark.operators.maintenance import delete_where
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+
+    path = str(tmp_path / "t")
+    spark.range(10).write.parquet(path)
+    fs = HadoopFs(spark, path)
+    real_delete, real_rename = HadoopFs.delete, HadoopFs.rename
+
+    # 1. a delete_where rewrite to ids 5-9 completes, but the process
+    #    dies before its aside-half (ids 0-9) is deleted
+    monkeypatch.setattr(
+        HadoopFs,
+        "delete",
+        lambda self, p: None if p == fs.aside(path) else real_delete(self, p),
+    )
+    delete_where(spark, path, F.col("id") < 5)
+    monkeypatch.undo()
+    assert fs.exists(fs.aside(path)) and _ids(spark, path) == list(range(5, 10))
+
+    # 2. ids 10-14 are appended
+    spark.range(10, 15).write.mode("append").parquet(path)
+
+    # 3. the next swap dies after its rename-aside, before the rename-in
+    def crash_on_rename_in(self, src, dst):
+        if dst == path:
+            raise _Crash()
+        real_rename(self, src, dst)
+
+    new = fs.staging(path)
+    spark.read.parquet(path).coalesce(1).write.mode("overwrite").parquet(new)
+    monkeypatch.setattr(HadoopFs, "rename", crash_on_rename_in)
+    with pytest.raises(_Crash):
+        fs.swap(new, path)
+    monkeypatch.undo()
+    assert not fs.exists(path)
+
+    assert fs.recover(path) is True
+    assert _ids(spark, path) == list(range(5, 15))
+    halves = [n for n in fs.list_names(str(tmp_path)) if "__old" in n]
+    assert halves == []
+
+
+def test_swap_rolls_back_failed_rename_in(spark, tmp_path, monkeypatch):
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    fs = HadoopFs(spark, path)
+    real_rename = HadoopFs.rename
+
+    def fail_rename_in(self, src, dst):
+        if dst == path and src != fs.aside(path):
+            raise OSError("rename failed")
+        real_rename(self, src, dst)
+
+    new = fs.staging(path)
+    spark.range(7).write.parquet(new)
+    monkeypatch.setattr(HadoopFs, "rename", fail_rename_in)
+    with pytest.raises(OSError):
+        fs.swap(new, path)
+    monkeypatch.undo()
+    assert _ids(spark, path) == [0, 1, 2]
+    assert not fs.exists(fs.aside(path))
+
+
+def test_swap_recovery_refuses_to_guess(spark, tmp_path):
+    """A missing table with two aside-halves (only the earlier
+    ``<name>.__old_<hex>`` protocol leaves that) raises: either half
+    could be the last copy."""
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+
+    path = str(tmp_path / "t")
+    spark.range(10).write.parquet(path + ".__old_00aa0000")
+    spark.range(5, 15).write.parquet(path + ".__old_ff110000")
+    fs = HadoopFs(spark, path)
+    with pytest.raises(RuntimeError, match="swap halves"):
+        fs.recover(path)
+    assert not fs.exists(path)

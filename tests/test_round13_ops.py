@@ -6,7 +6,8 @@
   drain works end-to-end on a ``file://``-URI work_dir;
 - a stray non-``b<digits>`` entry in a data root can no longer crash
   the listings (ADVICE r12 #1), and erase-swap tears heal at every
-  entry point through the destination-encoded ``__erase_trash``;
+  entry point, both those of ``fsio.HadoopFs.swap`` (a hidden sibling
+  half) and those of the earlier destination-encoded ``__erase_trash``;
 - erasure PERSISTS across runs: a later drain on the same work_dir
   reads the erased copy-on-write initial (ADVICE r12 #2);
 - the epoch contract is persisted per checkpoint: wrong offset on
@@ -165,6 +166,85 @@ def test_erase_swap_recovery_heals_torn_sink_dir(spark, tmp_path):
     os.makedirs(os.path.join(trash, f"sink__{tag}"))
     erase_users(spark, dirs, spark.createDataFrame([(1,)], "user_id long"))
     assert not os.path.exists(trash)
+    assert sorted(map(tuple, dirs.admitted(spark, init).collect())) == after
+
+
+def test_erase_swap_torn_inside_swap_heals_at_every_entry(
+    spark, tmp_path, monkeypatch
+):
+    """A ``sink/<tag>`` swap torn through ``HadoopFs.swap`` (the process
+    dies after the rename-aside): no reader sees the hidden half, and
+    ``erase_users``, ``run_ingest_pipeline`` and ``compact_sink`` each
+    heal it on entry."""
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+    from dvh_airflow_kafka_spark.streaming.ingest import (
+        _batch_dirs,
+        compact_sink,
+        erase_users,
+    )
+
+    class Crash(Exception):  # not an OSError: no in-process rollback
+        pass
+
+    src = str(tmp_path / "src")
+    # two source files -> two batches; users 0-2 only in the first
+    _mk_events(spark, [_row(i, i % 3) for i in range(9)]).coalesce(1).write.parquet(src)
+    time.sleep(1.1)  # the file source orders by modification time
+    _mk_events(spark, [_row(20 + i, 5) for i in range(4)]).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    work, ck = str(tmp_path / "w"), str(tmp_path / "ck")
+    initial = _mk_events(spark, [_row(900 + i, 10 + i) for i in range(3)])
+    dirs = _run(spark, src, work, ck, initial)
+    init = spark.read.parquet(dirs.initial)
+    fs = HadoopFs(spark, work)
+    first, second = _batch_dirs(fs, dirs.sink)
+    before = sorted(map(tuple, dirs.admitted(spark, init).collect()))
+
+    real_rename = HadoopFs.rename
+
+    def crash_on_rename_in(self, s, d):
+        if d == first:
+            raise Crash()
+        real_rename(self, s, d)
+
+    def torn_erase(user):
+        monkeypatch.setattr(HadoopFs, "rename", crash_on_rename_in)
+        with pytest.raises(Crash):
+            erase_users(spark, dirs, spark.createDataFrame([(user,)], "user_id long"))
+        monkeypatch.undo()
+        assert not fs.exists(first) and fs.exists(fs.aside(first))
+        # the half holds rows, yet neither a recursive read of the sink
+        # root nor the batch listing sees them
+        assert spark.read.parquet(fs.aside(first)).count() > 0
+        n_second = spark.read.parquet(second).count()
+        sink_rows = spark.read.option("recursiveFileLookup", "true").parquet(
+            dirs.sink
+        )
+        assert sink_rows.count() == n_second
+        assert _batch_dirs(fs, dirs.sink) == [second]
+
+    # torn, then healed at erase_users entry; the erase then completes
+    torn_erase(1)
+    stats = erase_users(spark, dirs, spark.createDataFrame([(1,)], "user_id long"))
+    assert stats["rows_erased"] == 3
+    after = sorted(map(tuple, dirs.admitted(spark, init).collect()))
+    assert after == [t for t in before if t[7] != 1]  # user_id col
+    assert not fs.exists(fs.aside(first))
+
+    # torn again, then healed at run_ingest_pipeline start: the resumed
+    # drain reads the pre-erase copy of the batch back
+    torn_erase(2)
+    dirs = _run(spark, src, work, ck, initial)
+    assert _batch_dirs(fs, dirs.sink) == [first, second]
+    assert not fs.exists(fs.aside(first))
+    assert sorted(map(tuple, dirs.admitted(spark, init).collect())) == after
+
+    # torn once more: compact_sink heals it before consolidating, so the
+    # consolidated sink keeps the batch's rows
+    torn_erase(0)
+    assert compact_sink(spark, dirs)["tag"] == os.path.basename(second)
+    assert not fs.exists(fs.aside(first))
     assert sorted(map(tuple, dirs.admitted(spark, init).collect())) == after
 
 

@@ -293,7 +293,8 @@ def test_keyindex_recovers_interrupted_compaction_swap(spark, tmp_path):
     """A crash BETWEEN compact()'s two renames leaves no sidecar; the
     next epoch must restore the .__old_* half instead of silently
     probing nothing (which would admit duplicates)."""
-    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex, _Fs
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
     sink = str(tmp_path / "sink")
     idx = SinkKeyIndex(spark, sink, ["event_id"])
@@ -303,8 +304,7 @@ def test_keyindex_recovers_interrupted_compaction_swap(spark, tmp_path):
     assert idx.probe(batch) is not None
 
     # simulate the crash window: base renamed aside, new half never landed
-    trash = _Fs(spark, idx.path + ".__old_deadbeef")
-    assert _Fs(spark, idx.path).rename_to(trash)
+    HadoopFs(spark, idx.path).rename(idx.path, idx.path + ".__old_deadbeef")
     assert idx.probe(batch) is None  # the dangerous state
 
     # next epoch recovers the swap half before doing anything else
@@ -315,6 +315,47 @@ def test_keyindex_recovers_interrupted_compaction_swap(spark, tmp_path):
     # compact() clears any stale halves and stays probe-able
     idx.compact()
     assert idx.probe(batch).count() == 50
+
+
+def test_keyindex_heals_compaction_torn_inside_swap(spark, tmp_path, monkeypatch):
+    """The same window driven through the real ``compact``: the process
+    dies after the swap's rename-aside. The half is hidden from the
+    sink's parent listing, and the next epoch restores it."""
+    from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+    from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
+
+    sink = str(tmp_path / "sink")
+    idx = SinkKeyIndex(spark, sink, ["event_id"])
+    batch = spark.createDataFrame([(i,) for i in range(50)], "event_id long")
+    assert idx.begin_epoch(0) is False
+    idx.append(batch)
+    idx.append(batch)
+
+    class Crash(Exception):  # not an OSError: no in-process rollback
+        pass
+
+    real_rename = HadoopFs.rename
+
+    def crash_on_rename_in(self, src, dst):
+        if dst == idx.path:
+            raise Crash()
+        real_rename(self, src, dst)
+
+    monkeypatch.setattr(HadoopFs, "rename", crash_on_rename_in)
+    with pytest.raises(Crash):
+        idx.compact()
+    monkeypatch.undo()
+    assert idx.probe(batch) is None  # the dangerous state
+    assert sorted(os.listdir(tmp_path)) == [
+        ".sink__keys.__new",
+        ".sink__keys.__old",
+    ]
+
+    assert idx.begin_epoch(0) is True
+    assert idx.probe(batch).count() == 100
+    idx.compact()
+    assert idx.probe(batch).count() == 50
+    assert sorted(os.listdir(tmp_path)) == ["sink__keys"]
 
 
 def test_error_predicate_null_rows_are_not_dropped(spark, tmp_path):

@@ -45,8 +45,9 @@ wrap_method(ki.SinkKeyIndex, "compact")
 wrap_method(ki.SinkKeyIndex, "begin_epoch")
 wrap_method(ki.SinkKeyIndex, "seed")
 
-import dvh_airflow_kafka_spark.streaming.ingest as ing
-wrap_method(ing.HadoopFs, "__init__", "HadoopFs.init")
+# every FS binding: the ingest layer's, the sidecar's and the runner's
+import dvh_airflow_kafka_spark.streaming.fsio as fsio
+wrap_method(fsio.HadoopFs, "__init__", "HadoopFs.init")
 
 from dvh_airflow_kafka_spark.catalog import REGISTRY
 from dvh_airflow_kafka_spark.session import get_spark
