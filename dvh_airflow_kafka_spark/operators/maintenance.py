@@ -20,8 +20,6 @@ vanished table).  On a real deployment the same call shapes map onto
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -110,7 +108,7 @@ def file_stats(path: str) -> dict:
     the before/after evidence for compaction.  Listed through the
     active session's Hadoop FS, so it sees the same files on any store
     ``compact_parquet`` sizes from."""
-    sizes = HadoopFs(SparkSession.active(), path).data_file_sizes(path)
+    sizes = [n for _, n in HadoopFs(SparkSession.active(), path).data_files(path)]
     return {
         "n_files": len(sizes),
         "total_bytes": sum(sizes),
@@ -195,26 +193,33 @@ def column_range_stats(path: str, cols: list[str]) -> dict:
     layout clusters: sum over files of (file range / global range) per
     column. 1.0·n_files means every file spans the whole domain (no
     skipping possible); values near 1.0 total mean near-perfect
-    clustering. Reads only parquet footers via pyarrow."""
-    import pyarrow.parquet as pq
+    clustering. Lists the files through the active session's Hadoop FS
+    (a missing ``path`` raises) and reads only their footers, through
+    the pyarrow filesystem of ``path``'s URI."""
+    from urllib.parse import urlparse
 
+    import pyarrow.parquet as pq
+    from pyarrow.fs import FileSystem
+
+    hfs = HadoopFs(SparkSession.active(), path)
+    if not hfs.exists(path):
+        raise FileNotFoundError(path)
+    pafs, _ = FileSystem.from_uri(path)
     per_file: dict[str, list[tuple[float, float]]] = {c: [] for c in cols}
-    for dirpath, _, files in os.walk(path):
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(dirpath, fname)).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            for c in cols:
-                lo, hi = None, None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[c]).statistics
-                    if st is None or st.min is None:
-                        continue
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if lo is not None:
-                    per_file[c].append((float(lo), float(hi)))
+    for file, _ in hfs.data_files(path):
+        fs_path = urlparse(file).path if "://" in file else file
+        md = pq.read_metadata(fs_path, filesystem=pafs)
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        for c in cols:
+            lo, hi = None, None
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx[c]).statistics
+                if st is None or st.min is None:
+                    continue
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            if lo is not None:
+                per_file[c].append((float(lo), float(hi)))
     out = {}
     for c, ranges in per_file.items():
         if not ranges:

@@ -11,6 +11,12 @@ sink action executes it. Catalyst fuses the projections into a single
 codegen stage, so at 100 TB the whole spine is a scan-shaped map job plus
 at most two joins (broadcast k6 lookup, dedup anti-join).
 
+Both read strategies share that plan, as the reference hands either
+one's batches to one ``target.write_batch`` (src/mapping.py:35-47): the
+per-frame part — a :class:`FramePlan` — runs on the bounded read under
+assign and on every micro-batch of ``streaming.run_streaming_pipeline``
+under subscribe, whose spine keeps only the micro-batch protocol.
+
 Each payload is parsed ONCE, like the reference's single ``json.loads``:
 one ``from_json`` into a struct (``_attach_payload_struct`` resolves its
 schema) feeds the allow-filter, a payload-keypath kode-6/7 key and every
@@ -29,6 +35,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+from dataclasses import dataclass, field, replace
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,8 +55,8 @@ from dvh_airflow_kafka_spark.operators import (
     observe_summary,
     scrub_flagged_persons,
 )
+from dvh_airflow_kafka_spark.operators.payload import filter_json_payload
 from dvh_airflow_kafka_spark.operators.summary import ProcessSummary
-from dvh_airflow_kafka_spark.payload_modes import payload_exprs
 from dvh_airflow_kafka_spark.plans import Transform
 from dvh_airflow_kafka_spark.sinks.writers import (
     write_console,
@@ -59,14 +66,13 @@ from dvh_airflow_kafka_spark.sinks.writers import (
 from dvh_airflow_kafka_spark.sources.envelope import (
     ENVELOPE_COLUMNS,
     PAYLOAD_COL,
-    events_as_kafka_frame,
+    as_kafka_frame,
+    json_quote,
     payload_text,
     with_envelope,
     with_text_leaves,
 )
 from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
-
-KAFKA_COLUMNS = {"key", "value", "topic", "partition", "offset", "timestamp"}
 
 # Registry-resolved Avro: up to this many distinct writer-schema ids the
 # runner builds one filtered decode branch per id (static decoder per
@@ -117,7 +123,7 @@ def build_kafka_frame(
     - ``kafka``: the real connector (S1 bounded batch read).
     - ``parquet``/``json-files``: a file-backed log simulation. A file
       already carrying the Kafka columns is used as-is; the driver's
-      ``events`` shape maps via :func:`events_as_kafka_frame`.
+      ``events`` shape maps via ``envelope.as_kafka_frame``.
     """
     src = spec.source
     kind = SourceKind(src.type)
@@ -134,8 +140,7 @@ def build_kafka_frame(
         if kind == SourceKind.PARQUET
         else spark.read.json(src.path)
     )
-    if not KAFKA_COLUMNS.issubset(set(df.columns)):
-        df = events_as_kafka_frame(df, topic=src.topic or "events")
+    df = as_kafka_frame(df, src.topic or "events")
     # S1/ST2: the bounded [DATA_INTERVAL_START, DATA_INTERVAL_END) read —
     # a pushed-down timestamp filter (reference src/kafka_source.py:68-72).
     if src.starting_timestamp_ms is not None:
@@ -149,11 +154,6 @@ def build_kafka_frame(
             < F.lit(src.ending_timestamp_ms)
         )
     return df
-
-
-# Payload expressions live in payload_modes.payload_exprs — shared with
-# the streaming spine so batch and subscribe paths deserialize
-# identically.
 
 
 def _payload_rule_sources(spec: PipelineSpec, envelope_cols: set[str]) -> list[str]:
@@ -180,7 +180,7 @@ def _attach_payload_struct(
     declared_schema: Optional[str] = None,
     cache_key: Optional[tuple] = None,
 ) -> T.StructType:
-    """The schema of the struct the assign plan parses each payload into.
+    """The schema of the struct the frame plan parses each payload into.
 
     One parse per row: the reference deserializes a message once and
     merges the dict into the record, so the allow-filter, the kode-6/7
@@ -248,6 +248,229 @@ def _attach_payload_struct(
     return with_text_leaves(parsed, text_paths)
 
 
+
+
+@dataclass(frozen=True)
+class FramePlan:
+    """The per-frame plan of both strategies, resolved once per run by
+    :func:`build_frame_plan`: Kafka columns → envelope with its one
+    ``from_json`` payload struct → kode-6/7 scrub → payload root
+    projection → transform. The layers are called through this module's
+    globals and ``Transform.apply``, so a wrapper on those names sees
+    both strategies."""
+
+    spec: PipelineSpec
+    transform: Transform
+    k6_lookup: Optional[DataFrame] = None
+    roots: tuple[str, ...] = ()
+    k6_path: Optional[tuple[str, ...]] = None
+    payload_schema: Optional[T.StructType] = None
+    # registry-resolved writer schemas by id; empty: the `avro-schema`
+    avro_schemas: dict = field(default_factory=dict)
+
+    def __call__(self, frame: DataFrame) -> DataFrame:
+        kafka_df = as_kafka_frame(frame, self.spec.source.topic or "events")
+        return self.finish(self.envelope(kafka_df))
+
+    def envelope(self, kafka_df: DataFrame) -> DataFrame:
+        if not self.avro_schemas:
+            return self._envelope(kafka_df, self.spec.source.avro_schema)
+        if len(self.avro_schemas) > _AVRO_BRANCH_LIMIT:
+            # Scale path: ONE scan, writer schema resolved per row inside
+            # the Arrow batch (avro_codec.avro_decode_multi_to_json_udf).
+            # Branching per id re-scans the source and unions N plans —
+            # right for a handful of schema versions (each branch keeps
+            # its own whole-stage span and a static decoder), wrong for a
+            # topic carrying hundreds of ids.
+            return self._envelope(kafka_df, None)
+        # Per-id decode branches unioned back together — the reference
+        # reads each message with its own writer schema
+        # (src/kafka_source.py:129-151); here each id becomes one
+        # filtered branch over the same scan, so mixed-schema topics
+        # decode in a single run.
+        from dvh_airflow_kafka_spark.sources.kafka import confluent_schema_id
+
+        branches = [
+            self._envelope(
+                kafka_df.filter(confluent_schema_id(F.col("value")) == sid),
+                self.avro_schemas[sid],
+            )
+            for sid in sorted(self.avro_schemas)
+        ]
+        env = branches[0]
+        for branch in branches[1:]:
+            env = env.unionByName(branch)
+        return env
+
+    def _envelope(self, frame: DataFrame, avro_schema_json: Optional[str]) -> DataFrame:
+        """The envelope under the source's schema mode (the reference's
+        deserializer, src/kafka_source.py:102-151): JSON re-serializes the
+        drop/flag-filtered payload; string stores the JSON-quoted text;
+        Avro strips the Confluent header, hashes the stripped bytes
+        (:150), adds ``kafka_schema_id`` (:149) and decodes the record to
+        canonical JSON — with ``avro_schema_json``, else per row through
+        ``avro_schemas`` — before the same drop/flag ops."""
+        src = self.spec.source
+        mode = PayloadSchema(src.schema_type)
+        value = F.col("value")
+        raw = value.cast("string")
+        hash_bytes = schema_id = None
+        if mode == PayloadSchema.AVRO:
+            from dvh_airflow_kafka_spark.sources.kafka import (
+                avro_payload_json,
+                confluent_schema_id,
+                strip_confluent_header,
+            )
+
+            if avro_schema_json:
+                raw = avro_payload_json(value, avro_schema_json)
+            elif self.avro_schemas:
+                from dvh_airflow_kafka_spark.sources.avro_codec import (
+                    avro_decode_multi_to_json_udf,
+                )
+
+                raw = avro_decode_multi_to_json_udf(self.avro_schemas)(value)
+            else:
+                raise ValueError(
+                    "schema: avro needs `avro-schema` in the source config or "
+                    "a schema_registry client passed to run_pipeline"
+                )
+            hash_bytes = strip_confluent_header(value)
+            schema_id = confluent_schema_id(value)
+        canonical = raw
+        if mode == PayloadSchema.STRING:
+            canonical = json_quote(raw)
+        elif src.message_fields_filter or src.flag_field_config:
+            canonical = filter_json_payload(
+                raw,
+                drop_keypaths=src.message_fields_filter,
+                flag_keypaths=src.flag_field_config,
+                sep=src.keypath_separator or "/",
+            )
+        # Allow-filters probe the deserialized-and-filtered payload
+        # (reference src/kafka_source.py:207-218): JSON/Avro read it from
+        # the parsed struct when there is one; string mode, where
+        # kafka_message is a JSON string literal, probes the raw text.
+        if mode == PayloadSchema.STRING:
+            filter_payload = raw
+        else:
+            filter_payload = None if self.payload_schema is not None else canonical
+        return with_envelope(
+            frame,
+            key_codec=src.key_decoder,
+            message_filters=src.message_filters,
+            canonical_message=canonical,
+            schema_id=schema_id,
+            hash_bytes=hash_bytes,
+            filter_payload=filter_payload,
+            payload_schema=self.payload_schema,
+        )
+
+    def scrub(self, env: DataFrame) -> DataFrame:
+        # P4/J2 privacy scrub happens sink-side BEFORE transform
+        # (reference src/oracle_target.py:88-95) — the transform may
+        # rename/drop the id. It NULLs the parsed struct with the message.
+        k6 = self.spec.target.k6_filter
+        if k6 is None:
+            return env
+        return scrub_flagged_persons(
+            env,
+            self.k6_lookup,
+            person_id=payload_text(
+                self.payload_schema, self.k6_path, F.col("kafka_message")
+            )
+            if self.k6_path
+            else F.col(k6.col),
+            event_ts=F.timestamp_millis(F.col(k6.timestamp))
+            if k6.timestamp == "kafka_timestamp"
+            else F.col(k6.timestamp),
+            payload_cols=("kafka_message",)
+            + ((PAYLOAD_COL,) if self.payload_schema is not None else ()),
+            lookup_id_col=k6.filter_col,
+        )
+
+    def finish(self, env: DataFrame) -> DataFrame:
+        out = self.scrub(env)
+        if self.payload_schema is not None:
+            # transform keypaths address payload roots as top-level columns
+            out = out.select(
+                *[c for c in out.columns if c != PAYLOAD_COL],
+                *[F.col(PAYLOAD_COL)[r].alias(r) for r in self.roots],
+            )
+        return self.transform.apply(out)
+
+
+def build_frame_plan(
+    spark: SparkSession,
+    spec: PipelineSpec,
+    sample: Callable[[], DataFrame],
+    *,
+    k6_lookup: Optional[DataFrame] = None,
+    batch_time: Optional[dt.datetime] = None,
+    avro_schemas: Optional[dict] = None,
+) -> FramePlan:
+    """``spec``'s :class:`FramePlan`, with one ``Transform`` (one
+    ``$$BATCH_TIME`` per run) and the payload struct's schema: declared,
+    or inferred from a bounded sample of ``sample()``, a batch read of
+    the source (cached per source path)."""
+    src, k6 = spec.source, spec.target.k6_filter
+    mode = PayloadSchema(src.schema_type)
+
+    # Everything read from the payload goes through ONE parse per row
+    # (_attach_payload_struct): transform keypath roots, allow-filter
+    # keys (JSON/Avro — string mode probes the raw value text) and a
+    # payload-keypath kode-6/7 key.
+    envelope_cols = set(ENVELOPE_COLUMNS) | (
+        {"kafka_schema_id"} if mode == PayloadSchema.AVRO else set()
+    )
+    roots = tuple(
+        sorted({p.split(".")[0] for p in _payload_rule_sources(spec, envelope_cols)})
+    )
+    k6_path = None
+    if k6 is not None and (
+        k6.col_keypath_separator in k6.col or k6.col not in envelope_cols
+    ):
+        k6_path = tuple(k6.col.split(k6.col_keypath_separator))
+    text_paths = [] if mode == PayloadSchema.STRING else [
+        [r.key] for r in src.message_filters or ()
+    ]
+    if k6_path:
+        text_paths.append(k6_path)
+
+    plan = FramePlan(
+        spec,
+        Transform(spec.transform, batch_time=batch_time),
+        k6_lookup,
+        roots,
+        k6_path,
+        avro_schemas=avro_schemas or {},
+    )
+    if not (roots or text_paths):
+        return plan
+
+    def sample_frame(probe: Optional[T.StructType]) -> DataFrame:
+        probed = replace(plan, payload_schema=probe)
+        return probed.scrub(probed.envelope(sample()))
+
+    payload_schema = _attach_payload_struct(
+        spark,
+        sample_frame,
+        list(roots),
+        text_paths,
+        declared_schema=src.payload_schema,
+        cache_key=(
+            src.path,
+            str(src.schema_type),
+            tuple(src.message_fields_filter or ()),
+            tuple(src.flag_field_config or ()),
+            tuple((r.key, r.allowed_value) for r in (src.message_filters or ())),
+        )
+        if src.path
+        else None,
+    )
+    return replace(plan, payload_schema=payload_schema)
+
+
 def run_pipeline(
     spark: SparkSession,
     spec: PipelineSpec | str,
@@ -278,17 +501,21 @@ def run_pipeline(
     schema ids in the data (a bounded driver collect) each become one
     filtered decode branch over the same scan, unioned back together —
     mixed-schema topics decode in a single run, matching the reference's
-    per-message-id reads (src/kafka_source.py:129-151).
+    per-message-id reads (src/kafka_source.py:129-151); subscribe needs
+    the declared ``avro-schema``.
     """
     if isinstance(spec, str):
         spec = PipelineSpec.from_yaml(spec)
     src = spec.source
     sink = spec.target
+    if sink.k6_filter is not None and k6_lookup is None:
+        raise ValueError("k6-filter configured but no k6_lookup provided")
 
-    # Strategy dispatch (reference Mapping.run, src/mapping.py:49-57):
-    # subscribe = incremental micro-batch consumption with committed
-    # progress — the streaming spine with a checkpoint; assign = the
-    # bounded batch read below.
+    # Strategy dispatch (reference Mapping.run, src/mapping.py:49-57).
+    # Both strategies run the one FramePlan: subscribe on each
+    # micro-batch of the checkpointed streaming spine (incremental
+    # consumption with committed progress), assign on the bounded batch
+    # read below.
     if (
         ReadStrategy(src.strategy) == ReadStrategy.SUBSCRIBE
         and SourceKind(src.type) != SourceKind.KAFKA
@@ -304,11 +531,15 @@ def run_pipeline(
             src.path,
             sink.path,
             checkpoint_dir or sink.path.rstrip("/") + "_checkpoint",
-            transform_rules=spec.transform or None,
-            batch_time=batch_time,
+            plan=build_frame_plan(
+                spark,
+                spec,
+                lambda: build_kafka_frame(spark, spec),
+                k6_lookup=k6_lookup,
+                batch_time=batch_time,
+            ),
             dedup_keys=sink.skip_duplicates_with
             or ("kafka_topic", "kafka_partition", "kafka_offset"),
-            source_spec=src,  # full deserializer semantics (incl. Avro)
         )
         return PipelineResult(load_parquet(spark, sink.path), run.summary)
 
@@ -338,33 +569,9 @@ def run_pipeline(
                 spec = spec.model_copy(update={"source": src})
 
     kafka_df = build_kafka_frame(spark, spec, bootstrap_servers)
-    mode = PayloadSchema(src.schema_type)
 
-    # Everything read from the payload goes through ONE parse per row
-    # (_attach_payload_struct): transform keypath roots, allow-filter
-    # keys (JSON/Avro — string mode probes the raw value text) and a
-    # payload-keypath kode-6/7 key.
-    envelope_cols = set(ENVELOPE_COLUMNS) | (
-        {"kafka_schema_id"} if mode == PayloadSchema.AVRO else set()
-    )
-    roots = sorted({p.split(".")[0] for p in _payload_rule_sources(spec, envelope_cols)})
-    k6 = sink.k6_filter
-    if k6 is not None and k6_lookup is None:
-        raise ValueError("k6-filter configured but no k6_lookup provided")
-    k6_path = None
-    if k6 is not None and (
-        k6.col_keypath_separator in k6.col or k6.col not in envelope_cols
-    ):
-        k6_path = k6.col.split(k6.col_keypath_separator)
-    text_paths = [] if mode == PayloadSchema.STRING else [
-        [r.key] for r in src.message_filters or ()
-    ]
-    if k6_path:
-        text_paths.append(k6_path)
-
-    avro_ids: list[int] = []
     avro_schemas: dict = {}
-    if mode == PayloadSchema.AVRO and src.avro_schema is None:
+    if PayloadSchema(src.schema_type) == PayloadSchema.AVRO and src.avro_schema is None:
         from dvh_airflow_kafka_spark.sources.kafka import confluent_schema_id
 
         if schema_registry is None:
@@ -404,121 +611,28 @@ def run_pipeline(
             )
         avro_schemas = schema_registry.schemas_for_ids(avro_ids)
 
-    def envelope(payload_schema: Optional[T.StructType]) -> DataFrame:
-        # JSON/Avro allow-filters probe the canonical payload, which the
-        # struct parses; string mode keeps probing the raw value text.
-        struct_filters = payload_schema is not None and mode != PayloadSchema.STRING
-
-        def build_env(
-            frame: DataFrame,
-            avro_schema_json: Optional[str],
-            avro_schemas_by_id: Optional[dict] = None,
-        ) -> DataFrame:
-            pe = payload_exprs(src, avro_schema_json, avro_schemas_by_id)
-            return with_envelope(
-                frame,
-                key_codec=src.key_decoder,
-                message_filters=src.message_filters,
-                canonical_message=pe.canonical,
-                schema_id=pe.schema_id,
-                hash_bytes=pe.hash_bytes,
-                filter_payload=None if struct_filters else pe.filter_payload,
-                payload_schema=payload_schema,
-            )
-
-        if not avro_ids:
-            return build_env(kafka_df, src.avro_schema)
-        if len(avro_ids) > _AVRO_BRANCH_LIMIT:
-            # Scale path: ONE scan, writer schema resolved per row inside
-            # the Arrow batch (avro_codec.avro_decode_multi_to_json_udf).
-            # Branching per id re-scans the source and unions N plans —
-            # right for a handful of schema versions (each branch keeps
-            # its own whole-stage span and a static decoder), wrong for a
-            # topic carrying hundreds of ids.
-            return build_env(kafka_df, None, avro_schemas_by_id=avro_schemas)
-        # Per-id decode branches unioned back together — the reference
-        # reads each message with its own writer schema
-        # (src/kafka_source.py:129-151); here each id becomes one
-        # filtered branch over the same scan, so mixed-schema topics
-        # decode in a single run.
-        from dvh_airflow_kafka_spark.sources.kafka import confluent_schema_id
-
-        branches = [
-            build_env(
-                kafka_df.filter(confluent_schema_id(F.col("value")) == sid),
-                avro_schemas[sid],
-            )
-            for sid in avro_ids
-        ]
-        env = branches[0]
-        for branch in branches[1:]:
-            env = env.unionByName(branch)
-        return env
-
-    def scrub(env: DataFrame, payload_schema: Optional[T.StructType]) -> DataFrame:
-        # P4/J2 privacy scrub happens sink-side BEFORE transform
-        # (reference src/oracle_target.py:88-95) — the transform may
-        # rename/drop the id. It NULLs the parsed struct with the message.
-        if k6 is None:
-            return env
-        return scrub_flagged_persons(
-            env,
-            k6_lookup,
-            person_id=payload_text(payload_schema, k6_path, F.col("kafka_message"))
-            if k6_path
-            else F.col(k6.col),
-            event_ts=F.timestamp_millis(F.col(k6.timestamp))
-            if k6.timestamp == "kafka_timestamp"
-            else F.col(k6.timestamp),
-            payload_cols=("kafka_message",)
-            + ((PAYLOAD_COL,) if payload_schema is not None else ()),
-            lookup_id_col=k6.filter_col,
-        )
-
-    payload_schema = None
-    if roots or text_paths:
-        payload_schema = _attach_payload_struct(
-            spark,
-            lambda probe: scrub(envelope(probe), probe),
-            roots,
-            text_paths,
-            declared_schema=src.payload_schema,
-            cache_key=(
-                src.path,
-                str(src.schema_type),
-                tuple(src.message_fields_filter or ()),
-                tuple(src.flag_field_config or ()),
-                tuple(
-                    (r.key, r.allowed_value) for r in (src.message_filters or ())
-                ),
-            )
-            if src.path
-            else None,
-        )
-
-    env = envelope(payload_schema)
+    plan = build_frame_plan(
+        spark,
+        spec,
+        lambda: kafka_df,
+        k6_lookup=k6_lookup,
+        batch_time=batch_time,
+        avro_schemas=avro_schemas,
+    )
+    env = plan.envelope(kafka_df)
     # Counters ride the sink's job as an Observation on the envelope node
     # — no second pass over the source (A2, operators/summary.py). The
-    # payload-schema sample above ran on a frame without it, so the
-    # counters read the sink's job only. Only worth attaching when
-    # run_pipeline itself executes the plan: for the memory sink the
-    # frame goes back to the caller lazily, and a CollectMetrics node
-    # would split the scan's whole-stage-codegen span in two on every
-    # downstream use; its lazy summary counts the envelope directly
-    # instead.
+    # payload-schema sample ran on a frame without it, so the counters
+    # read the sink's job only. Only worth attaching when run_pipeline
+    # itself executes the plan: for the memory sink the frame goes back
+    # to the caller lazily, and a CollectMetrics node would split the
+    # scan's whole-stage-codegen span in two on every downstream use;
+    # its lazy summary counts the envelope directly instead.
     sink_executes = SinkKind(sink.type) != SinkKind.MEMORY
     obs = None
     if sink_executes:
         env, obs = observe_summary(env)
-
-    out = scrub(env, payload_schema)
-    if payload_schema is not None:
-        # transform keypaths address payload roots as top-level columns
-        out = out.select(
-            *[c for c in out.columns if c != PAYLOAD_COL],
-            *[F.col(PAYLOAD_COL)[r].alias(r) for r in roots],
-        )
-    out = Transform(spec.transform, batch_time=batch_time).apply(out)
+    out = plan.finish(env)
 
     # J1 dedup-on-insert (reference src/oracle_target.py:97-104).
     dedup_keys = sink.skip_duplicates_with or []

@@ -34,6 +34,8 @@ from pyspark.sql import types as T
 
 from dvh_airflow_kafka_spark.config import AllowRule, KeyCodec
 
+# The standard Kafka column set every source hands the envelope.
+KAFKA_COLUMNS = frozenset({"key", "value", "topic", "partition", "offset", "timestamp"})
 ENVELOPE_COLUMNS = frozenset(
     {
         "kafka_key",
@@ -292,10 +294,7 @@ def events_as_kafka_frame(
     ``passthrough`` keeps extra source columns beside the Kafka set (for
     ``with_envelope(..., passthrough=...)`` to carry further).
     """
-    clash = sorted(
-        {"key", "value", "topic", "partition", "offset", "timestamp"}
-        & set(passthrough)
-    )
+    clash = sorted(KAFKA_COLUMNS & set(passthrough))
     if clash:
         raise ValueError(
             f"passthrough columns {clash} collide with the standard "
@@ -313,3 +312,12 @@ def events_as_kafka_frame(
         F.col("ts").alias("timestamp"),
         *[F.col(c) for c in passthrough],
     )
+
+
+def as_kafka_frame(df: DataFrame, topic: str = "events") -> DataFrame:
+    """``df`` as it is when it already carries :data:`KAFKA_COLUMNS`,
+    else an ``events``-table frame mapped onto them
+    (:func:`events_as_kafka_frame`)."""
+    if KAFKA_COLUMNS.issubset(df.columns):
+        return df
+    return events_as_kafka_frame(df, topic=topic)

@@ -211,22 +211,23 @@ class HadoopFs:
         out.sort()
         return out
 
-    def data_file_sizes(self, path: str) -> list[int]:
-        """Byte sizes of the parquet files under ``path``, recursively
-        (footer-exact lengths); [] when ``path`` is missing."""
+    def data_files(self, path: str) -> list[tuple[str, int]]:
+        """``(path, byte size)`` of the parquet files under ``path``,
+        recursively (footer-exact lengths); [] when ``path`` is
+        missing."""
         p = self._p(path)
         if not self._fs.exists(p):
             return []
-        sizes = []
+        files = []
         it = self._fs.listFiles(p, True)
         while it.hasNext():
             st = it.next()
             if st.getPath().getName().endswith(".parquet"):
-                sizes.append(st.getLen())
-        return sizes
+                files.append((self._str(st.getPath()), st.getLen()))
+        return files
 
     def total_bytes(self, path: str) -> int:
-        return sum(self.data_file_sizes(path))
+        return sum(size for _, size in self.data_files(path))
 
     # -- small control files (markers carrying JSON payloads) -------------
     def write_text(self, path: str, text: str) -> None:

@@ -25,6 +25,15 @@ Spark mapping:
 - counters: a driver-side ProcessSummary accumulated per batch (the
   reference threads a mutable dataclass through the loop).
 
+The spine is the micro-batch protocol only: it counts each batch,
+splits and quarantines the ST6 error rows, marks the epoch, probes the
+key sidecar (or the sink itself on a replayed epoch), anti-joins, appends
+to the sink and the sidecar, and carries the fault seam. What a batch
+becomes is its ``plan`` argument: ``runner.run_pipeline`` passes the
+spec's ``runner.FramePlan`` — the envelope, payload parse, kode-6/7 scrub
+and transform the assign strategy runs — so the spec's semantics live in
+``runner`` alone, and both strategies write the same rows.
+
 At scale the source is the Kafka connector (sources/kafka.py
 ``kafka_stream_read``); tests drive the identical foreachBatch through a
 file-stream simulation of the log (no broker in the test environment).
@@ -44,14 +53,9 @@ from dvh_airflow_kafka_spark.operators import dedup_against_existing
 from dvh_airflow_kafka_spark.operators.summary import ProcessSummary
 from dvh_airflow_kafka_spark.plans import Transform
 from dvh_airflow_kafka_spark.sinks.writers import write_parquet_append
-from dvh_airflow_kafka_spark.sources.envelope import (
-    events_as_kafka_frame,
-    with_envelope,
-)
+from dvh_airflow_kafka_spark.sources.envelope import as_kafka_frame, with_envelope
 from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
 from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
-
-KAFKA_COLUMNS = {"key", "value", "topic", "partition", "offset", "timestamp"}
 
 
 @dataclass
@@ -62,28 +66,54 @@ class StreamingRun:
     batches: int = 0
 
 
+def _drain(
+    spark: SparkSession,
+    source_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    process_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """Run ``process_batch`` on each micro-batch of the parquet log until
+    it is drained (``availableNow``). File streams need an explicit
+    schema: a batch read of the same dir, cached per path
+    (``io.stream_source_schema``)."""
+    from dvh_airflow_kafka_spark.io import stream_source_schema
+
+    (
+        spark.readStream.schema(stream_source_schema(spark, source_dir))
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(source_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_streaming_pipeline(
     spark: SparkSession,
     source_dir: str,
     sink_path: str,
     checkpoint_dir: str,
     *,
-    transform_rules: Optional[list] = None,
-    batch_time: Optional[dt.datetime] = None,
+    plan: Optional[Callable[[DataFrame], DataFrame]] = None,
     dedup_keys: Sequence[str] = ("kafka_topic", "kafka_partition", "kafka_offset"),
-    message_filters: Optional[Sequence[AllowRule]] = None,
-    key_codec: str = "utf-8",
     max_files_per_trigger: int = 1,
     fail_after_batches: Optional[int] = None,
     error_where: Optional[str] = None,
     fail_on_non_critical: bool = False,
     quarantine_path: Optional[str] = None,
-    source_spec=None,
 ) -> StreamingRun:
     """Drain an events-shaped parquet directory through the full spine and
     stop (``availableNow``). Restartable: the checkpoint remembers which
     files were committed, and the dedup anti-join absorbs the replay of
     any batch that wrote but crashed before its epoch committed.
+
+    ``plan`` turns each micro-batch (the source rows, events- or
+    Kafka-shaped) into the rows to write; ``runner.run_pipeline`` passes
+    the spec's ``runner.FramePlan``. The default writes the bare
+    envelope.
 
     ``fail_after_batches`` is the fault-injection seam (the reference
     mocks ``_poll`` for the same purpose, src/kafka_source.py:274-276):
@@ -115,24 +145,10 @@ def run_streaming_pipeline(
     the probe runs no per-batch job. Only a crash-replayed epoch falls
     back to the full-sink probe (see keyindex module docstring for the
     correctness argument).
-
-    ``source_spec`` (a config ``SourceSpec``) switches the envelope to
-    the spec's full deserializer semantics via the shared
-    ``payload_modes.payload_exprs`` — JSON drop/flag ops, string
-    JSON-quoting, or Avro header-strip + binary decode (declared
-    ``avro-schema`` required here: a streaming run cannot block on a
-    registry fetch mid-batch). It also supplies key codec and allow
-    filters, overriding the standalone parameters.
     """
-    # Streaming file sources need an explicit schema; take it from a batch
-    # read of the same directory (driver-side, cached per path — see
-    # io.stream_source_schema).
-    from dvh_airflow_kafka_spark.io import stream_source_schema
-
-    schema = stream_source_schema(spark, source_dir)
-    transform = (
-        Transform(transform_rules, batch_time=batch_time) if transform_rules else None
-    )
+    if plan is None:
+        def plan(batch: DataFrame) -> DataFrame:
+            return with_envelope(as_kafka_frame(batch))
     run = StreamingRun()
     run.summary.committed_to_producer_count = 0
     key_index = SinkKeyIndex(spark, sink_path, dedup_keys)
@@ -173,31 +189,7 @@ def run_streaming_pipeline(
         if n == 0:
             run.batches += 1
             return
-        kafka_frame = (
-            batch_df
-            if KAFKA_COLUMNS.issubset(set(batch_df.columns))
-            else events_as_kafka_frame(batch_df)
-        )
-        if source_spec is not None:
-            from dvh_airflow_kafka_spark.payload_modes import payload_exprs
-
-            pe = payload_exprs(source_spec, source_spec.avro_schema)
-            env = with_envelope(
-                kafka_frame,
-                key_codec=source_spec.key_decoder,
-                message_filters=source_spec.message_filters,
-                canonical_message=pe.canonical,
-                schema_id=pe.schema_id,
-                hash_bytes=pe.hash_bytes,
-                filter_payload=pe.filter_payload,
-            )
-        else:
-            env = with_envelope(
-                kafka_frame,
-                key_codec=key_codec,
-                message_filters=message_filters,
-            )
-        out = transform.apply(env) if transform is not None else env
+        out = plan(batch_df)
         if key_index.begin_epoch(epoch_id):
             # Re-attempted epoch: a prior try may have appended to the
             # sink without reaching the sidecar append — probe the sink
@@ -236,16 +228,7 @@ def run_streaming_pipeline(
         # the reference's post-commit counter (src/kafka_source.py:394).
         run.summary.committed_to_producer_count += n
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(spark, source_dir, checkpoint_dir, max_files_per_trigger, process_batch)
     if fail_on_non_critical and run.summary.error_count > 0:
         raise RuntimeError(
             f"{run.summary.error_count} non-critical errors during run "
@@ -313,9 +296,6 @@ def run_streaming_produce(
                 writer = writer.option(k, v)
             writer.save()
 
-    from dvh_airflow_kafka_spark.io import stream_source_schema
-
-    schema = stream_source_schema(spark, source_dir)
     transform = (
         Transform(transform_rules, batch_time=batch_time) if transform_rules else None
     )
@@ -327,13 +307,10 @@ def run_streaming_produce(
         if n == 0:
             run.summary.empty_count += 1
             return
-        kafka_frame = (
-            batch_df
-            if KAFKA_COLUMNS.issubset(set(batch_df.columns))
-            else events_as_kafka_frame(batch_df)
-        )
         env = with_envelope(
-            kafka_frame, key_codec=key_codec, message_filters=message_filters
+            as_kafka_frame(batch_df),
+            key_codec=key_codec,
+            message_filters=message_filters,
         )
         # deterministic producer key = source log position, computed on
         # the envelope BEFORE the transform projection so rules are free
@@ -370,14 +347,5 @@ def run_streaming_produce(
             raise RuntimeError("injected failure after produce")
         run.summary.committed_to_producer_count += n
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    _drain(spark, source_dir, checkpoint_dir, max_files_per_trigger, process_batch)
     return run

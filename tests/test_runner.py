@@ -4,6 +4,7 @@ k6 → dedup → sink, with ProcessSummary xcom parity."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import struct
@@ -386,7 +387,39 @@ transform:
         assert json.loads(r.kafka_message)["user_id"] is not None
 
 
-def test_k6_scrub_from_config(spark, sf_dir):
+# --------------------------------------------------------------------------
+# One spec, both read strategies, the same sink rows (the reference runs
+# its integration tests for {subscribe, assign}, test_integration.py:131)
+# --------------------------------------------------------------------------
+
+STRATEGIES = ["assign", "subscribe"]
+BATCH_TIME = dt.datetime(2024, 6, 10)
+
+
+def _events_log(spark, sf_dir, tmp_path) -> str:
+    """The events table as a parquet log of 3 files: one bounded read
+    under assign, three micro-batches under subscribe."""
+    log = str(tmp_path / "log")
+    load_table(spark, sf_dir, "events").repartition(3).write.parquet(log)
+    return log
+
+
+def _sink(spark, yaml_text, strategy, tmp_path, **kwargs):
+    """Run ``yaml_text`` (its source ``strategy: STRATEGY``, its target
+    a parquet sink at ``SINK``) under ``strategy`` with a fixed batch
+    time; the sink's frame. Subscribe checkpoints beside the sink."""
+    sink = str(tmp_path / "sink")
+    run_pipeline(
+        spark,
+        yaml_text.replace("STRATEGY", strategy).replace("SINK", sink),
+        batch_time=BATCH_TIME,
+        **kwargs,
+    )
+    return load_parquet(spark, sink)
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_k6_scrub_from_config(spark, sf_dir, tmp_path, strategy):
     """P4 via config: flagged ids get NULL payload, rows never dropped
     (reference src/oracle_target.py:46-93)."""
     yaml_text = f"""
@@ -394,20 +427,26 @@ source:
   type: parquet
   topic: events
   schema: json
-  path: "{os.path.join(sf_dir, 'events.parquet')}"
+  strategy: STRATEGY
+  path: "{_events_log(spark, sf_dir, tmp_path)}"
 target:
-  type: memory
-  table: t_k6
+  type: parquet
+  path: "SINK"
+  skip-duplicates-with: [kafka_offset]
   k6-filter:
     filter-table: skjerming
     filter-col: off_id
     col: kafka_key
     timestamp: kafka_timestamp
 transform:
+  - src: kafka_offset
+    dst: kafka_offset
   - src: kafka_key
     dst: kafka_key
   - src: kafka_message
     dst: kafka_message
+  - src: $$BATCH_TIME
+    dst: lastet_tid
 """
     events = load_table(spark, sf_dir, "events")
     flagged = [r.user_id for r in events.select("user_id").distinct().limit(3).collect()]
@@ -415,14 +454,22 @@ transform:
         [(str(u), "1900-01-01", "9999-12-31", 6) for u in flagged],
         "off_id string, gyldig_fra_dato string, gyldig_til_dato string, skjermet_kode int",
     )
-    result = run_pipeline(spark, yaml_text, k6_lookup=lookup)
-    out = result.dataframe
+    out = _sink(spark, yaml_text, strategy, tmp_path, k6_lookup=lookup)
     assert out.count() == events.count()  # rows preserved
     hit = out.filter(F.col("kafka_key").isin([str(u) for u in flagged]))
     assert hit.count() > 0
     assert hit.filter(F.col("kafka_message").isNotNull()).count() == 0
     miss = out.filter(~F.col("kafka_key").isin([str(u) for u in flagged]))
     assert miss.filter(F.col("kafka_message").isNull()).count() == 0
+    assert {tuple(r) for r in out.collect()} == {
+        (
+            ev.event_id,
+            str(ev.user_id),
+            None if ev.user_id in flagged else ev.props,
+            BATCH_TIME,
+        )
+        for ev in events.collect()
+    }
 
 
 def test_bounded_interval_read(spark, sf_dir):
@@ -563,7 +610,8 @@ transform:
     assert spark.read.parquet(sink).count() == 300
 
 
-def test_k6_scrub_person_id_from_payload(spark, sf_dir):
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_k6_scrub_person_id_from_payload(spark, sf_dir, tmp_path, strategy):
     """P4 with the person-id extracted from a (possibly nested) payload
     keypath (reference src/oracle_target.py:46-51 walks the message dict)."""
     yaml_text = f"""
@@ -571,10 +619,12 @@ source:
   type: parquet
   topic: events
   schema: json
-  path: "{os.path.join(sf_dir, 'events.parquet')}"
+  strategy: STRATEGY
+  path: "{_events_log(spark, sf_dir, tmp_path)}"
 target:
-  type: memory
-  table: t_k6_payload
+  type: parquet
+  path: "SINK"
+  skip-duplicates-with: [kafka_offset]
   k6-filter:
     filter-table: skjerming
     filter-col: off_id
@@ -585,6 +635,8 @@ transform:
     dst: kafka_offset
   - src: kafka_message
     dst: kafka_message
+  - src: $$BATCH_TIME
+    dst: lastet_tid
 """
     events = load_table(spark, sf_dir, "events")
     flagged_k = [
@@ -601,14 +653,89 @@ transform:
         [(str(k), "1900-01-01", "9999-12-31", 7) for k in flagged_k],
         "off_id string, gyldig_fra_dato string, gyldig_til_dato string, skjermet_kode int",
     )
-    result = run_pipeline(spark, yaml_text, k6_lookup=lookup)
-    out = result.dataframe
-    assert out.count() == events.count()
+    rows = _sink(spark, yaml_text, strategy, tmp_path, k6_lookup=lookup).collect()
+    assert len(rows) == events.count()
     expect_hit = events.filter(
         F.get_json_object("props", "$.k").cast("int").isin(flagged_k)
     ).count()
     assert expect_hit > 0
-    assert out.filter(F.col("kafka_message").isNull()).count() == expect_hit
+    assert sum(r.kafka_message is None for r in rows) == expect_hit
+    assert {tuple(r) for r in rows} == {
+        (
+            ev.event_id,
+            None if json.loads(ev.props).get("k") in flagged_k else ev.props,
+            BATCH_TIME,
+        )
+        for ev in events.collect()
+    }
+
+
+@pytest.mark.parametrize("declared", [False, True])
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_payload_keypath_rules_and_allow_filter(
+    spark, sf_dir, tmp_path, strategy, declared
+):
+    """Payload-keypath transform rules under an allow-filter, with an
+    inferred and a declared ``payload-schema``: the filter NULLs the
+    message and every payload field read from it."""
+    schema = '  payload-schema: "k INT"\n' if declared else ""
+    yaml_text = f"""
+source:
+  type: parquet
+  topic: events
+  schema: json
+  strategy: STRATEGY
+  path: "{_events_log(spark, sf_dir, tmp_path)}"
+  message-filters:
+    - {{key: k, allowed_value: 87}}
+    - {{key: k, allowed_value: 12}}
+{schema}target:
+  type: parquet
+  path: "SINK"
+  skip-duplicates-with: [kafka_offset]
+transform:
+  - {{src: kafka_offset, dst: kafka_offset}}
+  - {{src: kafka_message, dst: kafka_message}}
+  - {{src: k, dst: k_value}}
+  - {{src: $$BATCH_TIME, dst: lastet_tid}}
+"""
+    rows = _sink(spark, yaml_text, strategy, tmp_path).collect()
+    expect = set()
+    for ev in load_table(spark, sf_dir, "events").collect():
+        k = json.loads(ev.props)["k"]
+        kept = k in (87, 12)
+        expect.add(
+            (ev.event_id, ev.props if kept else None, k if kept else None, BATCH_TIME)
+        )
+    assert {tuple(r) for r in rows} == expect
+    assert 0 < sum(r.k_value is not None for r in rows) < len(rows)
+
+
+def test_subscribe_k6_filter_needs_lookup(spark, sf_dir, tmp_path):
+    """A k6-filter without its lookup table fails before any batch runs,
+    under subscribe as under assign: a run that went on would write the
+    flagged persons' messages unscrubbed."""
+    yaml_text = f"""
+source:
+  type: parquet
+  topic: events
+  schema: json
+  strategy: subscribe
+  path: "{_events_log(spark, sf_dir, tmp_path)}"
+target:
+  type: parquet
+  path: "{tmp_path / 'sink'}"
+  k6-filter:
+    filter-table: skjerming
+    filter-col: off_id
+    col: kafka_key
+    timestamp: kafka_timestamp
+transform:
+  - {{src: kafka_offset, dst: kafka_offset}}
+"""
+    with pytest.raises(ValueError, match="k6_lookup"):
+        run_pipeline(spark, yaml_text)
+    assert not os.path.exists(tmp_path / "sink")
 
 
 # --------------------------------------------------------------------------
@@ -933,25 +1060,53 @@ def test_inferred_schema_run_counts_every_row_read(spark, tmp_path):
     assert load_parquet(spark, sink).count() == n
 
 
-def test_assign_plan_parses_each_payload_once(spark, tmp_path):
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_assign_plan_parses_each_payload_once(spark, tmp_path, monkeypatch, strategy):
     """Plan guard: allow-filter + k6-filter on a payload keypath +
     payload keypath rules optimize to exactly one from_json, and
-    get_json_object appears only as the NULL fallback of a struct leaf."""
+    get_json_object appears only as the NULL fallback of a struct leaf —
+    in the assign plan and in each subscribe micro-batch's plan."""
     import re
 
+    from dvh_airflow_kafka_spark.streaming import pipeline
+
     log = _person_log(spark, str(tmp_path / "log"), 200)
-    result = run_pipeline(
-        spark,
-        _person_yaml(log, "  type: memory\n  table: t_one_parse"),
-        k6_lookup=_k6_lookup(spark, [3]),
-    )
-    plan = result.dataframe._jdf.queryExecution().optimizedPlan().toString()
-    assert len(re.findall(r"\bfrom_json\(", plan)) == 1, plan
-    fallbacks = re.findall(
-        r"coalesce\((?:cast\()?[^\s,()]+(?: as string\))?, get_json_object\(", plan
-    )
-    assert len(re.findall(r"get_json_object\(", plan)) == len(fallbacks), plan
-    rows = result.dataframe.collect()
+    if strategy == "assign":
+        result = run_pipeline(
+            spark,
+            _person_yaml(log, "  type: memory\n  table: t_one_parse"),
+            k6_lookup=_k6_lookup(spark, [3]),
+        )
+        plans = [result.dataframe._jdf.queryExecution().optimizedPlan().toString()]
+        rows = result.dataframe.collect()
+    else:
+        plans = []
+        dedup = pipeline.dedup_against_existing
+
+        def record_plan(out, *args, **kwargs):  # the batch's planned rows
+            plans.append(out._jdf.queryExecution().optimizedPlan().toString())
+            return dedup(out, *args, **kwargs)
+
+        monkeypatch.setattr(pipeline, "dedup_against_existing", record_plan)
+        sink = str(tmp_path / "sink")
+        rows = run_pipeline(
+            spark,
+            _person_yaml(
+                log,
+                f'  type: parquet\n  path: "{sink}"\n'
+                "  skip-duplicates-with: [kafka_offset]",
+                "  strategy: subscribe\n",
+            ),
+            k6_lookup=_k6_lookup(spark, [3]),
+        ).dataframe.collect()
+    assert plans
+    for plan in plans:
+        assert len(re.findall(r"\bfrom_json\(", plan)) == 1, plan
+        fallbacks = re.findall(
+            r"coalesce\((?:cast\()?[^\s,()]+(?: as string\))?, get_json_object\(",
+            plan,
+        )
+        assert len(re.findall(r"get_json_object\(", plan)) == len(fallbacks), plan
     assert len(rows) == 200
     for r in rows:
         kept = r.kafka_offset % 3 != 2 and r.kafka_offset % 50 != 3

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dvh_airflow_kafka_spark.io import load_table
@@ -70,6 +71,11 @@ def test_zorder_layout_narrows_file_ranges(spark, tmp_path):
     after = column_range_stats(path, ["user_id", "value"])
 
     assert after["user_id"]["n_files"] >= 4
+    # the stats are the store's, not the spelling's: the file:// URI of
+    # the same dir lists the same files, and a missing dir raises
+    assert column_range_stats("file://" + path, ["user_id", "value"]) == after
+    with pytest.raises(FileNotFoundError):
+        column_range_stats(path + "_missing", ["user_id"])
     # same rows, new layout
     assert spark.read.parquet(path).count() == ev.count()
     for c in ("user_id", "value"):

@@ -92,29 +92,39 @@ def test_crash_replay_over_unreadable_sink_raises(spark, source_dir, tmp_path):
 
 
 def test_transform_and_filters_in_stream(spark, source_dir, tmp_path):
-    """The batch spine (envelope + transform DSL) runs unchanged inside
-    foreachBatch — one code path for batch and streaming."""
+    """The batch spine (envelope + allow-filter + transform DSL) runs
+    unchanged inside foreachBatch: a subscribe spec hands the runner's
+    frame plan to the streaming spine — one code path for batch and
+    streaming."""
     import datetime as dt
 
-    from dvh_airflow_kafka_spark.config import AllowRule
+    from dvh_airflow_kafka_spark.runner import run_pipeline
 
     sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    rules = [
-        {"src": "kafka_offset", "dst": "kafka_offset"},
-        {"src": "kafka_hash", "dst": "kafka_hash"},
-        {"src": "kafka_message", "dst": "kafka_message"},
-        {"src": "$$BATCH_TIME", "dst": "lastet_tid"},
-    ]
-    run = run_streaming_pipeline(
+    yaml_text = f"""
+source:
+  type: parquet
+  topic: events
+  schema: json
+  strategy: subscribe
+  path: "{source_dir}"
+  message-filters:
+    - {{key: k, allowed_value: 87}}
+target:
+  type: parquet
+  path: "{sink}"
+  skip-duplicates-with: [kafka_offset]
+transform:
+  - {{src: kafka_offset, dst: kafka_offset}}
+  - {{src: kafka_hash, dst: kafka_hash}}
+  - {{src: kafka_message, dst: kafka_message}}
+  - {{src: $$BATCH_TIME, dst: lastet_tid}}
+"""
+    run = run_pipeline(
         spark,
-        source_dir,
-        sink,
-        ckpt,
-        transform_rules=rules,
+        yaml_text,
         batch_time=dt.datetime(2025, 6, 1, 12, 0, 0),
-        message_filters=[AllowRule(key="k", allowed_value=87)],
-        dedup_keys=("kafka_offset",),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     out = spark.read.parquet(sink)
     assert set(out.columns) == {"kafka_offset", "kafka_hash", "kafka_message", "lastet_tid"}
