@@ -1403,13 +1403,9 @@ def streaming_ddsketch_quantiles(
     matches a batch engine.  At 100 TB ingest this is the permanently
     resident latency/size-distribution monitor: O(buckets) state
     forever, no watermark, no eviction."""
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory_complete,
         read_event_stream,
+        run_drain,
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
@@ -1420,17 +1416,12 @@ def streaming_ddsketch_quantiles(
         _staged_range_write(ev, src, 4)
 
     src = _staged_stream_src("stream_dds", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_dds_ckpt_")
-    name = f"stream_dds_{uuid.uuid4().hex[:8]}"
     counts = (
         _ddsketch_buckets(read_event_stream(spark, src))
         .groupBy("event_type", "b", "s")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    sketch = drain_to_memory_complete(
-        spark, counts, name, ckpt, shuffle_partitions=8
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
+    sketch = run_drain(counts, mode="complete", shuffle_partitions=8).table
     return _ddsketch_report(spark, sketch)
 
 
@@ -2449,14 +2440,9 @@ def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-comparable to the batch answer. Session boundaries surface as
     epoch-µs longs (both engines floor ns→µs identically).
     """
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory,
         read_event_stream,
+        run_drain,
         sessionize_with_state,
     )
 
@@ -2474,15 +2460,10 @@ def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1).write.mode("append").parquet(src)
 
     src = _staged_stream_src("stream_sess", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_sess_ckpt_")
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
     sessions = sessionize_with_state(
         read_event_stream(spark, src), gap="30 minutes"
     )
-    out = drain_to_memory(spark, sessions, name, ckpt, shuffle_partitions=8)
-    # the drain is complete and the result lives in the memory sink — the
-    # checkpoint is dead weight from here (the staged source stays cached)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out = run_drain(sessions, shuffle_partitions=8).table
     return out.filter(F.col("user_id") >= 0).select(
         "user_id",
         F.unix_micros(F.col("session_start")).alias("start_us"),
@@ -2545,14 +2526,9 @@ def streaming_window_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark past every real window's end, so the append-mode emission
     is the complete window set. Sums accumulate in DECIMAL(18,6) —
     order-independent, hash-identical to the oracle's sum."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory,
         read_event_stream,
+        run_drain,
         windowed_event_counts,
     )
 
@@ -2569,13 +2545,10 @@ def streaming_window_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1).write.mode("append").parquet(src)
 
     src = _staged_stream_src("stream_win", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_win_ckpt_")
-    name = f"stream_win_{uuid.uuid4().hex[:8]}"
     counts = windowed_event_counts(
         read_event_stream(spark, src), window="1 hour", exact_sum=True
     )
-    out = drain_to_memory(spark, counts, name, ckpt, shuffle_partitions=8)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out = run_drain(counts, shuffle_partitions=8).table
     return out.filter(F.col("event_type") != "__sentinel").select(
         F.unix_micros(F.col("window_start")).alias("window_start_us"),
         "event_type",
@@ -2601,15 +2574,10 @@ def streaming_dedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy replays in a later micro-batch — an at-least-once redelivery),
     and keyed state admits each event_id exactly once. The oracle is the
     batch distinct — the original log."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
         dedup_stream,
-        drain_to_memory,
         read_event_stream,
+        run_drain,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2624,13 +2592,10 @@ def streaming_dedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.coalesce(1).write.mode("append").parquet(src)  # full replay
 
     src = _staged_stream_src("stream_dedup", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_dedup_ckpt_")
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     deduped = dedup_stream(
         read_event_stream(spark, src), ["event_id"], watermark="100 hours"
     )
-    out = drain_to_memory(spark, deduped, name, ckpt, shuffle_partitions=8)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out = run_drain(deduped, shuffle_partitions=8).table
     return out.select(
         "event_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),

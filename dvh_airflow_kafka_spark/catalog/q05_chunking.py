@@ -1148,12 +1148,10 @@ def streaming_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``streaming/keyindex.py``). Because batches arrive in doc_id order,
     first-seen == min(doc_id), which is exactly the batch window oracle —
     the streaming drain must hash-match it."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from dvh_airflow_kafka_spark.streaming.stateful import drain_to_memory
+    from dvh_airflow_kafka_spark.streaming.stateful import (
+        read_event_stream,
+        run_drain,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     pool = docs.unionAll(
@@ -1173,25 +1171,15 @@ def streaming_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(src)
 
     src = _staged_stream_src("stream_corpus", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_corpus_ckpt_")
-    from dvh_airflow_kafka_spark.io import stream_source_schema
-
-    schema = stream_source_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = read_event_stream(spark, src)
     gated = stream.filter(F.size(xtext.tokens(F.col("text"))) >= 5).select(
         "doc_id",
         xtext.fingerprint(F.col("text")).alias("fingerprint"),
         F.size(xtext.tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
     deduped = gated.dropDuplicates(["fingerprint"])
-    name = f"stream_corpus_{uuid.uuid4().hex[:8]}"
-    out = drain_to_memory(spark, deduped, name, ckpt, shuffle_partitions=8)
+    out = run_drain(deduped, shuffle_partitions=8).table
     rows = out.select("doc_id", "fingerprint", "n_tokens").collect()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(
         rows, "doc_id long, fingerprint string, n_tokens long"
     )
@@ -1211,15 +1199,10 @@ def streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-file drain would reduce to batch). No sentinel/timeout is
     needed: an event's verdict depends only on prior events, so each
     batch emits its anomalies immediately."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
         detect_anomalies_with_state,
-        drain_to_memory,
         read_event_stream,
+        run_drain,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1234,11 +1217,8 @@ def streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         _staged_range_write(ev, src, 3, "ts")
 
     src = _staged_stream_src("stream_anom", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_anom_ckpt_")
-    name = f"stream_anom_{uuid.uuid4().hex[:8]}"
     anomalies = detect_anomalies_with_state(read_event_stream(spark, src))
-    out = drain_to_memory(spark, anomalies, name, ckpt, shuffle_partitions=8)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out = run_drain(anomalies, shuffle_partitions=8).table
     return out.select("event_id", "user_id", "value", "n_prior")
 
 
@@ -1268,15 +1248,10 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     evict join state, so state is the trailing 30-minute window per
     user — bounded at any stream length. Matches spanning micro-batch
     boundaries prove the state store is doing the work."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory,
         interval_join_streams,
         read_event_stream,
+        run_drain,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1291,8 +1266,6 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         _staged_range_write(ev, src, 3, "ts")
 
     src = _staged_stream_src("stream_ij", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_ij_ckpt_")
-
     purchases = read_event_stream(spark, src).filter(
         F.col("event_type") == "purchase"
     )
@@ -1309,10 +1282,7 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lag_us"
         ),
     )
-    name = f"stream_ij_{uuid.uuid4().hex[:8]}"
-    out = drain_to_memory(spark, joined, name, ckpt, shuffle_partitions=4)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return run_drain(joined, shuffle_partitions=4).table
 
 
 @register(

@@ -405,13 +405,9 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     enrichment is stateless, which is exactly why it scales to any
     stream rate. The oracle is the plain batch equi-join — streaming
     drain ≡ batch join, hash-checked cross-engine."""
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory,
         read_event_stream,
+        run_drain,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -438,11 +434,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
     )
-    ckpt = tempfile.mkdtemp(prefix="stream_enrich_ckpt_")
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    out = drain_to_memory(spark, enriched, name, ckpt, shuffle_partitions=8)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return run_drain(enriched, shuffle_partitions=8).table
 
 
 @register(
@@ -1022,14 +1014,10 @@ def streaming_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic matches a batch engine's. At 100 TB ingest this is the
     sketch shape you keep PERMANENTLY resident: O(sketch) state forever,
     no watermark, no eviction needed."""
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.ext import sketch as xsketch
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory_complete,
         read_event_stream,
+        run_drain,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1040,16 +1028,14 @@ def streaming_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _staged_range_write(docs, src, 4)
 
     src = _staged_stream_src("stream_cm", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_cm_ckpt_")
-    name = f"stream_cm_{uuid.uuid4().hex[:8]}"
     stream_toks = read_event_stream(spark, src).select(
         F.explode(xtext.tokens(F.col("text"))).alias("token")
     )
-    sketch = drain_to_memory_complete(
-        spark, xsketch.countmin_build(stream_toks), name, ckpt,
+    sketch = run_drain(
+        xsketch.countmin_build(stream_toks),
+        mode="complete",
         shuffle_partitions=8,
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ).table
     toks = docs.select(F.explode(xtext.tokens(F.col("text"))).alias("token"))
     return _countmin_report(spark, sketch, toks)
 
@@ -2253,15 +2239,10 @@ def streaming_left_outer_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     late-drop real purchases.  Oracled by the batch LEFT JOIN — an exact
     match certifies both the matched pairs AND the complete, exactly-once
     emission of the unmatched tail."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory,
         interval_join_streams_left_outer,
         read_event_stream,
+        run_drain,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -2306,8 +2287,6 @@ def streaming_left_outer_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             sent.coalesce(1).write.mode("append").parquet(src)
 
     src = _staged_stream_src("stream_loj", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_loj_ckpt_")
-
     purchases = read_event_stream(spark, src).filter(
         F.col("event_type") == "purchase"
     )
@@ -2324,9 +2303,7 @@ def streaming_left_outer_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lag_us"
         ),
     )
-    name = f"stream_loj_{uuid.uuid4().hex[:8]}"
-    out = drain_to_memory(spark, joined, name, ckpt, shuffle_partitions=4)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out = run_drain(joined, shuffle_partitions=4).table
     return out.filter(F.col("user_id") >= 0)
 
 

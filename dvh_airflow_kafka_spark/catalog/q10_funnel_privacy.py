@@ -997,7 +997,10 @@ def streaming_partitioned_sink_q(
     import shutil
     import tempfile
 
-    from dvh_airflow_kafka_spark.streaming.stateful import read_event_stream
+    from dvh_airflow_kafka_spark.streaming.stateful import (
+        read_event_stream,
+        run_drain,
+    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1014,18 +1017,9 @@ def streaming_partitioned_sink_q(
     src = _staged_stream_src("stream_psink", sf_dir, _write)
     out = tempfile.mkdtemp(prefix="stream_psink_out_")
     atexit.register(shutil.rmtree, out, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="stream_psink_ckpt_")
-    q = (
-        read_event_stream(spark, src)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .partitionBy("event_type")
-        .trigger(availableNow=True)
-        .start()
+    run_drain(
+        read_event_stream(spark, src), sink=out, partition_by=["event_type"]
     )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     back = spark.read.parquet(out)
     return (
         back.filter(F.col("event_type").isin("purchase", "error"))
@@ -1175,13 +1169,9 @@ def streaming_late_data_audit_q(
     late floods of historical data cost NOTHING (dropped pre-state),
     the property that makes watermarked ingest survivable under
     backfill storms."""
-    import shutil
-    import tempfile
-    import uuid
-
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory,
         read_event_stream,
+        run_drain,
         windowed_event_counts,
     )
 
@@ -1211,16 +1201,13 @@ def streaming_late_data_audit_q(
         _sentinel(20)
 
     src = _staged_stream_src("stream_late", sf_dir, _write)
-    ckpt = tempfile.mkdtemp(prefix="stream_late_ckpt_")
-    name = f"stream_late_{uuid.uuid4().hex[:8]}"
     counts = windowed_event_counts(
         read_event_stream(spark, src),
         window="1 hour",
         watermark="1 minute",
         exact_sum=True,
     )
-    out = drain_to_memory(spark, counts, name, ckpt, shuffle_partitions=8)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out = run_drain(counts, shuffle_partitions=8).table
     return out.filter(F.col("event_type") != "__sentinel").select(
         F.unix_micros(F.col("window_start")).alias("window_start_us"),
         "event_type",

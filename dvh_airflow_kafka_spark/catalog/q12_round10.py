@@ -444,9 +444,9 @@ def streaming_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``tests/test_scale_probe_stream.py``)."""
     from dvh_airflow_kafka_spark.ext.sketch import verify_candidate_counts
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_with_checkpoint,
         mg_candidates_with_state,
         read_event_stream,
+        run_drain,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -461,13 +461,11 @@ def streaming_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, src).select(
         (F.col("doc_id") % _MG_SHARDS).alias("shard"), "text"
     )
-    emitted = drain_with_checkpoint(
-        spark,
+    emitted = run_drain(
         mg_candidates_with_state(stream, k=_MG_K),
         mode="update",
-        prefix="stream_mg",
         shuffle_partitions=_MG_SHARDS,
-    )
+    ).table
     candidates = emitted.select("token").distinct()
     slim = ensure_parallelism(docs.select(F.col("text").alias("__text")))
     return verify_candidate_counts(slim, candidates, k_state=_MG_K)
@@ -503,8 +501,8 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_estimate_report,
     )
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_with_checkpoint,
         read_event_stream,
+        run_drain,
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
@@ -522,9 +520,7 @@ def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bucket")
         .agg(F.max("rho").alias("m_rho"))
     )
-    snapshot = drain_with_checkpoint(
-        spark, regs, mode="complete", prefix="stream_hll", shuffle_partitions=8
-    )
+    snapshot = run_drain(regs, mode="complete", shuffle_partitions=8).table
     exact = ev.groupBy("event_type").agg(
         F.count_distinct("user_id").cast("long").alias("n_exact")
     )
@@ -568,9 +564,9 @@ def streaming_kmv_minima(spark: SparkSession, sf_dir: str) -> DataFrame:
         theta_overlap_report,
     )
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_with_checkpoint,
         kmv_minima_with_state,
         read_event_stream,
+        run_drain,
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
@@ -585,13 +581,11 @@ def streaming_kmv_minima(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("g"),
         kmv_hash(F.col("user_id")).alias("h"),
     )
-    emitted = drain_with_checkpoint(
-        spark,
+    emitted = run_drain(
         kmv_minima_with_state(stream, k=_KMV_K),
         mode="update",
-        prefix="stream_kmv",
         shuffle_partitions=8,
-    )
+    ).table
     # update-mode emission history -> each group's LATEST snapshot (the
     # seq counter is monotone per group; the window partitions by group)
     w = Window.partitionBy("g").orderBy(F.col("seq").desc())
@@ -784,8 +778,8 @@ def _bloom_bits_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode snapshot.  Returns the one-column ``(pos)`` frame."""
     from dvh_airflow_kafka_spark.ext.bloom import bloom_positions
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_with_checkpoint,
         read_event_stream,
+        run_drain,
     )
 
     sink = (
@@ -807,9 +801,7 @@ def _bloom_bits_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("pos")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    snapshot = drain_with_checkpoint(
-        spark, regs, mode="complete", prefix="stream_bloom", shuffle_partitions=8
-    )
+    snapshot = run_drain(regs, mode="complete", shuffle_partitions=8).table
     return snapshot.select("pos")
 
 

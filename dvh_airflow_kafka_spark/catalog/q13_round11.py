@@ -217,8 +217,8 @@ def streaming_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     current and the weekly budget recomputation is a readout over the
     snapshot, not a corpus rescan."""
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_with_checkpoint,
         read_event_stream,
+        run_drain,
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -246,10 +246,7 @@ def streaming_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    snap = drain_with_checkpoint(
-        spark, totals, mode="complete", prefix="stream_mix",
-        shuffle_partitions=8,
-    )
+    snap = run_drain(totals, mode="complete", shuffle_partitions=8).table
     return _rebalance_readout(snap)
 
 
@@ -787,8 +784,8 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_ngrams_from_tokens,
     )
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_with_checkpoint,
         read_event_stream,
+        run_drain,
         shingle_index_probe_with_state,
     )
 
@@ -842,13 +839,9 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode("sh").alias("g"),
         )
     )
-    emitted = drain_with_checkpoint(
-        spark,
-        shingle_index_probe_with_state(shing),
-        mode="append",
-        prefix="stream_gate",
-        shuffle_partitions=8,
-    )
+    emitted = run_drain(
+        shingle_index_probe_with_state(shing), shuffle_partitions=8
+    ).table
     pairs = emitted.groupBy("in_id", "ex_id", "n_in", "n_ex").agg(
         F.sum("c").alias("c")
     )

@@ -1130,9 +1130,9 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         _PRIORITY_SALT,
     )
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_with_checkpoint,
         priority_topk_with_state,
         read_event_stream,
+        run_drain,
     )
     from pyspark.sql import Window
 
@@ -1174,13 +1174,11 @@ def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "priority", F.expr("weight * 4294967296 DIV (__hv + 1)")
         )
     )
-    emitted = drain_with_checkpoint(
-        spark,
+    emitted = run_drain(
         priority_topk_with_state(stream, k=_PRIORITY_K),
         mode="update",
-        prefix="stream_priority",
         shuffle_partitions=8,
-    )
+    ).table
     w = Window.partitionBy("g").orderBy(F.col("seq").desc())
     latest = (
         emitted.withColumn("rn", F.row_number().over(w))

@@ -92,6 +92,7 @@ from dvh_airflow_kafka_spark.ext.text import tokens
 from dvh_airflow_kafka_spark.operators import scrub_flagged_persons
 from dvh_airflow_kafka_spark.sources import events_as_kafka_frame, with_envelope
 from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
+from dvh_airflow_kafka_spark.streaming.stateful import run_drain
 
 # the envelope + passthrough columns every ingested row carries
 SINK_COLS = [
@@ -925,17 +926,17 @@ def run_ingest_pipeline(
     of silently mis-probing.
 
     ``shuffle_partitions`` right-sizes the per-batch aggregation
-    exchanges (Bloom-bit distincts, monitor partial groupBys) exactly
-    as ``drain_to_memory``'s same-named knob right-sizes state
-    partitions (the sidecar append has no exchange to size, and its
-    compaction writes one file): the cost of each tiny artifact job
-    has a fixed per-partition term (task launch + commit file), so the
-    partition count should track the MICRO-BATCH's data volume, not
-    the cluster width.  A production drain sizes it to steady-state
-    batch volume (hundreds of partitions for GB batches); the staged
-    catalog drains carry ~10⁴-10⁵ rows per batch where 8 is right.
-    ``None`` keeps the session value.  Restored after termination; the
-    foreachBatch clone captures it at start."""
+    exchanges (Bloom-bit distincts, monitor partial groupBys); it is
+    ``stateful.run_drain``'s knob, passed through (the sidecar append
+    has no exchange to size, and its compaction writes one file): the
+    cost of each tiny artifact job has a fixed per-partition term (task
+    launch + commit file), so the partition count should track the
+    MICRO-BATCH's data volume, not the cluster width.  A production
+    drain sizes it to steady-state batch volume (hundreds of partitions
+    for GB batches); the staged catalog drains carry ~10⁴-10⁵ rows per
+    batch where 8 is right.  ``None`` keeps the session value.
+    ``run_drain`` restores it after termination; the foreachBatch clone
+    captures it at start."""
     from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
 
     key_cols = list(key_cols)
@@ -1112,20 +1113,10 @@ def run_ingest_pipeline(
         dirs.probe_log[-1]["n_rows"] = n_rows
         dirs.probe_log[-1]["n_admitted"] = n_adm
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # restore only after termination: the stream thread clones the
-        # session state lazily (same rationale as drain_to_memory)
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_drain(
+        stream,
+        sink=process,
+        checkpoint=checkpoint_dir,
+        shuffle_partitions=shuffle_partitions,
+    )
     return dirs

@@ -56,6 +56,7 @@ from dvh_airflow_kafka_spark.sinks.writers import write_parquet_append
 from dvh_airflow_kafka_spark.sources.envelope import as_kafka_frame, with_envelope
 from dvh_airflow_kafka_spark.streaming.fsio import HadoopFs
 from dvh_airflow_kafka_spark.streaming.keyindex import SinkKeyIndex
+from dvh_airflow_kafka_spark.streaming.stateful import read_event_stream, run_drain
 
 
 @dataclass
@@ -64,31 +65,6 @@ class StreamingRun:
 
     summary: ProcessSummary = field(default_factory=ProcessSummary)
     batches: int = 0
-
-
-def _drain(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int,
-    process_batch: Callable[[DataFrame, int], None],
-) -> None:
-    """Run ``process_batch`` on each micro-batch of the parquet log until
-    it is drained (``availableNow``). File streams need an explicit
-    schema: a batch read of the same dir, cached per path
-    (``io.stream_source_schema``)."""
-    from dvh_airflow_kafka_spark.io import stream_source_schema
-
-    (
-        spark.readStream.schema(stream_source_schema(spark, source_dir))
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def run_streaming_pipeline(
@@ -228,7 +204,13 @@ def run_streaming_pipeline(
         # the reference's post-commit counter (src/kafka_source.py:394).
         run.summary.committed_to_producer_count += n
 
-    _drain(spark, source_dir, checkpoint_dir, max_files_per_trigger, process_batch)
+    run_drain(
+        read_event_stream(
+            spark, source_dir, max_files_per_trigger=max_files_per_trigger
+        ),
+        sink=process_batch,
+        checkpoint=checkpoint_dir,
+    )
     if fail_on_non_critical and run.summary.error_count > 0:
         raise RuntimeError(
             f"{run.summary.error_count} non-critical errors during run "
@@ -347,5 +329,11 @@ def run_streaming_produce(
             raise RuntimeError("injected failure after produce")
         run.summary.committed_to_producer_count += n
 
-    _drain(spark, source_dir, checkpoint_dir, max_files_per_trigger, process_batch)
+    run_drain(
+        read_event_stream(
+            spark, source_dir, max_files_per_trigger=max_files_per_trigger
+        ),
+        sink=process_batch,
+        checkpoint=checkpoint_dir,
+    )
     return run

@@ -28,7 +28,11 @@ this runnable against an unbounded stream.
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+import shutil
+import tempfile
+import uuid
+from dataclasses import dataclass
+from typing import Callable, Iterator, Sequence, Tuple
 
 import pandas as pd
 
@@ -206,122 +210,136 @@ def _parse_minutes(spec: str) -> float:
     return {"second": n / 60, "minute": n, "hour": n * 60}[unit.rstrip("s")]
 
 
-# Observability for the scaling probe (tools/scaling_probe.py stream
-# mode): after every drain, the per-batch state-store row counts of the
-# LAST drained query.  Proves state-boundedness claims ("countmin grid
-# flat, interval-join state ∝ watermark window") from the engine's own
-# progress metrics instead of asserting them in prose.
-LAST_DRAIN_STATS: dict = {}
+@dataclass(frozen=True)
+class DrainRecord:
+    """What one drain did, read from the engine's own per-trigger
+    progress events (``q.recentProgress``): the run id and the
+    state-store rows after each micro-batch (summed over the query's
+    stateful operators; 0 for a stateless query).  ``table`` is the
+    memory sink's result as a batch frame, None for the other sinks."""
+
+    run_id: str
+    state_rows_per_batch: tuple[int, ...]
+    table: DataFrame | None = None
+
+    @property
+    def n_batches(self) -> int:
+        return len(self.state_rows_per_batch)
+
+    @property
+    def max_state_rows(self) -> int:
+        return max(self.state_rows_per_batch, default=0)
+
+
+_last_record: DrainRecord | None = None
+
+
+def last_drain() -> DrainRecord | None:
+    """The most recent drain's record, for readers that reach a drain
+    only through a catalog query (the scaling probe's stream mode, the
+    state-boundedness tests); None if that drain's progress read
+    failed."""
+    return _last_record
+
 
 # q.recentProgress is a ring buffer capped by
 # spark.sql.streaming.numRecentProgressUpdates (default 100); a drain
 # with more micro-batches than that would silently under-report
-# n_batches/max_state_rows in the scaling probe.  The drains raise the
-# cap before start(); keep it comfortably above the volume-scaled
-# batch count (ceil(n/50k)) at any input the probe stages.
+# n_batches/max_state_rows in its record.  The runner raises the cap
+# before start(); keep it comfortably above the volume-scaled batch
+# count (ceil(n/50k)) at any input the scaling probe stages.
 _PROGRESS_BUFFER = 10_000
-
-
 _PROGRESS_CAP_KEY = "spark.sql.streaming.numRecentProgressUpdates"
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 
-def _raise_progress_cap(spark: SparkSession) -> str | None:
-    """Raise the progress ring-buffer cap and return the previous value
-    (None if unset) so the drain can restore it — the cap must not leak
-    to everything after the drain on the shared session."""
-    old = spark.conf.get(_PROGRESS_CAP_KEY, None)
-    spark.conf.set(_PROGRESS_CAP_KEY, str(_PROGRESS_BUFFER))
-    return old
-
-
-def _restore_progress_cap(spark: SparkSession, old: str | None) -> None:
-    if old is None:
-        spark.conf.unset(_PROGRESS_CAP_KEY)
-    else:
-        spark.conf.set(_PROGRESS_CAP_KEY, old)
-
-
-def _record_drain_stats(q) -> None:
-    try:
-        progress = q.recentProgress
-        state_rows = []
-        for p in progress:
-            ops = p.get("stateOperators") or []
-            state_rows.append(
-                sum(int(op.get("numRowsTotal", 0)) for op in ops)
-            )
-        LAST_DRAIN_STATS.clear()
-        LAST_DRAIN_STATS.update(
-            {
-                "n_batches": len(progress),
-                "state_rows_per_batch": state_rows,
-                "max_state_rows": max(state_rows, default=0),
-            }
-        )
-    except Exception:  # metrics must never fail a drain
-        LAST_DRAIN_STATS.clear()
-
-
-def drain_to_memory(
-    spark: SparkSession,
+def run_drain(
     stream: DataFrame,
-    name: str,
-    checkpoint_dir: str,
     *,
+    sink: str | Callable[[DataFrame, int], None] | None = None,
+    mode: str = "append",
+    checkpoint: str | None = None,
     shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Drain a streaming frame into an in-memory table (availableNow) and
-    return it as a batch frame — the test-side sink.
+    partition_by: Sequence[str] = (),
+) -> DrainRecord:
+    """Drain ``stream`` until its source is exhausted
+    (``availableNow``) and return the drain's record — the package's
+    one bounded-drain runner, the Spark form of the reference's
+    poll/write/commit loop that stops at the first empty poll.
 
-    ``shuffle_partitions`` right-sizes the query's state-store partition
-    count: stateful operators pin ``spark.sql.shuffle.partitions`` at
-    FIRST start (it becomes part of the checkpoint), and every
-    micro-batch then pays a fixed per-partition cost (task launch +
-    state-store open/commit) regardless of data volume.  A production
-    stream sizes this to its steady-state load; the staged catalog
-    drains carry a few hundred rows per batch, where 32 state partitions
-    are pure overhead.  The session value is restored after start — the
-    conf is only read at query planning."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    ``sink`` picks the writer: a callable is a ``foreachBatch`` body
+    (Spark commits each epoch only after it returns); a path is the
+    exactly-once parquet file sink (``_spark_metadata`` commit log),
+    partitioned by ``partition_by``; None is a memory sink under a
+    fresh query name, returned as the record's ``table``.  ``mode`` is
+    the output mode (``append``, ``update`` or ``complete``).
+
+    ``checkpoint`` None drains under a temporary checkpoint that is
+    removed even when the drain raises; a given checkpoint is kept, so
+    a restart with it resumes from the committed offsets and state.
+
+    ``shuffle_partitions`` right-sizes the query's partition count:
+    stateful operators pin ``spark.sql.shuffle.partitions`` at FIRST
+    start (it becomes part of the checkpoint), and every micro-batch
+    then pays a fixed per-partition cost (task launch + state-store
+    open/commit) regardless of data volume.  A production stream sizes
+    it to its steady-state load; the staged catalog drains carry a few
+    hundred rows per batch, where 32 state partitions are pure
+    overhead.  None keeps the session value.  Both it and the progress
+    cap are restored only after termination: the stream thread clones
+    the session state lazily, so flipping them back right after
+    ``start()`` could race it into the restored value.
+
+    A failed progress read never fails the drain: its record has no
+    batches, and ``last_drain()`` returns None."""
+    global _last_record
+    spark = stream.sparkSession
+    writer = stream.writeStream.outputMode(mode)
+    name = None
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    elif sink is not None:
+        writer = writer.format("parquet").option("path", sink)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+    else:
+        name = f"drain_{uuid.uuid4().hex}"
+        writer = writer.format("memory").queryName(name)
+    ckpt = checkpoint or tempfile.mkdtemp(prefix="drain_ckpt_")
+    old_parts = spark.conf.get(_SHUFFLE_KEY)
+    old_cap = spark.conf.get(_PROGRESS_CAP_KEY, None)
     if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    old_cap = _raise_progress_cap(spark)
+        spark.conf.set(_SHUFFLE_KEY, str(shuffle_partitions))
+    spark.conf.set(_PROGRESS_CAP_KEY, str(_PROGRESS_BUFFER))
     try:
         q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
+            writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        _record_drain_stats(q)
     finally:
-        # restore only after termination: the stream thread clones the
-        # session state lazily, so flipping back right after start()
-        # could race it into the restored value
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-        _restore_progress_cap(spark, old_cap)
-    return spark.table(name)
-
-
-def drain_to_parquet(
-    stream: DataFrame, path: str, checkpoint_dir: str
-) -> None:
-    """Drain into a parquet sink (availableNow). Unlike the memory sink
-    this one is fault-tolerant: restarting with the same checkpoint
-    resumes from committed offsets + state."""
-    q = (
-        stream.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        spark.conf.set(_SHUFFLE_KEY, old_parts)
+        if old_cap is None:
+            spark.conf.unset(_PROGRESS_CAP_KEY)
+        else:
+            spark.conf.set(_PROGRESS_CAP_KEY, old_cap)
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    table = spark.table(name) if name else None
+    try:
+        rows = tuple(
+            sum(
+                int(op.get("numRowsTotal", 0))
+                for op in p.get("stateOperators") or []
+            )
+            for p in q.recentProgress
+        )
+    except Exception:  # metrics must never fail a drain
+        _last_record = None
+        return DrainRecord(str(q.runId), (), table)
+    _last_record = DrainRecord(str(q.runId), rows, table)
+    return _last_record
 
 
 def read_event_stream(
@@ -1013,110 +1031,6 @@ def running_totals_with_state(stream: DataFrame) -> DataFrame:
             timeMode="None",
         )
     )
-
-
-def drain_to_memory_update(
-    spark: SparkSession,
-    stream: DataFrame,
-    name: str,
-    checkpoint_dir: str,
-    *,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Update-mode drain: the memory sink APPENDS every micro-batch's
-    emitted rows, so the returned table holds the full emission history —
-    the reader applies whatever per-key reduction the query's semantics
-    call for (distinct for candidate supersets, max-per-key for running
-    totals).  ``shuffle_partitions`` right-sizes state partitions exactly
-    as in ``drain_to_memory``."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    old_cap = _raise_progress_cap(spark)
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_drain_stats(q)
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-        _restore_progress_cap(spark, old_cap)
-    return spark.table(name)
-
-
-def drain_with_checkpoint(
-    spark: SparkSession,
-    stream: DataFrame,
-    *,
-    mode: str,
-    prefix: str,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Managed-checkpoint drain shared by the catalog's streaming twins:
-    mkdtemp checkpoint + uuid-suffixed memory-sink name, drain in the
-    given output mode (``append``, ``update`` or ``complete``), and remove the
-    checkpoint directory even when the drain raises — the
-    leak-on-exception fix lives here once instead of in every twin."""
-    import shutil
-    import tempfile
-    import uuid
-
-    ckpt = tempfile.mkdtemp(prefix=f"{prefix}_ckpt_")
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    fn = {
-        "append": drain_to_memory,
-        "update": drain_to_memory_update,
-        "complete": drain_to_memory_complete,
-    }[mode]
-    try:
-        return fn(
-            spark, stream, name, ckpt, shuffle_partitions=shuffle_partitions
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def drain_to_memory_complete(
-    spark: SparkSession,
-    stream: DataFrame,
-    name: str,
-    checkpoint_dir: str,
-    *,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Complete-mode drain for RUNNING (unwatermarked) aggregates: after
-    the availableNow drain the memory sink holds the final state-store
-    snapshot — e.g. a streaming sketch's counters. Append mode would
-    reject an aggregate with no watermark; complete mode is the
-    state-readout semantics these queries want.  ``shuffle_partitions``
-    right-sizes state partitions exactly as in ``drain_to_memory``."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    old_cap = _raise_progress_cap(spark)
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_drain_stats(q)
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-        _restore_progress_cap(spark, old_cap)
-    return spark.table(name)
 
 
 # --------------------------------------------------------------------------

@@ -3,7 +3,7 @@ regression in the drained stateful queries must fail loudly, not wait
 for a manual ``tools/scaling_probe.py stream`` run.
 
 Invariants (measured from the engine's own ``stateOperators.numRowsTotal``
-via ``stateful.LAST_DRAIN_STATS``, never prose):
+via the drain runner's record, ``stateful.last_drain()``, never prose):
 
 - ``streaming_countmin_sketch``: state is the fixed depth×256 counter
   grid + top-k heads — a function of the sketch SHAPE. It must be
@@ -70,9 +70,9 @@ def _drain_state(spark, name: str, sf_dir: str) -> int:
     REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    stats = dict(stateful.LAST_DRAIN_STATS)
-    assert stats, f"{name}: drain recorded no progress stats"
-    return int(stats["max_state_rows"])
+    record = stateful.last_drain()
+    assert record is not None, f"{name}: drain recorded no progress stats"
+    return record.max_state_rows
 
 
 def test_stream_state_flat_under_2x_replication(spark, sf_dir, tmp_path):

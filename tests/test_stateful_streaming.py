@@ -6,15 +6,15 @@ oracle for the streaming operator."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dvh_airflow_kafka_spark.streaming.stateful import (
-    drain_to_memory,
-    drain_to_parquet,
     read_event_stream,
+    run_drain,
     sessionize_with_state,
     windowed_event_counts,
 )
@@ -88,9 +88,7 @@ def _batch_sessions(spark, source_dir):
 def test_stateful_sessionization_matches_batch_oracle(spark, session_log, tmp_path):
     stream = read_event_stream(spark, session_log)
     sessions = sessionize_with_state(stream, gap=f"{GAP_MIN} minutes")
-    got = drain_to_memory(
-        spark, sessions, "sessions_t1", str(tmp_path / "ckpt")
-    ).collect()
+    got = run_drain(sessions, checkpoint=str(tmp_path / "ckpt")).table.collect()
     # Every session whose timeout the final watermark passed must be out.
     # The far-future events (user 3 at +600/+1200min) push the watermark
     # past every user-1/user-2 session end + gap.
@@ -122,19 +120,19 @@ def test_stateful_sessionization_resumes_from_checkpoint(
     sink = str(tmp_path / "sessions")
     stream = read_event_stream(spark, session_log)
     sessions = sessionize_with_state(stream, gap=f"{GAP_MIN} minutes")
-    drain_to_parquet(sessions, sink, ckpt)
+    run_drain(sessions, sink=sink, checkpoint=ckpt)
     first = spark.read.parquet(sink).collect()
     assert len(first) >= 3  # u1 two sessions + u2 one
 
     # a third file far in the future times out user 3's open sessions
     extra = _mk_events(spark, [(9, 4, 5000, "view", 1.0)])
     extra.coalesce(1).write.mode("append").parquet(session_log)
-    drain_to_parquet(
+    run_drain(
         sessionize_with_state(
             read_event_stream(spark, session_log), gap=f"{GAP_MIN} minutes"
         ),
-        sink,
-        ckpt,
+        sink=sink,
+        checkpoint=ckpt,
     )
     combined = spark.read.parquet(sink).collect()
     # the second drain only processes the new file: no re-emission of the
@@ -148,7 +146,7 @@ def test_stateful_sessionization_resumes_from_checkpoint(
 def test_windowed_counts_match_batch_groupby(spark, session_log, tmp_path):
     stream = read_event_stream(spark, session_log)
     counts = windowed_event_counts(stream, window="1 hour", watermark="0 seconds")
-    got = drain_to_memory(spark, counts, "win_t1", str(tmp_path / "ckpt"))
+    got = run_drain(counts, checkpoint=str(tmp_path / "ckpt")).table
 
     ev = spark.read.parquet(session_log)
     final_wm = ev.agg(F.max("ts")).collect()[0][0]
@@ -186,7 +184,7 @@ def test_dedup_stream_drops_cross_batch_replays(spark, tmp_path):
     deduped = dedup_stream(
         read_event_stream(spark, src), keys=["event_id"], watermark="2 hours"
     )
-    got = drain_to_memory(spark, deduped, "dedup_t1", str(tmp_path / "ckpt"))
+    got = run_drain(deduped, checkpoint=str(tmp_path / "ckpt")).table
     ids = sorted(r["event_id"] for r in got.collect())
     assert ids == [1, 2, 3]  # replayed id=2 emitted exactly once
 
@@ -197,8 +195,6 @@ def test_anomaly_detector_matches_batch_window(spark, sf_dir, tmp_path):
     from dvh_airflow_kafka_spark.io import load_table
     from dvh_airflow_kafka_spark.streaming.stateful import (
         detect_anomalies_with_state,
-        drain_to_memory,
-        read_event_stream,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -215,12 +211,10 @@ def test_anomaly_detector_matches_batch_window(spark, sf_dir, tmp_path):
     ):
         ev.filter(pred).coalesce(1).write.mode("append").parquet(src)
 
-    out = drain_to_memory(
-        spark,
+    out = run_drain(
         detect_anomalies_with_state(read_event_stream(spark, src)),
-        "anom_test",
-        str(tmp_path / "ckpt"),
-    )
+        checkpoint=str(tmp_path / "ckpt"),
+    ).table
     got = {r.event_id: r.n_prior for r in out.collect()}
 
     # batch reference: integer-exact rolling window
@@ -258,9 +252,7 @@ def test_interval_join_matches_across_batches(spark, tmp_path):
     import datetime as pdt
 
     from dvh_airflow_kafka_spark.streaming.stateful import (
-        drain_to_memory,
         interval_join_streams,
-        read_event_stream,
     )
 
     t0 = pdt.datetime(2024, 1, 1, 12, 0, 0)
@@ -297,9 +289,7 @@ def test_interval_join_matches_across_batches(spark, tmp_path):
         F.col("l.event_id").alias("purchase_id"),
         F.col("r.event_id").alias("error_id"),
     )
-    out = drain_to_memory(
-        spark, joined, "ij_test", str(tmp_path / "ckpt")
-    ).collect()
+    out = run_drain(joined, checkpoint=str(tmp_path / "ckpt")).table.collect()
     pairs = {(r.purchase_id, r.error_id) for r in out}
     assert pairs == {(3, 1)}  # in-window cross-batch match only
 
@@ -405,3 +395,74 @@ def test_transform_with_state_running_totals(spark, sf_dir, tmp_path):
         .collect()
     }
     assert last == batch and batch
+
+
+def test_run_drain_failure_contract(spark, tmp_path, monkeypatch):
+    """The runner's contract when a foreachBatch body raises: the error
+    propagates as the query's exception, the session confs the runner
+    set read their prior values again, a managed checkpoint is removed,
+    and an explicit one is kept so that a rerun resumes at the failed
+    batch.  A successful stateful drain returns its progress record."""
+    import glob
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from dvh_airflow_kafka_spark.streaming.stateful import last_drain
+
+    src = str(tmp_path / "log")
+    for i in range(3):
+        _mk_events(spark, [(i, 1, 10 * i, "view", 1.0)]).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    def managed() -> list:
+        return glob.glob(str(tmp / "drain_ckpt_*"))
+
+    parts_key = "spark.sql.shuffle.partitions"
+    cap_key = "spark.sql.streaming.numRecentProgressUpdates"
+    spark.conf.unset(cap_key)
+    parts = spark.conf.get(parts_key)
+    seen: list = []
+
+    def fail_on_second(df, epoch_id):
+        seen.append((epoch_id, df.count(), len(managed())))
+        if len(seen) == 2:
+            raise RuntimeError("injected failure in batch 2")
+
+    with pytest.raises(StreamingQueryException, match="injected failure"):
+        run_drain(
+            read_event_stream(spark, src),
+            sink=fail_on_second,
+            shuffle_partitions=int(parts) + 3,
+        )
+    assert [(e, n) for e, n, _ in seen] == [(0, 1), (1, 1)]
+    assert all(n_ckpt == 1 for _, _, n_ckpt in seen)  # it existed...
+    assert managed() == []  # ...and is gone after the failure
+    assert spark.conf.get(parts_key) == parts
+    assert spark.conf.get(cap_key, None) is None  # unset again
+
+    ckpt = str(tmp_path / "ckpt")
+    seen.clear()
+    with pytest.raises(StreamingQueryException, match="injected failure"):
+        run_drain(
+            read_event_stream(spark, src), sink=fail_on_second, checkpoint=ckpt
+        )
+    assert os.path.isdir(os.path.join(ckpt, "commits"))
+    rerun: list = []
+    rec = run_drain(
+        read_event_stream(spark, src),
+        sink=lambda df, epoch_id: rerun.append(epoch_id),
+        checkpoint=ckpt,
+    )
+    assert rerun == [1, 2]  # batch 1 replays, batch 0 stays committed
+    assert rec.n_batches == 2 and rec.table is None
+
+    counts = read_event_stream(spark, src).groupBy("event_type").count()
+    rec = run_drain(counts, mode="complete")
+    assert rec.n_batches == 3 and rec.max_state_rows > 0
+    assert rec.run_id and last_drain() is rec
+    assert [tuple(r) for r in rec.table.collect()] == [("view", 3)]

@@ -724,8 +724,8 @@ def probe_stream(max_factor: int = 4) -> None:
       state ∝ open windows inside the watermark, not total rows.
 
     Each run reads the engine's own ``stateOperators.numRowsTotal``
-    progress metrics (captured by ``drain_to_memory``'s
-    ``LAST_DRAIN_STATS``), not a prose argument."""
+    progress metrics (the drain runner's record,
+    ``stateful.last_drain()``), not a prose argument."""
     import os
     import shutil
     import tempfile
@@ -788,9 +788,9 @@ def probe_stream(max_factor: int = 4) -> None:
                 "overwrite"
             ).save()
             row[f"{key}_sec"] = round(time.time() - t0, 2)
-            stats = dict(stateful.LAST_DRAIN_STATS)
-            row[f"{key}_max_state_rows"] = stats.get("max_state_rows")
-            row[f"{key}_batches"] = stats.get("n_batches")
+            record = stateful.last_drain()
+            row[f"{key}_max_state_rows"] = record.max_state_rows if record else None
+            row[f"{key}_batches"] = record.n_batches if record else None
         out.append(row)
         print(f"# stream x{factor}: {row}", file=sys.stderr)
     shutil.rmtree(tmp, ignore_errors=True)
