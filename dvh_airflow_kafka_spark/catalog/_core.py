@@ -139,6 +139,27 @@ def _staged_range_write(
         os.utime(p, (base + i, base + i))
 
 
+def _staged_file_write(src: str, files) -> None:
+    """Stage each ``(name, df)`` of ``files`` as the ONE parquet file
+    ``src/name``, written in the given order — the order
+    ``_staged_stream_src``'s mtime re-stamp turns into micro-batch order
+    for drains that take one file per trigger."""
+    import glob as _glob
+    import os
+    import shutil
+    import tempfile
+
+    os.makedirs(src, exist_ok=True)
+    for name, df in files:
+        tmp = tempfile.mkdtemp(prefix="stage_file_")
+        try:
+            df.coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            shutil.move(part, os.path.join(src, name))
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
 # --------------------------------------------------------------------------
 # Staged-bytes partial oracles.  Some kernels (BPE encode, MinHash/SimHash
 # signatures) have no SQL form, but everything DOWNSTREAM of their output
@@ -215,7 +236,7 @@ def register(name: str, sql: Optional[str] = None):
 # ``bpe_learn_merges_table`` graduated to a STAGED partial oracle in
 # round 13 (q07_clustering.py) and ``auto_compaction_policy`` and
 # ``erasure_key_purge`` are round 13's new compositions
-# (q15_round13.py) — all three enter via the never-certified head,
+# (now in q14_ingest.py) — all three enter via the never-certified head,
 # displacing ``column_encoding_stats`` and ``zorder_layout_audit``
 # (green r8, unchanged) to the round-14 rotation.
 # ROUND-14 NOTE (next rotation): bump _WINDOW_BUILT_FROM_ROUND to 13,

@@ -11,6 +11,11 @@ from dvh_airflow_kafka_spark.ext import dedup as xdedup, multimodal as xmm, simi
 from dvh_airflow_kafka_spark.io import ensure_parallelism, load_table
 from dvh_airflow_kafka_spark.sources import events_as_kafka_frame, with_envelope
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from dvh_airflow_kafka_spark.ext.sketch import (
+    DDSKETCH_QS as _DDSKETCH_QS,
+    ddsketch_buckets as _ddsketch_buckets,
+    ddsketch_report as _ddsketch_report,
+)
 from dvh_airflow_kafka_spark.catalog._core import (
     _stage_frame,
     _staged_range_write,
@@ -1250,8 +1255,6 @@ def ann_recall_at_k_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DDSKETCH_QS = (50, 90, 99)  # reported percentiles
-
 _DDSKETCH_SQL = f"""
     WITH v AS (
         SELECT event_type,
@@ -1287,72 +1290,6 @@ _DDSKETCH_SQL = f"""
     SELECT event_type, q_pct, n, b, s, value_micro_hi, cum
     FROM hit WHERE rn = 1
     """
-
-
-def _ddsketch_buckets(ev: DataFrame) -> DataFrame:
-    """(event_type, b, s) bucket rows — the stateless projection shared
-    by the batch sketch and its streaming twin."""
-    vm = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
-    b = (F.length(F.bin(F.col("vm"))) - 1).cast("long")
-    return (
-        ev.select("event_type", vm.alias("vm"))
-        .filter(F.col("vm") >= 1)
-        .select(
-            "event_type",
-            b.alias("b"),
-            # column-valued shift distance needs the SQL form; the
-            # DataFrame shiftright() binds numBits as a Python int only
-            F.expr(
-                "shiftright(vm, cast(greatest(length(bin(vm)) - 5, 0)"
-                " as int)) & 15"
-            ).alias("s"),
-        )
-    )
-
-
-def _ddsketch_report(spark: SparkSession, c: DataFrame) -> DataFrame:
-    """Cumulative walk + percentile readout over a (event_type, b, s, c)
-    bucket-counts frame (bounded: ≤ ~16·30 rows per key)."""
-    wc = Window.partitionBy("event_type").orderBy("b", "s")
-    wn = Window.partitionBy("event_type")
-    cum = c.select(
-        "event_type",
-        "b",
-        "s",
-        "c",
-        F.when(
-            F.col("b") >= 4,
-            F.expr("shiftleft(s + 17, cast(b - 4 as int))"),
-        )
-        .otherwise(F.col("s") + 1)
-        .alias("hi"),
-        F.sum("c").over(wc).alias("cum"),
-        F.sum("c").over(wn).alias("n"),
-    )
-    qs = spark.createDataFrame([(q,) for q in _DDSKETCH_QS], "q_pct int")
-    hit = (
-        cum.crossJoin(F.broadcast(qs))
-        .filter(
-            F.col("cum")
-            >= F.floor((F.col("q_pct") * F.col("n") + 99) / 100)
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("event_type", "q_pct").orderBy("b", "s")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    return hit.select(
-        "event_type",
-        "q_pct",
-        "n",
-        "b",
-        "s",
-        F.col("hi").cast("long").alias("value_micro_hi"),
-        "cum",
-    )
 
 
 @register("ddsketch_value_quantiles", sql=_DDSKETCH_SQL)

@@ -1179,10 +1179,7 @@ def streaming_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deduped = gated.dropDuplicates(["fingerprint"])
     out = run_drain(deduped, shuffle_partitions=8).table
-    rows = out.select("doc_id", "fingerprint", "n_tokens").collect()
-    return spark.createDataFrame(
-        rows, "doc_id long, fingerprint string, n_tokens long"
-    )
+    return out.select("doc_id", "fingerprint", "n_tokens")
 
 
 @register("streaming_anomaly_zscore", sql=_ANOMALY_SQL)

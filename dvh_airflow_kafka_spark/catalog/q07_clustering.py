@@ -7,9 +7,11 @@ from __future__ import annotations
 
 from dvh_airflow_kafka_spark.ext import dedup as xdedup, text as xtext
 from dvh_airflow_kafka_spark.io import load_table
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from dvh_airflow_kafka_spark.catalog._core import (
     _stage_frame,
+    _staged_range_write,
+    _staged_stream_src,
     register,
 )
 
@@ -768,9 +770,7 @@ _PRIORITY_K = 20
 _PRIORITY_SALT = "prio-v1"
 
 
-@register(
-    "weighted_priority_sample",
-    sql=f"""
+_PRIORITY_SQL = f"""
     WITH h AS (
         SELECT source, doc_id, GREATEST(n_chars, 1) AS weight,
                ('0x' || substr(sha256('{_PRIORITY_SALT}'
@@ -788,20 +788,13 @@ _PRIORITY_SALT = "prio-v1"
                                    ORDER BY priority DESC, doc_id) AS INT)
                AS rank
     FROM p QUALIFY rank <= {_PRIORITY_K}
-    """,
-)
-def weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] Priority sampling (Duffield, Lund, Thorup, JACM'07): keep
-    the top-20 docs per source by priority w/u, u a
-    deterministic sha-derived uniform — the weight-proportional corpus
-    subsample whose estimators are provably near-optimal. The priority
-    is EXACT integer arithmetic (w * 2^32 div (h+1), h the 8-hex sha
-    prefix) — bit-identical across engines, no float ordering anywhere.
-    Scan-fused expressions + ONE source-keyed window; at 100 TB the
-    per-source top-k runs as rank-limited window groups (WindowGroupLimit
-    pushes the k cutoff map-side), never a global sort."""
-    docs = load_table(spark, sf_dir, "documents")
-    h = F.conv(
+    """
+
+
+def _priority_hash() -> Column:
+    """The priority's uniform: the 8-hex sha prefix of the salted doc id
+    as a long (the oracle's ``hv``)."""
+    return F.conv(
         F.substring(
             F.sha2(
                 F.concat(
@@ -815,6 +808,20 @@ def weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         10,
     ).cast("long")
+
+
+@register("weighted_priority_sample", sql=_PRIORITY_SQL)
+def weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] Priority sampling (Duffield, Lund, Thorup, JACM'07): keep
+    the top-20 docs per source by priority w/u, u a
+    deterministic sha-derived uniform — the weight-proportional corpus
+    subsample whose estimators are provably near-optimal. The priority
+    is EXACT integer arithmetic (w * 2^32 div (h+1), h the 8-hex sha
+    prefix) — bit-identical across engines, no float ordering anywhere.
+    Scan-fused expressions + ONE source-keyed window; at 100 TB the
+    per-source top-k runs as rank-limited window groups (WindowGroupLimit
+    pushes the k cutoff map-side), never a global sort."""
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.col("priority").desc(), F.col("doc_id")
     )
@@ -823,7 +830,7 @@ def weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "doc_id",
             F.greatest(F.col("n_chars"), F.lit(1)).alias("weight"),
-            h.alias("__hv"),
+            _priority_hash().alias("__hv"),
         )
         .withColumn(
             "priority",
@@ -835,3 +842,85 @@ def weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "streaming_priority_sample",
+    # shares the batch kernel's oracle VERBATIM — the cross-engine proof
+    # that resident top-k state equals the batch sample
+    sql=_PRIORITY_SQL,
+)
+def streaming_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] The weighted priority sample (Duffield-Lund-Thorup) AS
+    RESIDENT STREAMING STATE — the EIGHTH batch/streaming twin family
+    (after ddsketch, count-min, Misra-Gries, HLL, KMV, Bloom, and the
+    mixture COUNT/SUM state): documents drain through a file stream in
+    4 micro-batches; each source's top-20 rows by the exact-integer
+    priority ``w·2^32 div (h+1)`` live in the state store across
+    batches (``streaming/stateful.priority_topk_with_state``),
+    truncated to k per batch — top-k-of-union telescopes exactly like
+    KMV's k-min (a row outranked by ≥ k better rows can never
+    re-enter), so the final snapshot equals the batch
+    ``weighted_priority_sample`` kernel bit-for-bit and this query
+    shares its DuckDB oracle VERBATIM.
+
+    The priority hash stays JVM-side (sha-prefix before the stateful
+    operator; Python only merges bounded top-k frames).  State is O(k)
+    rows per source FOREVER — the resident weight-proportional corpus
+    subsample a 100 TB ingest keeps beside its sketch monitors, ready
+    at every batch boundary with no corpus rescan."""
+    from dvh_airflow_kafka_spark.streaming.stateful import (
+        priority_topk_with_state,
+        read_event_stream,
+        run_drain,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "source", "doc_id", "n_chars"
+    )
+
+    def _write(src: str) -> None:
+        # 4 files -> 4 micro-batches; top-k-of-union is a mergeable,
+        # order-free reduction, so batch composition is irrelevant
+        _staged_range_write(docs, src, 4)
+
+    src = _staged_stream_src("stream_priority", sf_dir, _write)
+    stream = (
+        read_event_stream(spark, src)
+        .select(
+            F.col("source").alias("g"),
+            "doc_id",
+            F.greatest(F.col("n_chars"), F.lit(1)).cast("long").alias(
+                "weight"
+            ),
+            _priority_hash().alias("__hv"),
+        )
+        .withColumn(
+            "priority", F.expr("weight * 4294967296 DIV (__hv + 1)")
+        )
+    )
+    emitted = run_drain(
+        priority_topk_with_state(stream, k=_PRIORITY_K),
+        mode="update",
+        shuffle_partitions=8,
+    ).table
+    w = Window.partitionBy("g").orderBy(F.col("seq").desc())
+    latest = (
+        emitted.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col("g").alias("source"),
+            F.arrays_zip("ids", "weights", "priorities").alias("z"),
+        )
+    )
+    rk = Window.partitionBy("source").orderBy(
+        F.col("priority").desc(), F.col("doc_id")
+    )
+    return (
+        latest.select("source", F.explode("z").alias("r"))
+        .select(
+            "source",
+            F.col("r.ids").alias("doc_id"),
+            F.col("r.weights").alias("weight"),
+            F.col("r.priorities").alias("priority"),
+        )
+        .withColumn("rank", F.row_number().over(rk).cast("int"))
+    )

@@ -31,7 +31,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -407,4 +407,81 @@ def hll_estimate_report(regs: DataFrame, exact: DataFrame) -> DataFrame:
         "n_exact",
         "n_nonzero_regs",
         F.round(est_expr, 4).alias("hll_estimate"),
+    )
+
+
+# ===========================================================================
+# DDSketch-style value quantiles (ddsketch_value_quantiles, its streaming
+# twin, and the ingest pipeline's per-batch value monitor): values
+# quantize to integer micro-units, bucket = (floor(log2 v), 4-bit linear
+# sub-bucket); per-key bucket COUNTS are the sketch and merge by addition.
+# ===========================================================================
+
+DDSKETCH_QS = (50, 90, 99)  # reported percentiles
+
+
+def ddsketch_buckets(ev: DataFrame) -> DataFrame:
+    """(event_type, b, s) bucket rows — the stateless projection shared
+    by the batch sketch, its streaming twin and the ingest pipeline's
+    per-batch value partials."""
+    vm = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
+    b = (F.length(F.bin(F.col("vm"))) - 1).cast("long")
+    return (
+        ev.select("event_type", vm.alias("vm"))
+        .filter(F.col("vm") >= 1)
+        .select(
+            "event_type",
+            b.alias("b"),
+            # column-valued shift distance needs the SQL form; the
+            # DataFrame shiftright() binds numBits as a Python int only
+            F.expr(
+                "shiftright(vm, cast(greatest(length(bin(vm)) - 5, 0)"
+                " as int)) & 15"
+            ).alias("s"),
+        )
+    )
+
+
+def ddsketch_report(spark: SparkSession, c: DataFrame) -> DataFrame:
+    """Cumulative walk + percentile readout over a (event_type, b, s, c)
+    bucket-counts frame (bounded: ≤ ~16·30 rows per key)."""
+    wc = Window.partitionBy("event_type").orderBy("b", "s")
+    wn = Window.partitionBy("event_type")
+    cum = c.select(
+        "event_type",
+        "b",
+        "s",
+        "c",
+        F.when(
+            F.col("b") >= 4,
+            F.expr("shiftleft(s + 17, cast(b - 4 as int))"),
+        )
+        .otherwise(F.col("s") + 1)
+        .alias("hi"),
+        F.sum("c").over(wc).alias("cum"),
+        F.sum("c").over(wn).alias("n"),
+    )
+    qs = spark.createDataFrame([(q,) for q in DDSKETCH_QS], "q_pct int")
+    hit = (
+        cum.crossJoin(F.broadcast(qs))
+        .filter(
+            F.col("cum")
+            >= F.floor((F.col("q_pct") * F.col("n") + 99) / 100)
+        )
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("event_type", "q_pct").orderBy("b", "s")
+            ),
+        )
+        .filter(F.col("rn") == 1)
+    )
+    return hit.select(
+        "event_type",
+        "q_pct",
+        "n",
+        "b",
+        "s",
+        F.col("hi").cast("long").alias("value_micro_hi"),
+        "cum",
     )

@@ -48,8 +48,9 @@ from Oracle transactions:
   (distinct users), ddsketch bucket counts (value quantiles), and
   exact per-batch heavy-user candidates).  Max-merge / sum-merge /
   candidate-union + exact-verify over the partials reproduce the batch
-  sketches over the full admitted set exactly (see
-  ``catalog/q13_round11.streaming_ingest_capstone`` for the laws).
+  sketches over the full admitted set exactly (``merged_partials``
+  states the laws; ``catalog/q14_ingest.streaming_ingest_capstone``
+  certifies them against a relational replay).
 - **Object-store-portable artifact layer**: every listing, rename,
   sentinel, and control file in this module goes through
   ``streaming/fsio.HadoopFs``, the package's one Hadoop FileSystem
@@ -87,7 +88,7 @@ from pyspark.sql import functions as F
 
 from dvh_airflow_kafka_spark.config import AllowRule
 from dvh_airflow_kafka_spark.ext.bloom import bloom_dedup_with_bits, build_bloom
-from dvh_airflow_kafka_spark.ext.sketch import hll_bucket_rho
+from dvh_airflow_kafka_spark.ext.sketch import ddsketch_buckets, hll_bucket_rho
 from dvh_airflow_kafka_spark.ext.text import tokens
 from dvh_airflow_kafka_spark.operators import scrub_flagged_persons
 from dvh_airflow_kafka_spark.sources import events_as_kafka_frame, with_envelope
@@ -204,7 +205,7 @@ class IngestDirs:
 
     ``probe_log`` records, per processed micro-batch, what the dedup
     probe actually read — the O(1)-files-per-batch contract is pinned by
-    pytest against it (``tests/test_round12_ops.py``)."""
+    pytest against it (``tests/test_ingest.py``)."""
 
     def __init__(self, work_dir: str):
         self.work_dir = work_dir
@@ -352,9 +353,6 @@ def _monitor_partial_thunks(
     bit-identical to what the drain would have written over the same
     rows.  ``n_tok`` is the rows' token total (``_mg_token_total``,
     observed on the caller's checkpoint of ``admitted``)."""
-    from dvh_airflow_kafka_spark.catalog.q03_curation import (
-        _ddsketch_buckets,
-    )
 
     def _hll() -> None:
         hll_bucket_rho(admitted, "event_type", elem_col="user_id").groupBy(
@@ -364,7 +362,7 @@ def _monitor_partial_thunks(
         )
 
     def _dd() -> None:
-        _ddsketch_buckets(admitted).groupBy("event_type", "b", "s").agg(
+        ddsketch_buckets(admitted).groupBy("event_type", "b", "s").agg(
             F.count(F.lit(1)).alias("c")
         ).write.mode("overwrite").parquet(os.path.join(dirs.dd, tag))
 
@@ -381,6 +379,34 @@ def _monitor_partial_thunks(
         ).write.mode("overwrite").parquet(os.path.join(dirs.mg, tag))
 
     return [_hll, _dd, _mg]
+
+
+def merged_partials(spark: SparkSession, dirs: "IngestDirs") -> dict:
+    """Every per-batch partial root of ``dirs`` merged by its own law,
+    keyed by root name: Bloom ``bits`` and Misra-Gries ``mg`` candidates
+    by distinct union, HLL registers (``hll``) by max, ddsketch bucket
+    counts (``dd``) by sum.  Each partial is written once per epoch and
+    merged here when it is read, so the merged frames equal one-pass
+    builds over the whole admitted set (pytest-pinned): max and sum are
+    associative, and the union of the per-batch candidate sets is a
+    superset of every global heavy hitter (if c·k ≤ n_b held in every
+    batch, summing gives C·k ≤ N), which ``verify_candidate_counts``
+    then counts exactly.  A root with no committed batch dir (a drain
+    that produced no micro-batch) reads as an empty frame."""
+
+    def read(root: str, ddl: str) -> DataFrame:
+        return dirs.partials(spark, root, schema=ddl)
+
+    return {
+        "bits": read(dirs.bits, "pos bigint").distinct(),
+        "hll": read(dirs.hll, "event_type string, bucket long, m_rho int")
+        .groupBy("event_type", "bucket")
+        .agg(F.max("m_rho").alias("m_rho")),
+        "dd": read(dirs.dd, "event_type string, b long, s long, c long")
+        .groupBy("event_type", "b", "s")
+        .agg(F.sum("c").alias("c")),
+        "mg": read(dirs.mg, "token string").distinct(),
+    }
 
 
 # --------------------------------------------------------------------------
@@ -468,7 +494,7 @@ def erase_users(
        the already-erased direction);
     the merged readout over (untouched ∪ rebuilt) partials then equals
     a from-scratch build over the erased corpus EXACTLY (pinned in
-    tests/test_round12_ops.py).
+    tests/test_ingest.py).
 
     **Key-material stance** — two policies, both sound, choose per
     deployment:
@@ -752,11 +778,10 @@ def compact_sink(
     batches the readout/erasure surface is K·B dirs; this folds them
     back to one.
 
-    The monitor partials merge by their own laws — HLL register
-    max-merge, ddsketch count sum-merge, Misra-Gries candidate-set
-    union (a superset of the heavy hitters stays a superset under
-    union), Bloom bit distinct-union — so every post-compaction readout
-    is bit-identical (pytest-pinned) and ``erase_users`` keeps its
+    The monitor partials and Bloom bits merge by their own laws
+    (``merged_partials``; a superset of the heavy hitters stays a
+    superset under union), so every post-compaction readout is
+    bit-identical (pytest-pinned) and ``erase_users`` keeps its
     sink-dir ↔ partial-dir correspondence.
 
     Run BETWEEN drains (no active writer).  Crash-safe via a marker +
@@ -781,15 +806,9 @@ def compact_sink(
     init = spark.read.parquet(dirs.initial)
     consolidated = {
         "sink": _read_union(spark, bdirs, init),
-        "bits": spark.read.parquet(*_batch_dirs(fs, dirs.bits)).distinct(),
-        "hll": spark.read.parquet(*_batch_dirs(fs, dirs.hll))
-        .groupBy("event_type", "bucket")
-        .agg(F.max("m_rho").alias("m_rho")),
-        "dd": spark.read.parquet(*_batch_dirs(fs, dirs.dd))
-        .groupBy("event_type", "b", "s")
-        .agg(F.sum("c").alias("c")),
-        "mg": spark.read.parquet(*_batch_dirs(fs, dirs.mg)).distinct(),
+        **merged_partials(spark, dirs),
     }
+
     def _consolidate(name: str, df: DataFrame) -> Callable[[], None]:
         def run() -> None:
             out = os.path.join(tmproot, name)
@@ -912,7 +931,7 @@ def run_ingest_pipeline(
     ``fail_at_batch`` injects a crash AFTER the batch's sink write but
     BEFORE its sidecar/monitor writes and checkpoint commit — the
     worst-case tear the replay law must absorb
-    (tests/test_round11_ops.py, tests/test_round12_ops.py).
+    (tests/test_ingest.py).
 
     ``epoch_offset`` supports FOLLOW-UP drains into the same work_dir
     with a FRESH checkpoint (a later ingest epoch, e.g. after

@@ -810,7 +810,7 @@ def _make_shingle_probe_updater(detect_late_existing: bool = False):
     nothing), and a batch folding NEW existing entries into a
     probed bucket raises instead of silently weakening the gate.  The
     default keeps the probe-only-batches-never-write law exactly
-    (CI-pinned in tests/test_round11_ops.py) for callers that
+    (CI-pinned in tests/test_stateful_streaming.py) for callers that
     guarantee ordering themselves."""
 
     def update(

@@ -1,6 +1,6 @@
 """Law tests for the round-6b [EXT] additions: product-quantization
 encode (``ext/similarity.pq_encode``) and Duffield-Lund-Thorup priority
-sampling (catalog ``weighted_priority_sample``)."""
+sampling (catalog ``weighted_priority_sample`` and its streaming twin)."""
 
 from __future__ import annotations
 
@@ -261,3 +261,12 @@ def test_ivf_pq_index_build_and_serve(spark, tmp_path):
     # so the serve path CANNOT read them
     schema_cols = spark.read.parquet(f"{path}/codes").columns
     assert set(schema_cols) == {"vec_id", "codes", "list_id"}
+
+
+def test_streaming_priority_sample_equals_batch(spark, sf_dir):
+    from dvh_airflow_kafka_spark.catalog import REGISTRY
+
+    batch = REGISTRY["weighted_priority_sample"].fn(spark, sf_dir).collect()
+    stream = REGISTRY["streaming_priority_sample"].fn(spark, sf_dir).collect()
+    assert sorted(map(tuple, batch)) == sorted(map(tuple, stream))
+    assert len(batch) > 0

@@ -1,142 +1,14 @@
-"""Round-11 operator laws: the compositions in catalog/q13_round11.py
-plus the shingle-index streaming gate's updater semantics."""
+"""Round-11 operator laws: the compositions left in
+catalog/q13_round11.py (the ingest queries' laws live in
+tests/test_ingest.py, the shingle-index updater's in
+tests/test_stateful_streaming.py)."""
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from dvh_airflow_kafka_spark.catalog import REGISTRY
 from dvh_airflow_kafka_spark.io import load_table
-
-
-class FakeState:
-    exists = False
-    hasTimedOut = False
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-
-# --------------------------------------------------------------------------
-# shingle-index probe updater (streaming_neardup_gate's stateful kernel)
-# --------------------------------------------------------------------------
-
-
-def _pdf(rows):
-    return pd.DataFrame(rows, columns=["g", "doc_id", "is_new", "n"])
-
-
-def test_shingle_probe_updater_existing_first_within_batch():
-    # an incoming probe in an EARLIER Arrow chunk must still see an
-    # existing doc delivered in a LATER chunk of the same micro-batch
-    # (the batch kernel joins incoming vs ALL existing)
-    from dvh_airflow_kafka_spark.streaming.stateful import (
-        _make_shingle_probe_updater,
-    )
-
-    upd = _make_shingle_probe_updater()
-    state = FakeState()
-    out = list(
-        upd(
-            (7,),
-            iter(
-                [
-                    _pdf([("the quick brown", 100, True, 7)]),
-                    _pdf([("the quick brown", 1, False, 9)]),
-                ]
-            ),
-            state,
-        )
-    )
-    assert len(out) == 1
-    got = out[0]
-    assert list(got["in_id"]) == [100]
-    assert list(got["ex_id"]) == [1]
-    assert list(got["n_in"]) == [7] and list(got["n_ex"]) == [9]
-    assert list(got["c"]) == [1]
-    assert state._v == (["the quick brown"], [0], [1], [9])
-
-
-def test_shingle_probe_updater_probes_never_grow_state():
-    from dvh_airflow_kafka_spark.streaming.stateful import (
-        _make_shingle_probe_updater,
-    )
-
-    upd = _make_shingle_probe_updater()
-    state = FakeState()
-    # batch 1: two existing docs over two shingles of the same bucket
-    # (one entry duplicated — the index dedupes per (shingle, doc))
-    list(
-        upd(
-            (7,),
-            iter(
-                [
-                    _pdf(
-                        [
-                            ("ga", 1, False, 5),
-                            ("ga", 2, False, 6),
-                            ("gb", 1, False, 5),
-                            ("ga", 1, False, 5),
-                        ]
-                    )
-                ]
-            ),
-            state,
-        )
-    )
-    assert state._v == (["ga", "gb"], [0, 0, 1], [1, 2, 1], [5, 6, 5])
-    frozen = state._v
-    # batch 2: probes only — state not rewritten; partial counts
-    # aggregate ACROSS the bucket's shingles (doc 10 shares ga+gb with
-    # doc 1 -> c=2; only ga with doc 2 -> c=1)
-    out = list(
-        upd(
-            (7,),
-            iter(
-                [
-                    _pdf(
-                        [
-                            ("ga", 10, True, 4),
-                            ("gb", 10, True, 4),
-                            ("ga", 15, True, 3),
-                        ]
-                    )
-                ]
-            ),
-            state,
-        )
-    )
-    assert state._v is frozen  # probe-only batch never calls update()
-    got = out[0]
-    pairs = {
-        (i, e): c
-        for i, e, c in zip(got["in_id"], got["ex_id"], got["c"])
-    }
-    assert pairs == {(10, 1): 2, (10, 2): 1, (15, 1): 1, (15, 2): 1}
-
-
-def test_shingle_probe_updater_no_emission_without_index():
-    from dvh_airflow_kafka_spark.streaming.stateful import (
-        _make_shingle_probe_updater,
-    )
-
-    upd = _make_shingle_probe_updater()
-    state = FakeState()
-    out = list(upd((7,), iter([_pdf([("ga", 10, True, 4)])]), state))
-    assert out == []  # nothing indexed for this bucket yet
-    # and NO state row is written — a probe-only bucket never occupies
-    # the store (the store stays a function of the existing corpus)
-    assert state._v is None and not state.exists
 
 
 def test_streaming_gate_matches_batch_gate(spark, sf_dir):
@@ -144,133 +16,6 @@ def test_streaming_gate_matches_batch_gate(spark, sf_dir):
     stream = REGISTRY["streaming_neardup_gate"].fn(spark, sf_dir).collect()
     assert sorted(map(tuple, batch)) == sorted(map(tuple, stream))
     assert len(batch) > 0
-
-
-# --------------------------------------------------------------------------
-# streaming_ingest_capstone (streaming/ingest.py)
-# --------------------------------------------------------------------------
-
-
-def _run_ingest(spark, sf_dir, work, ckpt, fail_at_batch=None):
-    from dvh_airflow_kafka_spark.catalog.q13_round11 import (
-        _INGEST_FILTERS,
-        _ingest_lookup,
-        _ingest_staged_src,
-    )
-    from dvh_airflow_kafka_spark.io import load_table
-    from dvh_airflow_kafka_spark.streaming.ingest import run_ingest_pipeline
-    from dvh_airflow_kafka_spark.streaming.stateful import read_event_stream
-
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    src = _ingest_staged_src(spark, sf_dir, events)
-    return run_ingest_pipeline(
-        spark,
-        read_event_stream(spark, src, max_files_per_trigger=16),
-        work_dir=work,
-        checkpoint_dir=ckpt,
-        initial_sink=events.filter(F.col("event_id") % 3 == 0),
-        lookup=_ingest_lookup(spark, sf_dir),
-        message_filters=_INGEST_FILTERS,
-        fail_at_batch=fail_at_batch,
-    )
-
-
-def _admitted_rows(spark, dirs):
-    init = spark.read.parquet(dirs.initial)
-    return sorted(map(tuple, dirs.admitted(spark, init).collect()))
-
-
-def test_ingest_crash_after_write_replays_byte_identical(
-    spark, sf_dir, tmp_path
-):
-    # ST4 write-then-commit: kill AFTER the replay batch's sink write
-    # but BEFORE its monitor writes and checkpoint commit; the resumed
-    # run must converge to the clean run exactly (sink AND monitors)
-    clean = _run_ingest(
-        spark, sf_dir, str(tmp_path / "clean"), str(tmp_path / "clean_ck")
-    )
-    crash_work, crash_ck = str(tmp_path / "crash"), str(tmp_path / "crash_ck")
-    with pytest.raises(Exception, match="injected crash"):
-        _run_ingest(spark, sf_dir, crash_work, crash_ck, fail_at_batch=1)
-    resumed = _run_ingest(spark, sf_dir, crash_work, crash_ck)
-    assert _admitted_rows(spark, resumed) == _admitted_rows(spark, clean)
-    for attr in ("hll", "dd", "mg", "bits"):
-        a = resumed.partials(spark, getattr(resumed, attr))
-        b = clean.partials(spark, getattr(clean, attr))
-        assert sorted(map(tuple, a.distinct().collect())) == sorted(
-            map(tuple, b.distinct().collect())
-        ), attr
-
-
-def test_ingest_dedup_and_monitor_merge_laws(spark, sf_dir, tmp_path):
-    from dvh_airflow_kafka_spark.catalog.q03_curation import (
-        _ddsketch_buckets,
-    )
-    from dvh_airflow_kafka_spark.ext.sketch import (
-        frequent_tokens,
-        hll_bucket_rho,
-    )
-
-    dirs = _run_ingest(
-        spark, sf_dir, str(tmp_path / "w"), str(tmp_path / "ck")
-    )
-    init = spark.read.parquet(dirs.initial)
-    admitted = dirs.admitted(spark, init)
-    ev = load_table(spark, sf_dir, "events")
-    # J1 exactness: admitted = every event id NOT in the initial sink,
-    # exactly once (replays and in-batch duplicates all rejected)
-    admitted_ids = sorted(
-        r["kafka_offset"] for r in admitted.select("kafka_offset").collect()
-    )
-    expect = sorted(
-        r["event_id"]
-        for r in ev.filter(F.col("event_id") % 3 != 0)
-        .select("event_id")
-        .collect()
-    )
-    assert admitted_ids == expect
-    # HLL max-merge over per-batch partials == one-pass registers
-    merged = (
-        dirs.partials(spark, dirs.hll)
-        .groupBy("event_type", "bucket")
-        .agg(F.max("m_rho").alias("m_rho"))
-    )
-    direct = (
-        hll_bucket_rho(admitted, "event_type", elem_col="user_id")
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("m_rho"))
-    )
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-    # ddsketch sum-merge over per-batch partials == one-pass counts
-    dmerged = (
-        dirs.partials(spark, dirs.dd)
-        .groupBy("event_type", "b", "s")
-        .agg(F.sum("c").alias("c"))
-    )
-    ddirect = _ddsketch_buckets(admitted).groupBy("event_type", "b", "s").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    assert sorted(map(tuple, dmerged.collect())) == sorted(
-        map(tuple, ddirect.collect())
-    )
-    # MG candidate-union + exact verify == one-pass exact heavy hitters
-    from dvh_airflow_kafka_spark.ext.sketch import verify_candidate_counts
-
-    cands = dirs.partials(spark, dirs.mg).distinct()
-    slim = admitted.select(F.col("user_id").cast("string").alias("__text"))
-    via_partials = verify_candidate_counts(slim, cands, k_state=64)
-    one_pass = frequent_tokens(
-        admitted.select(F.col("user_id").cast("string").alias("u")),
-        F.col("u"),
-        k_state=64,
-    )
-    assert sorted(map(tuple, via_partials.collect())) == sorted(
-        map(tuple, one_pass.collect())
-    )
 
 
 # --------------------------------------------------------------------------

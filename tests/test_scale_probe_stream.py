@@ -186,7 +186,7 @@ def test_neardup_gate_state_function_of_existing_corpus_only(
     metric counts occupied BUCKETS (the index is bucket-grouped with
     the entries interned inside each bucket tuple); the content-level
     probes-never-rewrite-state law is pinned per-updater in
-    tests/test_round11_ops.py."""
+    tests/test_stateful_streaming.py."""
     states: dict[int, int] = {}
     docs = load_table(spark, sf_dir, "documents")
     for factor in (1, 2):
