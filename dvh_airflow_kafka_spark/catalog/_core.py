@@ -17,6 +17,7 @@ order-insensitive value hash):
 from __future__ import annotations
 
 import datetime as dt
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -174,9 +175,13 @@ def _staged_file_write(src: str, files) -> None:
 _STAGED_LINKS: dict = {}
 
 
-def _stage_frame(df: DataFrame, link_path: str, sf_dir: str) -> None:
-    """Write ``df`` once per (link_path, sf_dir) and atomically point
-    ``link_path`` at it.  Eager — runs at query-CALL time, before any
+def _stage_frame(
+    data: DataFrame | Callable[[str], None], link_path: str, sf_dir: str
+) -> None:
+    """Write ``data`` once per (link_path, sf_dir) and atomically point
+    ``link_path`` at it.  ``data`` is a DataFrame, or a callable that
+    writes the parquet dir at the path it is handed (a kernel that
+    emits several frames).  Eager — runs at query-CALL time, before any
     oracle can read the path."""
     import atexit
     import os
@@ -189,7 +194,10 @@ def _stage_frame(df: DataFrame, link_path: str, sf_dir: str) -> None:
     stage = tempfile.mkdtemp(prefix="dvh_stage_")
     atexit.register(shutil.rmtree, stage, ignore_errors=True)
     target = os.path.join(stage, "data")
-    df.write.parquet(target)
+    if isinstance(data, DataFrame):
+        data.write.parquet(target)
+    else:
+        data(target)
     if os.path.isdir(link_path) and not os.path.islink(link_path):
         shutil.rmtree(link_path)  # pre-symlink layout leftover
     tmplink = os.path.join(stage, "link")
@@ -199,6 +207,21 @@ def _stage_frame(df: DataFrame, link_path: str, sf_dir: str) -> None:
         lambda p=link_path: os.path.islink(p) and os.remove(p)
     )
     _STAGED_LINKS[link_path] = key
+
+
+@contextmanager
+def _scratch_dir(prefix: str):
+    """A fresh temp dir for a query that round-trips data through files;
+    removed on exit, also when the query raises — so results must be
+    collected inside the block."""
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 @dataclass(frozen=True)
@@ -221,9 +244,10 @@ def register(name: str, sql: Optional[str] = None):
 
 # The driver's correctness gate executes the FIRST 50 entries of
 # ``spark_queries()`` in iteration order.  Registration order follows the
-# source layout (reference surface -> [EXT] -> relational); this list pins
-# the driver's 50-query window each round to the queries that most need a
-# fresh row.  Entries not listed keep registration order after these.
+# source layout (the catalog modules' import order, the reference surface
+# first); this list pins the driver's 50-query window each round to the
+# queries that most need a fresh row.  Entries not listed keep
+# registration order after these.
 #
 # ROUND-13 ROTATION — GENERATED, not transcribed: ``tools/cert_age.py``
 # computes the window from CORRECTNESS_r*.json + REGISTRY + the churn

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from dvh_airflow_kafka_spark.ext import dedup as xdedup, multimodal as xmm, similarity as xsim, text as xtext
+from dvh_airflow_kafka_spark.ext import dedup as xdedup, multimodal as xmm, similarity as xsim, stats as xstats, text as xtext
 from dvh_airflow_kafka_spark.io import ensure_parallelism, load_table
 from dvh_airflow_kafka_spark.sources import events_as_kafka_frame, with_envelope
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
@@ -1255,40 +1255,53 @@ def ann_recall_at_k_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DDSKETCH_SQL = f"""
-    WITH v AS (
-        SELECT event_type,
+def _ddsketch_sql(src: str, group: str) -> str:
+    """The ddsketch cumulative walk over ``src`` (``group``, value), the
+    one SQL form of ``ext/sketch.ddsketch_buckets`` / ``ddsketch_report``
+    shared by every ddsketch oracle: ``dd_bk`` buckets each value's
+    micro-units, ``dd_cum`` walks the per-``group`` cumulative counts and
+    ``dd_quantiles`` holds (``group``, q_pct, n, b, s, value_micro_hi,
+    cum), the first bucket whose cumulative count reaches each
+    percentile."""
+    return f"""dd_v AS (
+        SELECT {group},
                CAST(floor("value" * 1000000 + 0.5) AS BIGINT) AS vm
-        FROM events
-    ), bk AS (
-        SELECT event_type,
+        FROM {src}
+    ), dd_bk AS (
+        SELECT {group},
                CAST(length(bin(vm)) - 1 AS BIGINT) AS b,
                CAST((vm >> greatest(length(bin(vm)) - 1 - 4, 0)) & 15
                     AS BIGINT) AS s
-        FROM v WHERE vm >= 1
-    ), c AS (
-        SELECT event_type, b, s, CAST(COUNT(*) AS BIGINT) AS c
-        FROM bk GROUP BY event_type, b, s
-    ), cum AS (
-        SELECT event_type, b, s, c,
+        FROM dd_v WHERE vm >= 1
+    ), dd_c AS (
+        SELECT {group}, b, s, CAST(COUNT(*) AS BIGINT) AS c
+        FROM dd_bk GROUP BY {group}, b, s
+    ), dd_cum AS (
+        SELECT {group}, b, s, c,
                CAST(CASE WHEN b >= 4 THEN (s + 17) << (b - 4)
                          ELSE s + 1 END AS BIGINT) AS hi,
-               CAST(SUM(c) OVER (PARTITION BY event_type
+               CAST(SUM(c) OVER (PARTITION BY {group}
                                  ORDER BY b, s) AS BIGINT) AS cum,
-               CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        FROM c
-    ), q AS (
+               CAST(SUM(c) OVER (PARTITION BY {group}) AS BIGINT) AS n
+        FROM dd_c
+    ), dd_q AS (
         SELECT unnest([{", ".join(str(q) for q in _DDSKETCH_QS)}]) AS q_pct
-    ), hit AS (
-        SELECT cum.event_type, q.q_pct, cum.n, cum.b, cum.s,
-               cum.hi AS value_micro_hi, cum.cum,
-               row_number() OVER (PARTITION BY cum.event_type, q.q_pct
-                                  ORDER BY cum.b, cum.s) AS rn
-        FROM cum, q
-        WHERE cum.cum >= floor((q.q_pct * cum.n + 99) / 100)
-    )
-    SELECT event_type, q_pct, n, b, s, value_micro_hi, cum
-    FROM hit WHERE rn = 1
+    ), dd_hit AS (
+        SELECT k.{group}, q.q_pct, k.n, k.b, k.s,
+               k.hi AS value_micro_hi, k.cum,
+               row_number() OVER (PARTITION BY k.{group}, q.q_pct
+                                  ORDER BY k.b, k.s) AS rn
+        FROM dd_cum k, dd_q q
+        WHERE k.cum >= floor((q.q_pct * k.n + 99) / 100)
+    ), dd_quantiles AS (
+        SELECT {group}, q_pct, n, b, s, value_micro_hi, cum
+        FROM dd_hit WHERE rn = 1
+    )"""
+
+
+_DDSKETCH_SQL = f"""
+    WITH {_ddsketch_sql("events", "event_type")}
+    SELECT * FROM dd_quantiles
     """
 
 
@@ -2542,4 +2555,455 @@ def streaming_dedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "unicode_nfc_audit",
+    sql="""
+    WITH inj AS (
+        SELECT doc_id, source, doc_id % 3 AS inject_class,
+               CASE WHEN doc_id % 3 = 0
+                    THEN replace(text, 'e', 'e' || chr(769))
+                    WHEN doc_id % 3 = 1
+                    THEN replace(text, 'f', chr(64257))
+                    ELSE text END AS itext
+        FROM documents
+    ), n AS (
+        SELECT source, inject_class, itext,
+               nfc_normalize(itext) AS nfc_t,
+               -- closed-world NFKC: the corpus is ASCII + the two
+               -- injected codepoints, where NFKC = fold the U+FB01
+               -- ligature to 'fi', then canonical-compose (= NFC)
+               nfc_normalize(replace(itext, chr(64257), 'fi')) AS nfkc_t
+        FROM inj
+    )
+    SELECT source, CAST(inject_class AS BIGINT) AS inject_class,
+           COUNT(*) AS n_docs,
+           CAST(SUM(CASE WHEN nfc_t <> itext THEN 1 ELSE 0 END) AS BIGINT)
+               AS nfc_drift_docs,
+           CAST(SUM(length(itext) - length(nfc_t)) AS BIGINT)
+               AS nfc_chars_saved,
+           CAST(SUM(CASE WHEN nfkc_t <> itext THEN 1 ELSE 0 END) AS BIGINT)
+               AS nfkc_drift_docs,
+           CAST(SUM(length(nfkc_t) - length(itext)) AS BIGINT)
+               AS nfkc_chars_delta
+    FROM n GROUP BY source, inject_class
+    """,
+)
+def unicode_nfc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] Unicode normalization audit — the crawl-hygiene pass
+    ``text_clean_normalize`` does NOT cover: per (source, injected
+    class), how many documents change under NFC / NFKC and by how many
+    codepoints.  Un-normalized crawl text makes codepoint-equivalent
+    spellings fingerprint as distinct documents, silently deflating
+    every hash-keyed dedup upstream.
 
+    The synthetic corpus is pure ASCII (no drift to measure), so the
+    query deterministically injects the two canonical offenders first:
+    class 0 (doc_id%3==0) gets every 'e' decomposed to 'e'+U+0301
+    (NFC-composable), class 1 gets every 'f' turned into the U+FB01
+    ligature (NFKC-foldable, NFC-stable), class 2 stays clean.  Spark
+    normalizes with the real ``unicodedata`` kernel
+    (``ext/text.unicode_normalize_udf`` — Arrow-batched, linear scan);
+    the oracle checks NFC against DuckDB's independent ``nfc_normalize``
+    (utf8proc) and NFKC against the closed-world fold documented in the
+    SQL.  All drift metrics are exact integers.
+
+    Scale: injection + length arithmetic are codegen expressions; the
+    normalization is one Arrow pass; the rollup is a map-side-combined
+    aggregate on (source, class)."""
+    nfc = xtext.unicode_normalize_udf("NFC")
+    nfkc = xtext.unicode_normalize_udf("NFKC")
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    cls = F.col("doc_id") % 3
+    inj = docs.select(
+        "source",
+        cls.cast("bigint").alias("inject_class"),
+        F.when(cls == 0, F.replace(F.col("text"), F.lit("e"), F.lit("é")))
+        .when(cls == 1, F.replace(F.col("text"), F.lit("f"), F.lit("ﬁ")))
+        .otherwise(F.col("text"))
+        .alias("itext"),
+    )
+    n = inj.select(
+        "source",
+        "inject_class",
+        "itext",
+        nfc(F.col("itext")).alias("nfc_t"),
+        nfkc(F.col("itext")).alias("nfkc_t"),
+    )
+    drift = lambda a, b: F.sum((F.col(a) != F.col(b)).cast("int")).cast("bigint")
+    return n.groupBy("source", "inject_class").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        drift("nfc_t", "itext").alias("nfc_drift_docs"),
+        F.sum(F.length("itext") - F.length("nfc_t"))
+        .cast("bigint")
+        .alias("nfc_chars_saved"),
+        drift("nfkc_t", "itext").alias("nfkc_drift_docs"),
+        F.sum(F.length("nfkc_t") - F.length("itext"))
+        .cast("bigint")
+        .alias("nfkc_chars_delta"),
+    )
+
+
+@register(
+    "curation_funnel_attrition",
+    sql=r"""
+    WITH t AS (
+        SELECT doc_id, source, text,
+               CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)
+                   AS n_tokens,
+               CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE)
+                   AS n_words,
+               CAST(len(list_filter(regexp_extract_all(lower(text), '\S+'),
+                    w -> list_contains(['the','a','and','of','to','in','is',
+                                        'that','for','with'], w)))
+                    AS DOUBLE) AS sw,
+               CAST(length(text) AS DOUBLE) AS n_chars,
+               CAST(length(regexp_replace(text, '[\w\s]', '', 'g'))
+                    AS DOUBLE) AS n_punct
+        FROM documents
+    ), qd AS (
+        -- the quality expression is _QUALITY_SQL's, verbatim
+        SELECT *,
+               (least(1.0, n_words / 50.0) * 0.4
+                + (1.0 - least(1.0, (CASE WHEN n_chars > 0
+                       THEN n_punct / n_chars ELSE 0.0 END) * 4.0)) * 0.3
+                + least(1.0, (CASE WHEN n_words > 0
+                       THEN sw / n_words ELSE 0.0 END) * 5.0) * 0.3
+               ) AS quality
+        FROM t
+    ), g1 AS (
+        SELECT doc_id, text FROM qd WHERE quality >= 0.5
+    ), ek AS (
+        SELECT MIN(doc_id) AS doc_id FROM g1 GROUP BY sha256(text)
+    ), g2 AS (
+        SELECT g1.doc_id, g1.text FROM g1 JOIN ek USING (doc_id)
+    ), w2 AS (
+        SELECT doc_id, regexp_extract_all(text, '\S+') AS wl FROM g2
+    ), sh2 AS (
+        SELECT doc_id,
+               list_distinct(CASE WHEN len(wl) >= 3
+                   THEN list_transform(range(1, len(wl) - 1),
+                                       i -> wl[i] || ' ' || wl[i+1] || ' '
+                                            || wl[i+2])
+                   ELSE [array_to_string(wl, ' ')] END) AS s
+        FROM w2
+    ), inv2 AS (
+        SELECT doc_id, unnest(s) AS g FROM sh2
+    ), shared2 AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+        FROM inv2 a JOIN inv2 b ON a.g = b.g AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    ), sizes2 AS (
+        SELECT doc_id, len(s) AS n FROM sh2
+    ), dropped AS (
+        SELECT DISTINCT id_b AS doc_id
+        FROM shared2
+        JOIN sizes2 na ON na.doc_id = id_a
+        JOIN sizes2 nb ON nb.doc_id = id_b
+        WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= 0.2
+    ), sm AS (
+        SELECT qd.source, qd.n_tokens,
+               CASE WHEN g2.doc_id IS NOT NULL AND dr.doc_id IS NULL THEN 3
+                    WHEN g2.doc_id IS NOT NULL THEN 2
+                    WHEN g1.doc_id IS NOT NULL THEN 1
+                    ELSE 0 END AS stage_max
+        FROM qd
+        LEFT JOIN g1 ON g1.doc_id = qd.doc_id
+        LEFT JOIN g2 ON g2.doc_id = qd.doc_id
+        LEFT JOIN dropped dr ON dr.doc_id = qd.doc_id
+    ), expl AS (
+        SELECT source, n_tokens, unnest(range(0, stage_max + 1)) AS stage
+        FROM sm
+    )
+    SELECT source, CAST(stage AS BIGINT) AS stage,
+           COUNT(*) AS n_docs,
+           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
+    FROM expl GROUP BY source, stage
+    """,
+)
+def curation_funnel_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] Capstone: the stage-by-stage ATTRITION REPORT a curation team
+    reads before every training run — per (source, stage), how many
+    documents and tokens survive into each gate of the standard funnel:
+
+      stage 0  raw corpus
+      stage 1  quality gate (the ``text_quality`` heuristic, score >= 0.5
+               — same ``ext/text.quality_score`` kernel, same formula as
+               the certified ``_QUALITY_SQL``)
+      stage 2  exact dedup (min-doc_id survivor per sha256(text), the
+               ``dedup_exact_survivors`` rule, applied among stage-1
+               survivors)
+      stage 3  near-dup drop (3-gram Jaccard >= 0.2 against any LOWER-id
+               stage-2 survivor drops the higher id — the documented
+               greedy pairwise rule; the transitive-cluster variant is
+               ``neardup_survivor_pipeline``)
+
+    One lazy plan, ONE report aggregate: each document gets its highest
+    surviving stage, is exploded into one row per stage it reaches
+    (≤ 4), and the rollup groups by (source, stage) — so n_docs/n_tokens
+    are monotonically non-increasing in stage per source by
+    construction.
+
+    Scale: the quality gate is a codegen expression on the checkpointed
+    base frame — NO join (only the exact-dedup keeper set and the
+    near-dup drop set are joined back, both doc_id-keyed; neither is
+    broadcast-hinted because both are corpus-proportional — AQE picks
+    broadcast at fixture scale and a keyed shuffle at corpus scale);
+    exact dedup is one
+    map-side-combined (hash → min id) aggregate; the near-dup detector
+    is the inverted-index join (``ext/dedup.ngram_jaccard_pairs``,
+    shingle-keyed, never all-pairs) over the already-thinned stage-2
+    survivors; the report explodes ≤ 4 rows per doc into one
+    map-side-combined aggregate."""
+    docs = ensure_parallelism(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "text"
+        )
+    )
+    # localCheckpoint: the bounded per-doc frame feeds the keeper
+    # aggregate, the flagged join, the near-dup detector AND the final
+    # rollup — without materialization each consumer re-scans +
+    # re-scores the corpus (4 full passes at 100 TB)
+    base = docs.select(
+        "doc_id",
+        "source",
+        "text",
+        xtext.token_count_ws(F.col("text")).cast("bigint").alias("n_tokens"),
+        xtext.quality_score(F.col("text")).alias("quality"),
+    ).localCheckpoint(eager=False)
+    pass_q = F.col("quality") >= 0.5
+    keep = (
+        base.filter(pass_q)
+        .groupBy(F.sha2(F.col("text"), 256).alias("__h"))
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id", F.lit(1).alias("__k"))
+    )
+    # localCheckpoint: flagged feeds the pair detector and the rollup;
+    # without it the keeper aggregate + join re-run per consumer
+    flagged = (
+        base.join(keep, "doc_id", "left")
+        .withColumn("keep_exact", pass_q & F.col("__k").isNotNull())
+        .localCheckpoint(eager=False)
+    )
+    pairs = xdedup.ngram_jaccard_pairs(
+        flagged.filter(F.col("keep_exact")).select("doc_id", "text"),
+        "doc_id",
+        "text",
+        ngram=3,
+        threshold=0.2,
+    )
+    dropped = (
+        pairs.select(F.col("id_b").alias("doc_id"))
+        .distinct()
+        .withColumn("__d", F.lit(1))
+    )
+    flags = flagged.join(dropped, "doc_id", "left")
+    stage_max = (
+        F.when(F.col("keep_exact") & F.col("__d").isNull(), F.lit(3))
+        .when(F.col("keep_exact"), F.lit(2))
+        .when(pass_q, F.lit(1))
+        .otherwise(F.lit(0))
+    )
+    expl = flags.select(
+        "source",
+        "n_tokens",
+        F.explode(F.sequence(F.lit(0), stage_max)).alias("stage"),
+    )
+    return expl.groupBy("source", F.col("stage").cast("bigint").alias("stage")).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").cast("bigint").alias("n_tokens"),
+    )
+
+
+# --------------------------------------------------------------------------
+# quality_drift_monitor
+# --------------------------------------------------------------------------
+
+
+@register(
+    "quality_drift_monitor",
+    sql=r"""
+    WITH base AS (
+        SELECT event_type,
+               CAST(date_trunc('week', ts) AS DATE) AS wk,
+               CAST(floor("value" * 100 + 0.5) AS BIGINT) AS c
+        FROM events
+    ), contrib AS (
+        SELECT event_type, strftime(wk, '%Y-%m-%d') AS week, c,
+               FALSE AS early
+        FROM base
+        UNION ALL
+        SELECT event_type, strftime(wk + INTERVAL 7 DAY, '%Y-%m-%d'), c,
+               TRUE
+        FROM base
+    ), cnt AS (
+        SELECT week, event_type, c,
+               SUM(CASE WHEN early THEN 1 ELSE 0 END) AS a,
+               SUM(CASE WHEN early THEN 0 ELSE 1 END) AS b
+        FROM contrib GROUP BY week, event_type, c
+    ), cum AS (
+        SELECT week, event_type,
+               SUM(a) OVER w AS ca, SUM(b) OVER w AS cb
+        FROM cnt
+        WINDOW w AS (PARTITION BY week, event_type ORDER BY c)
+    ), tot AS (
+        SELECT week, event_type, SUM(a) AS na, SUM(b) AS nb
+        FROM cnt GROUP BY week, event_type
+    ), ks AS (
+        SELECT m.week, m.event_type,
+               CAST(MAX(t.na) AS BIGINT) AS n_prev,
+               CAST(MAX(t.nb) AS BIGINT) AS n_cur,
+               CAST(MAX(abs(m.ca * t.nb - m.cb * t.na)) AS BIGINT)
+                   AS ks_num,
+               ROUND(MAX(abs(m.ca * t.nb - m.cb * t.na))
+                     / CAST(MAX(t.na) * MAX(t.nb) AS DOUBLE), 6) AS ks_stat
+        FROM cum m JOIN tot t USING (week, event_type)
+        GROUP BY m.week, m.event_type
+        HAVING MAX(t.na) > 0 AND MAX(t.nb) > 0
+    ), mcnt AS (
+        SELECT week, early, event_type, CAST(COUNT(*) AS BIGINT) AS o
+        FROM contrib GROUP BY week, early, event_type
+    ), wtypes AS (SELECT DISTINCT week, event_type FROM mcnt),
+    wsides AS (SELECT DISTINCT week, early FROM mcnt),
+    cells AS (
+        SELECT t.week, s.early, t.event_type,
+               COALESCE(m.o, 0) AS o
+        FROM wtypes t
+        JOIN wsides s ON s.week = t.week
+        LEFT JOIN mcnt m ON m.week = t.week AND m.early = s.early
+                        AND m.event_type = t.event_type
+    ), marg AS (
+        SELECT week, early, SUM(o) AS r FROM cells GROUP BY week, early
+    ), cmarg AS (
+        SELECT week, event_type, SUM(o) AS col_n
+        FROM cells GROUP BY week, event_type
+    ), ntot AS (SELECT week, SUM(o) AS n FROM cells GROUP BY week),
+    chi AS (
+        SELECT c.week,
+               CAST(SUM(CAST(floor(
+                   (CAST(c.o AS DOUBLE)
+                    - CAST(m.r AS DOUBLE) * CAST(g.col_n AS DOUBLE)
+                      / CAST(t.n AS DOUBLE))
+                   * (CAST(c.o AS DOUBLE)
+                    - CAST(m.r AS DOUBLE) * CAST(g.col_n AS DOUBLE)
+                      / CAST(t.n AS DOUBLE))
+                   / (CAST(m.r AS DOUBLE) * CAST(g.col_n AS DOUBLE)
+                      / CAST(t.n AS DOUBLE))
+                   * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS mix_chi2_micro
+        FROM cells c
+        JOIN marg m ON m.week = c.week AND m.early = c.early
+        JOIN cmarg g ON g.week = c.week AND g.event_type = c.event_type
+        JOIN ntot t ON t.week = c.week
+        GROUP BY c.week
+    )
+    SELECT ks.week, ks.event_type, ks.n_prev, ks.n_cur, ks.ks_num,
+           ks.ks_stat, chi.mix_chi2_micro
+    FROM ks JOIN chi ON chi.week = ks.week
+    """,
+)
+def quality_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] Week-over-week feed-health monitor (VERDICT r10 item 5c) —
+    the drift pass a curation pipeline runs between weekly crawls,
+    composing the catalog's two drift statistics over SLIDING week
+    pairs in one plan:
+
+    - per (week, event_type): the two-sample KS statistic between this
+      week's and the previous week's value distributions
+      (``ext/stats.keyed_ks_two_sample`` — integer numerator + rounded
+      ratio, exactly ``source_drift_ks``'s kernel but keyed on the
+      week pair instead of one fixed cut);
+    - per week: Pearson chi-square homogeneity of the event-type MIX
+      against the previous week — a densified 2×K contingency table
+      (zero-observed cells included), each (o−e)²/e term micro-
+      quantized BEFORE summation so the sum is order-independent
+      (``event_mix_chi2_drift``'s cross-engine convention).
+
+    Each event contributes to exactly two week pairs (its own week's
+    "current" side, the next week's "previous" side) via a 2-element
+    posexplode — ONE scan of the log, no self-join of raw rows.  Weeks
+    missing either side (the first week, the trailing phantom pair)
+    drop via the n>0 filter.  State after the first shuffle is
+    O(weeks × types × quantized values) count rows, never raw events —
+    at 100 TB the counts frame is the resident monitor state and the
+    week pair readout is a bounded window walk, the same shape as the
+    ddsketch/KS family."""
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.select(
+        "event_type",
+        F.date_trunc("week", F.col("ts")).cast("date").alias("wk"),
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("c"),
+    )
+    contrib = base.select(
+        "event_type",
+        "c",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.date_format("wk", "yyyy-MM-dd").alias("week"),
+                    F.lit(False).alias("early"),
+                ),
+                F.struct(
+                    F.date_format(F.date_add("wk", 7), "yyyy-MM-dd").alias(
+                        "week"
+                    ),
+                    F.lit(True).alias("early"),
+                ),
+            )
+        ).alias("p"),
+    ).select("event_type", "c", F.col("p.week").alias("week"), F.col("p.early").alias("early"))
+    contrib = contrib.localCheckpoint(eager=False)
+    ks = xstats.keyed_ks_two_sample(
+        contrib,
+        ["week", "event_type"],
+        "c",
+        "early",
+        n_a="n_prev",
+        n_b="n_cur",
+        ks_num="ks_num",
+        ks_stat="ks_stat",
+    ).filter((F.col("n_prev") > 0) & (F.col("n_cur") > 0))
+    # densified 2xK mix table per week: zero-observed cells included so
+    # the chi-square is the real homogeneity statistic
+    mcnt = contrib.groupBy("week", "early", "event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("o")
+    ).localCheckpoint(eager=False)
+    wtypes = mcnt.select("week", "event_type").distinct()
+    wsides = mcnt.select("week", "early").distinct()
+    cells = (
+        wtypes.join(wsides, "week")
+        .join(mcnt, ["week", "early", "event_type"], "left")
+        .select(
+            "week",
+            "early",
+            "event_type",
+            F.coalesce(F.col("o"), F.lit(0)).cast("long").alias("o"),
+        )
+    )
+    marg = cells.groupBy("week", "early").agg(F.sum("o").alias("r"))
+    cmarg = cells.groupBy("week", "event_type").agg(F.sum("o").alias("col_n"))
+    ntot = cells.groupBy("week").agg(F.sum("o").alias("n"))
+    e = (
+        F.col("r").cast("double")
+        * F.col("col_n").cast("double")
+        / F.col("n").cast("double")
+    )
+    term = (F.col("o").cast("double") - e) * (F.col("o").cast("double") - e) / e
+    chi = (
+        cells.join(marg, ["week", "early"])
+        .join(cmarg, ["week", "event_type"])
+        .join(ntot, "week")
+        .select(
+            "week",
+            F.floor(term * 1000000 + F.lit(0.5)).cast("bigint").alias("tm"),
+        )
+        .groupBy("week")
+        .agg(F.sum("tm").cast("long").alias("mix_chi2_micro"))
+    )
+    return ks.join(chi, "week").select(
+        "week",
+        "event_type",
+        "n_prev",
+        "n_cur",
+        "ks_num",
+        "ks_stat",
+        "mix_chi2_micro",
+    )

@@ -6,9 +6,17 @@ preserved by import order; do not reorder modules or @register blocks.
 from __future__ import annotations
 
 from dvh_airflow_kafka_spark.ext import text as xtext
+from dvh_airflow_kafka_spark.ext.sampling import (
+    hash_split,
+    sql_bucket_predicate,
+    stratified_hash_sample,
+)
+from dvh_airflow_kafka_spark.ext.text import token_count_ws
 from dvh_airflow_kafka_spark.io import load_table
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from dvh_airflow_kafka_spark.catalog._core import (
+    _staged_range_write,
+    _staged_stream_src,
     register,
 )
 
@@ -360,3 +368,286 @@ def duplicated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ==========================================================================
+# [EXT] training-data splits, stratified and class-balanced sampling
+# ==========================================================================
+
+
+@register(
+    "documents_train_test_split",
+    sql=f"""
+    SELECT CASE WHEN {sql_bucket_predicate('doc_id', 0.8)}
+                THEN 'train' ELSE 'test' END AS split,
+           COUNT(*) AS n_docs,
+           CAST(SUM(n_chars) AS BIGINT) AS sum_chars
+    FROM documents GROUP BY 1
+    """,
+)
+def documents_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] Deterministic leakage-free train/test split: sha256-prefix
+    bucketing on doc_id (lexicographic hex compare == 32-bit numeric
+    compare, so Spark and the oracle agree bit-for-bit). No shuffle, no
+    seed/order sensitivity; adding documents never moves old ones."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        hash_split(docs, "doc_id", train_frac=0.8)
+        .groupBy("split")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").cast("bigint").alias("sum_chars"),
+        )
+    )
+
+
+@register(
+    "events_stratified_sample",
+    sql=f"""
+    SELECT event_type, COUNT(*) AS n_kept
+    FROM events
+    WHERE {sql_bucket_predicate('event_id', 0.1, salt='sample-v1')}
+    GROUP BY event_type
+    """,
+)
+def events_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] Deterministic ~10% downsample, uniform within every stratum
+    — the reproducible replacement for ``sampleBy`` (whose survivors
+    depend on seed + partitioning). Scan-fused predicate, zero shuffle
+    before the count."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        stratified_hash_sample(ev, "event_id", frac=0.1, salt="sample-v1")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_kept"))
+    )
+
+
+@register(
+    "lang_balanced_sample",
+    sql=f"""
+    WITH ranked AS (
+        SELECT doc_id, lang,
+               row_number() OVER (
+                   PARTITION BY lang
+                   ORDER BY substr(sha256('balance-v1' ||
+                                          CAST(doc_id AS VARCHAR)), 1, 8),
+                            doc_id) AS rn
+        FROM documents)
+    SELECT doc_id, lang FROM ranked WHERE rn <= 40
+    """,
+)
+def lang_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] Class-balanced downsample: at most 40 documents per
+    language, chosen by deterministic hash order (not arbitrary row
+    order), so over-represented classes shrink while the selection stays
+    reproducible across runs, partitionings, and engines. One shuffle on
+    the class key; per-class state is a row counter."""
+    docs = load_table(spark, sf_dir, "documents")
+    from dvh_airflow_kafka_spark.ext.sampling import split_bucket
+
+    w = Window.partitionBy("lang").orderBy(
+        split_bucket(F.col("doc_id"), "balance-v1"), F.col("doc_id")
+    )
+    return (
+        docs.select("doc_id", "lang", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") <= 40)
+        .select("doc_id", "lang")
+    )
+
+# ==========================================================================
+# [EXT] incremental mixture rebalance over mergeable per-source partials
+# (+ its streaming twin)
+# ==========================================================================
+
+# α=0.5 temperature mixture over the merged per-source token totals; the
+# weekly token budget redistributed √-proportionally.
+_REBALANCE_BUDGET = 50_000_000
+
+
+_REBALANCE_SQL = rf"""
+    WITH t AS (
+        SELECT source,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(len(regexp_extract_all(text, '\S+'))) AS BIGINT)
+                   AS n_tokens,
+               CAST(SUM(CASE WHEN doc_id % 4 = 1 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS inc_docs,
+               CAST(SUM(CASE WHEN doc_id % 4 = 1
+                             THEN len(regexp_extract_all(text, '\S+'))
+                             ELSE 0 END) AS BIGINT) AS inc_tokens
+        FROM documents
+        WHERE source IS NOT NULL
+        GROUP BY source
+    ), w AS (
+        SELECT *,
+               CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT)
+                   AS w_sqrt
+        FROM t
+    ), tot AS (SELECT SUM(w_sqrt) AS tw FROM w)
+    SELECT source, n_docs, n_tokens, inc_docs, inc_tokens, w_sqrt,
+           CAST((1000000 * w_sqrt) // tw AS BIGINT) AS share_ppm,
+           CAST(({_REBALANCE_BUDGET} * w_sqrt) // tw AS BIGINT)
+               AS token_budget
+    FROM w, tot
+    """
+
+
+@register("mixture_rebalance_incremental", sql=_REBALANCE_SQL)
+def mixture_rebalance_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] Incremental mixture rebalance — the weekly-recrawl capstone
+    (VERDICT r10 item 5a): the per-source (doc, token) totals that drive
+    temperature sampling are maintained as MERGEABLE PARTIALS, and the
+    α = 0.5 mixture weights + token budgets are recomputed from the
+    merged state each time a crawl increment lands.
+
+    The fixture splits ``documents`` into an "already aggregated" corpus
+    (doc_id % 4 ≠ 1) and a "new crawl" increment (doc_id % 4 = 1); each
+    side aggregates independently and the totals merge by re-aggregating
+    the unioned partials (COUNT/SUM monoids — bit-identical to the
+    oracle's one-pass GROUP BY, the ``incremental_daily_revenue`` law).
+    At 100 TB the state side is read from the rollup table, so a weekly
+    rebalance is O(increment), not O(corpus).
+
+    The mixture readout follows ``temperature_mixture_sample``'s
+    cross-engine discipline, hardened further: the √-weight is
+    ``floor(sqrt(n_tokens))`` — both engines evaluate the correctly-
+    rounded IEEE sqrt of the SAME exactly-representable integer, so the
+    floored weight is bit-identical — and everything downstream
+    (Σ weights, ppm shares, budget split) is pure BIGINT arithmetic with
+    no float summation order to disagree on.
+
+    Plan: two map-side-combined partial aggregates over disjoint slices
+    (one at scale), a |sources|-row merge, and a 1-row total
+    crossJoined back broadcast — no corpus-sized shuffle anywhere."""
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("source").isNotNull()
+    )
+
+    def partial(df: DataFrame) -> DataFrame:
+        return df.groupBy("source").agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(token_count_ws(F.col("text"))).cast("long").alias("n_tokens"),
+        )
+
+    state = partial(docs.filter(F.col("doc_id") % 4 != 1))
+    inc = partial(docs.filter(F.col("doc_id") % 4 == 1)).select(
+        "source",
+        F.col("n_docs").alias("inc_docs"),
+        F.col("n_tokens").alias("inc_tokens"),
+    )
+    merged = (
+        state.unionByName(
+            inc.select(
+                "source",
+                F.col("inc_docs").alias("n_docs"),
+                F.col("inc_tokens").alias("n_tokens"),
+            )
+        )
+        .groupBy("source")
+        .agg(
+            F.sum("n_docs").alias("n_docs"),
+            F.sum("n_tokens").alias("n_tokens"),
+        )
+    )
+    totals = merged.join(inc, "source", "left").select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        F.coalesce(F.col("inc_docs"), F.lit(0)).cast("long").alias("inc_docs"),
+        F.coalesce(F.col("inc_tokens"), F.lit(0))
+        .cast("long")
+        .alias("inc_tokens"),
+    )
+    return _rebalance_readout(totals)
+
+
+def _rebalance_readout(totals: DataFrame) -> DataFrame:
+    """The α = 0.5 mixture readout over a per-source totals frame
+    ``(source, n_docs, n_tokens, inc_docs, inc_tokens)`` — shared by
+    the batch partials query and its streaming twin so the BIGINT
+    arithmetic can never drift between them.  floor(sqrt(BIGINT)) is
+    the one float op (correctly-rounded IEEE sqrt of an exactly-
+    representable integer — bit-identical cross-engine); everything
+    after is integer division against the 1-row broadcast total."""
+    weighted = totals.select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        "inc_docs",
+        "inc_tokens",
+        F.floor(F.sqrt(F.col("n_tokens").cast("double")))
+        .cast("long")
+        .alias("w_sqrt"),
+    ).localCheckpoint(eager=False)
+    total = weighted.agg(F.sum("w_sqrt").alias("__tw"))
+    return weighted.crossJoin(F.broadcast(total)).select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        "inc_docs",
+        "inc_tokens",
+        "w_sqrt",
+        F.expr("(1000000L * w_sqrt) div __tw").alias("share_ppm"),
+        F.expr(f"({_REBALANCE_BUDGET}L * w_sqrt) div __tw").alias(
+            "token_budget"
+        ),
+    )
+
+
+@register(
+    "streaming_mixture_rebalance",
+    # Shares the batch rebalance oracle VERBATIM — the seventh
+    # batch/streaming twin family (quantile, frequency-grid,
+    # heavy-hitter, mergeable-distinct, mergeable-overlap, membership,
+    # now mixture totals).
+    sql=_REBALANCE_SQL,
+)
+def streaming_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] The mixture-rebalance totals MAINTAINED AS STREAMING STATE:
+    documents drain through a file stream in 4 micro-batches and the
+    per-source (docs, tokens, increment-docs, increment-tokens) totals
+    are an unwatermarked streaming groupBy — COUNT/SUM state merges by
+    addition across micro-batches (the same monoid law the batch query
+    proves against the one-pass oracle), so the complete-mode final
+    snapshot equals the batch partials-merge EXACTLY and this query
+    shares ``mixture_rebalance_incremental``'s DuckDB oracle verbatim.
+    The α = 0.5 weight/budget readout is the SAME shared
+    ``_rebalance_readout`` the batch query runs — twin equality by
+    construction.
+
+    This is the recrawl monitor kept RESIDENT: as crawl files land, the
+    per-source token totals (state: O(|sources|) rows FOREVER,
+    flatness CI-pinned in tests/test_scale_probe_stream.py) are always
+    current and the weekly budget recomputation is a readout over the
+    snapshot, not a corpus rescan."""
+    from dvh_airflow_kafka_spark.streaming.stateful import (
+        read_event_stream,
+        run_drain,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("source").isNotNull()
+    ).select("doc_id", "source", "text")
+
+    def _write(src: str) -> None:
+        # 4 hash slices — COUNT/SUM totals are order- and
+        # composition-free, so any slicing drains to the same snapshot
+        _staged_range_write(docs, src, 4)
+
+    src = _staged_stream_src("stream_mix", sf_dir, _write)
+    stream = read_event_stream(spark, src)
+    is_inc = (F.col("doc_id") % 4 == 1).cast("long")
+    n_tok = token_count_ws(F.col("text")).cast("long")
+    totals = (
+        stream.select("source", is_inc.alias("__inc"), n_tok.alias("__n"))
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("__n").cast("long").alias("n_tokens"),
+            F.sum("__inc").cast("long").alias("inc_docs"),
+            F.sum(F.col("__inc") * F.col("__n")).cast("long").alias(
+                "inc_tokens"
+            ),
+        )
+    )
+    snap = run_drain(totals, mode="complete", shuffle_partitions=8).table
+    return _rebalance_readout(snap)

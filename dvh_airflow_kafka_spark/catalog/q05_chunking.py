@@ -8,7 +8,7 @@ from __future__ import annotations
 import datetime as dt
 
 from dvh_airflow_kafka_spark.ext import text as xtext
-from dvh_airflow_kafka_spark.io import load_table
+from dvh_airflow_kafka_spark.io import ensure_parallelism, load_table
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from dvh_airflow_kafka_spark.catalog._core import (
     _stage_frame,
@@ -153,9 +153,7 @@ def training_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return explode_token_spans(pre, _SEQ_LEN)
 
 
-@register(
-    "bloom_dedup_insert",
-    sql="""
+_BLOOM_DEDUP_SQL = """
     WITH batch AS (
         SELECT event_id, user_id, event_type, props
         FROM events WHERE event_id < 2000
@@ -164,8 +162,10 @@ def training_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT b.event_id, b.user_id, b.event_type, b.props
     FROM batch b
     WHERE NOT EXISTS (SELECT 1 FROM sink s WHERE s.event_id = b.event_id)
-    """,
-)
+    """
+
+
+@register("bloom_dedup_insert", sql=_BLOOM_DEDUP_SQL)
 def bloom_dedup_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] J1 dedup with a Bloom fast path (``ext/bloom.py``): the
     sink keyset is folded into a broadcastable DataFrame of set bit
@@ -185,6 +185,83 @@ def bloom_dedup_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = events.filter(F.col("event_id") < 2000)
     sink = events.filter(F.col("event_id") % 2 == 0).select("event_id")
     return bloom_dedup(batch, sink, ["event_id"])
+
+
+def _bloom_bits_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streaming half of ``streaming_bloom_bits``, exposed as a seam
+    so the pytest twin law can compare the DRAINED state snapshot
+    bit-for-bit against the batch ``build_bloom`` frame: stage the sink
+    keyset as 4 micro-batch files, stream each key's bit positions
+    (JVM-side xxhash64), and drain the unwatermarked groupBy(pos) to its
+    complete-mode snapshot.  Returns the one-column ``(pos)`` frame."""
+    from dvh_airflow_kafka_spark.ext.bloom import bloom_positions
+    from dvh_airflow_kafka_spark.streaming.stateful import (
+        read_event_stream,
+        run_drain,
+    )
+
+    sink = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") % 2 == 0)
+        .select("event_id")
+    )
+
+    def _write(src: str) -> None:
+        # 4 files -> 4 micro-batches; set bits merge by union, so batch
+        # composition is irrelevant
+        _staged_range_write(sink, src, 4)
+
+    src = _staged_stream_src("stream_bloom", sf_dir, _write)
+    key = F.concat_ws("\x1f", F.col("event_id").cast("string"))
+    regs = (
+        read_event_stream(spark, src)
+        .select(F.explode(F.array(*bloom_positions(key))).alias("pos"))
+        .groupBy("pos")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    snapshot = run_drain(regs, mode="complete", shuffle_partitions=8).table
+    return snapshot.select("pos")
+
+
+@register(
+    "streaming_bloom_bits",
+    # Shares the Bloom-fast-path dedup oracle VERBATIM — the sixth
+    # batch/streaming twin family (quantile, frequency-grid,
+    # heavy-hitter, mergeable-distinct, mergeable-overlap, now
+    # mergeable-membership).
+    sql=_BLOOM_DEDUP_SQL,
+)
+def streaming_bloom_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] The Bloom filter's set-bit frame MAINTAINED AS STREAMING
+    STATE: the sink keyset (even event_ids) drains through a file
+    stream in 4 micro-batches; each key's k=2 bit positions are
+    computed JVM-side (``ext/bloom.bloom_positions`` — xxhash64
+    codegen, no UDF) and the filter is an unwatermarked streaming
+    groupBy over ``pos`` — set bits merge by UNION across micro-batches
+    (the Bloom OR-merge law), so the complete-mode final snapshot
+    equals the batch ``build_bloom`` frame EXACTLY (twin law pinned in
+    pytest), and feeding it to the shared
+    ``ext/bloom.bloom_dedup_with_bits`` readout reproduces
+    ``bloom_dedup_insert`` bit-for-bit: this query shares its DuckDB
+    ``NOT EXISTS`` oracle verbatim.
+
+    State is one row per OCCUPIED bit — a function of the sink's
+    distinct KEY SET (≤ min(k·|keys|, m=2^22) rows), never of row
+    volume: replaying the same sink twice leaves the state byte-flat
+    (CI-pinned in tests/test_scale_probe_stream.py with a same-id
+    duplicated corpus — the membership-family analogue of the other
+    five twins' flatness laws).  At 100 TB ingest this is the resident
+    sink-key membership filter the J1 dedup insert probes before paying
+    the exact anti-join."""
+    from dvh_airflow_kafka_spark.ext.bloom import bloom_dedup_with_bits
+
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "props"
+    )
+    sink = events.filter(F.col("event_id") % 2 == 0).select("event_id")
+    bits = _bloom_bits_snapshot(spark, sf_dir)
+    batch = events.filter(F.col("event_id") < 2000)
+    return bloom_dedup_with_bits(batch, sink, bits, ["event_id"])
 
 
 _FREQ_CAP = 15  # max docs kept per source
@@ -827,71 +904,6 @@ def sql_interface_shared_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "jsonl_roundtrip_decode",
-    sql="""
-    SELECT event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY event_type
-    UNION ALL
-    SELECT '__corrupt__', 1, NULL
-    """,
-)
-def jsonl_roundtrip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] JSONL source with malformed-record capture: the events slice
-    round-trips through newline-delimited JSON on disk (the corpus
-    interchange format), is read back under an EXPLICIT schema in
-    PERMISSIVE mode with ``columnNameOfCorruptRecord``, and a planted
-    malformed line must surface in the corrupt bucket instead of
-    failing the scan or silently vanishing — the file-source analogue
-    of the Avro malformed-frame check (``runner.py``). Doubles survive
-    the round-trip exactly (Spark writes shortest-round-trip reprs);
-    the rollup is DECIMAL-exact."""
-    import os
-    import shutil
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    tmp = tempfile.mkdtemp(prefix="jsonl_")
-    src = os.path.join(tmp, "events_jsonl")
-    ev.coalesce(4).write.mode("overwrite").json(src)
-    with open(os.path.join(src, "part-corrupt.json"), "w") as f:
-        f.write('{"event_id": 1, "event_type": "purchase", "value": oops}\n')
-    back = spark.read.schema(
-        "event_id long, event_type string, value double, _corrupt string"
-    ).option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", "_corrupt"
-    ).json(src)
-    # Spark refuses a query that touches ONLY the corrupt column of a raw
-    # JSON scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN);
-    # pinning the parsed frame is the documented workaround.
-    back = back.persist()
-    good = back.filter(F.col("_corrupt").isNull())
-    bad = back.filter(F.col("_corrupt").isNotNull())
-    out = good.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_value"),
-    ).unionByName(
-        bad.agg(
-            F.lit("__corrupt__").alias("event_type"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.lit(None).cast("double").alias("total_value"),
-        )
-    )
-    rows = out.collect()
-    back.unpersist()
-    shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_events long, total_value double"
-    )
-
-
-@register(
     "pseudonymize_users",
     sql="""
     SELECT event_id,
@@ -1082,9 +1094,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "frequent_tokens_bounded_state",
-    sql=r"""
+_MG_SQL = r"""
     WITH toks AS (
         SELECT unnest(regexp_extract_all(text, '\S+')) AS token
         FROM documents
@@ -1093,8 +1103,10 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM toks
     GROUP BY token
     HAVING COUNT(*) * 64 > (SELECT n FROM tot)
-    """,
-)
+    """
+
+
+@register("frequent_tokens_bounded_state", sql=_MG_SQL)
 def frequent_tokens_bounded_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] Exact heavy hitters with O(k) executor state
     (``ext/sketch.py``): a per-partition Misra-Gries candidate pass
@@ -1110,6 +1122,66 @@ def frequent_tokens_bounded_state(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, sf_dir, "documents")
     return frequent_tokens(docs, F.col("text"), k_state=64)
+
+
+_MG_K = 64
+_MG_SHARDS = 8
+
+
+@register(
+    "streaming_frequent_tokens",
+    # Shares the batch Misra-Gries oracle VERBATIM (same exact heavy-
+    # hitter output, threshold N/64) — the ddsketch/countmin twin device.
+    sql=_MG_SQL,
+)
+def streaming_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] The Misra-Gries heavy-hitter sketch MAINTAINED AS STREAMING
+    STATE: documents drain through a file stream in 4 micro-batches,
+    sharded by doc_id into 8 groups; each shard resumes its k=64-counter
+    MG summary from the state store every batch
+    (``streaming/stateful.mg_candidates_with_state`` — the SAME
+    decrement-counter kernel as the batch pass, fed incrementally) and
+    emits its current candidates.  The distinct union of emissions is a
+    provable superset of every token with global frequency > N/64
+    (per-shard pigeonhole, see the operator docstring), and the exact
+    verify pass (``ext/sketch.verify_candidate_counts``) then matches
+    the batch query bit-for-bit — so this query shares
+    ``frequent_tokens_bounded_state``'s DuckDB oracle verbatim: a
+    cross-engine hash proof that resumable streaming sketch state equals
+    the batch sketch equals a full groupBy.
+
+    At 100 TB ingest this is the resident vocabulary-drift monitor:
+    state is O(k) per shard FOREVER (8x64 counters here), immune to the
+    unbounded token domain that makes a streaming groupBy(token) state
+    grow without bound.  The state-flatness CI probe pins this
+    (``tests/test_scale_probe_stream.py``)."""
+    from dvh_airflow_kafka_spark.ext.sketch import verify_candidate_counts
+    from dvh_airflow_kafka_spark.streaming.stateful import (
+        mg_candidates_with_state,
+        read_event_stream,
+        run_drain,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def _write(src: str) -> None:
+        # 4 files -> 4 micro-batches; MG state resumes across batches and
+        # the verify pass is batch-composition-free, so hash/round-robin
+        # slicing is fine
+        _staged_range_write(docs, src, 4)
+
+    src = _staged_stream_src("stream_mg", sf_dir, _write)
+    stream = read_event_stream(spark, src).select(
+        (F.col("doc_id") % _MG_SHARDS).alias("shard"), "text"
+    )
+    emitted = run_drain(
+        mg_candidates_with_state(stream, k=_MG_K),
+        mode="update",
+        shuffle_partitions=_MG_SHARDS,
+    ).table
+    candidates = emitted.select("token").distinct()
+    slim = ensure_parallelism(docs.select(F.col("text").alias("__text")))
+    return verify_candidate_counts(slim, candidates, k_state=_MG_K)
 
 
 @register(
@@ -1506,5 +1578,3 @@ def events_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dau",
         "rolling_7d_users",
     )
-
-

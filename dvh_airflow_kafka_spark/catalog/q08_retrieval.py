@@ -6,6 +6,7 @@ preserved by import order; do not reorder modules or @register blocks.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from dvh_airflow_kafka_spark.ext import dedup as xdedup, multimodal as xmm, similarity as xsim, text as xtext
 from dvh_airflow_kafka_spark.io import load_table
@@ -13,6 +14,7 @@ from dvh_airflow_kafka_spark.sources import events_as_kafka_frame, with_envelope
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from dvh_airflow_kafka_spark.catalog._core import (
     _ntz,
+    _scratch_dir,
     _stage_frame,
     _staged_range_write,
     _staged_stream_src,
@@ -1120,9 +1122,14 @@ def blob_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "csv_roundtrip_decode",
-    sql="""
+# ==========================================================================
+# [EXT] file-format round trips: JSONL and CSV with malformed-record
+# capture, ORC, parquet schema evolution.  Each writes the events slice
+# to a scratch dir, reads it back and collects the rollup before the dir
+# is removed.
+# ==========================================================================
+
+_CORRUPT_ROLLUP_SQL = """
     SELECT event_type,
            COUNT(*) AS n_events,
            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
@@ -1130,8 +1137,72 @@ def blob_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     UNION ALL
     SELECT '__corrupt__', 1, NULL
-    """,
-)
+    """
+
+
+def _corrupt_rollup(
+    spark: SparkSession, fmt: str, src: str, **options
+) -> DataFrame:
+    """Read ``src`` back as ``fmt`` under an EXPLICIT events schema in
+    PERMISSIVE mode with ``columnNameOfCorruptRecord`` and roll it up
+    per event_type in one aggregate, every malformed line counted in
+    one ``__corrupt__`` row.  Collected here, so the caller may remove
+    ``src`` afterwards."""
+    back = (
+        spark.read.schema(
+            "event_id long, event_type string, value double, _corrupt string"
+        )
+        .options(
+            mode="PERMISSIVE", columnNameOfCorruptRecord="_corrupt", **options
+        )
+        .format(fmt)
+        .load(src)
+    )
+    good = F.col("_corrupt").isNull()
+    rows = (
+        back.groupBy(
+            F.when(good, F.col("event_type"))
+            .otherwise(F.lit("__corrupt__"))
+            .alias("event_type")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.when(good, F.col("value").cast("decimal(18,2)")))
+            .cast("double")
+            .alias("total_value"),
+        )
+        .collect()
+    )
+    return spark.createDataFrame(
+        rows, "event_type string, n_events long, total_value double"
+    )
+
+
+@register("jsonl_roundtrip_decode", sql=_CORRUPT_ROLLUP_SQL)
+def jsonl_roundtrip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] JSONL source with malformed-record capture: the events slice
+    round-trips through newline-delimited JSON on disk (the corpus
+    interchange format), is read back under an EXPLICIT schema in
+    PERMISSIVE mode with ``columnNameOfCorruptRecord``, and a planted
+    malformed line must surface in the corrupt bucket instead of
+    failing the scan or silently vanishing — the file-source analogue
+    of the Avro malformed-frame check (``runner.py``). Doubles survive
+    the round-trip exactly (Spark writes shortest-round-trip reprs);
+    the rollup is DECIMAL-exact."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
+    with _scratch_dir("jsonl_") as tmp:
+        src = os.path.join(tmp, "events_jsonl")
+        ev.coalesce(4).write.mode("overwrite").json(src)
+        with open(os.path.join(src, "part-corrupt.json"), "w") as f:
+            f.write(
+                '{"event_id": 1, "event_type": "purchase", "value": oops}\n'
+            )
+        return _corrupt_rollup(spark, "json", src)
+
+
+@register("csv_roundtrip_decode", sql=_CORRUPT_ROLLUP_SQL)
 def csv_roundtrip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] CSV source with malformed-record capture — the third file
     interchange format next to parquet and JSONL
@@ -1143,48 +1214,17 @@ def csv_roundtrip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip exactly (Spark writes shortest-round-trip reprs); the
     rollup is DECIMAL-exact. The planted file carries its own header
     line because ``header=true`` drops the first line of EVERY file."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="csv_")
-    src = os.path.join(tmp, "events_csv")
-    ev.coalesce(4).write.mode("overwrite").option("header", True).csv(src)
-    with open(os.path.join(src, "part-corrupt.csv"), "w") as f:
-        f.write("event_id,event_type,value\n9999999,purchase,not_a_number\n")
-    back = (
-        spark.read.schema(
-            "event_id long, event_type string, value double, _corrupt string"
-        )
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(src)
-    )
-    back = back.persist()
-    good = back.filter(F.col("_corrupt").isNull())
-    bad = back.filter(F.col("_corrupt").isNotNull())
-    out = good.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_value"),
-    ).unionByName(
-        bad.agg(
-            F.lit("__corrupt__").alias("event_type"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.lit(None).cast("double").alias("total_value"),
-        )
-    )
-    rows = out.collect()
-    back.unpersist()
-    shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_events long, total_value double"
-    )
+    with _scratch_dir("csv_") as tmp:
+        src = os.path.join(tmp, "events_csv")
+        ev.coalesce(4).write.mode("overwrite").option("header", True).csv(src)
+        with open(os.path.join(src, "part-corrupt.csv"), "w") as f:
+            f.write(
+                "event_id,event_type,value\n9999999,purchase,not_a_number\n"
+            )
+        return _corrupt_rollup(spark, "csv", src, header=True)
 
 
 @register(
@@ -1207,32 +1247,30 @@ def orc_roundtrip_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     a first-class Spark source with the same predicate-pushdown /
     column-pruning path as parquet, so the scan stays pruned at scale;
     doubles survive the round-trip bit-exactly (ORC stores IEEE 754)."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="orc_")
-    src = os.path.join(tmp, "events_orc")
-    (
-        ev.coalesce(4)
-        .write.mode("overwrite")
-        .option("orc.bloom.filter.columns", "event_type")
-        .option("orc.dictionary.key.threshold", "1.0")
-        .orc(src)
-    )
-    back = spark.read.orc(src)
-    out = back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_value"),
-    )
-    rows = out.collect()
-    shutil.rmtree(tmp, ignore_errors=True)
+    with _scratch_dir("orc_") as tmp:
+        src = os.path.join(tmp, "events_orc")
+        (
+            ev.coalesce(4)
+            .write.mode("overwrite")
+            .option("orc.bloom.filter.columns", "event_type")
+            .option("orc.dictionary.key.threshold", "1.0")
+            .orc(src)
+        )
+        rows = (
+            spark.read.orc(src)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.countDistinct("user_id").alias("n_users"),
+                F.sum(F.col("value").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("total_value"),
+            )
+            .collect()
+        )
     return spark.createDataFrame(
         rows, "event_type string, n_events long, n_users long, total_value double"
     )
@@ -1261,29 +1299,28 @@ def parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a user).  This is the batch-file analogue of the Kafka path's
     multi-schema-id Avro decode — scan-level tolerance to additive
     schema change, with the footer-merge cost paid once at planning."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pqevo_")
-    src = os.path.join(tmp, "events_evo")
-    ev.filter(F.col("event_id") % 2 == 0).select(
-        "event_id", "event_type", "value"
-    ).coalesce(2).write.parquet(os.path.join(src, "batch=1"))
-    ev.filter(F.col("event_id") % 2 == 1).select(
-        "event_id", "event_type", "value", "user_id"
-    ).coalesce(2).write.parquet(os.path.join(src, "batch=2"))
-    back = spark.read.option("mergeSchema", True).parquet(src)
-    out = back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.count("user_id").alias("n_with_user"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_value"),
-    )
-    rows = out.collect()
-    shutil.rmtree(tmp, ignore_errors=True)
+    with _scratch_dir("pqevo_") as tmp:
+        src = os.path.join(tmp, "events_evo")
+        ev.filter(F.col("event_id") % 2 == 0).select(
+            "event_id", "event_type", "value"
+        ).coalesce(2).write.parquet(os.path.join(src, "batch=1"))
+        ev.filter(F.col("event_id") % 2 == 1).select(
+            "event_id", "event_type", "value", "user_id"
+        ).coalesce(2).write.parquet(os.path.join(src, "batch=2"))
+        rows = (
+            spark.read.option("mergeSchema", True)
+            .parquet(src)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.count("user_id").alias("n_with_user"),
+                F.sum(F.col("value").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("total_value"),
+            )
+            .collect()
+        )
     return spark.createDataFrame(
         rows,
         "event_type string, n_events long, n_with_user long, total_value double",

@@ -9,6 +9,8 @@ from dvh_airflow_kafka_spark.ext import text as xtext
 from dvh_airflow_kafka_spark.io import load_table
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from dvh_airflow_kafka_spark.catalog._core import (
+    _staged_range_write,
+    _staged_stream_src,
     register,
 )
 
@@ -703,9 +705,7 @@ def event_mix_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_K = 64
 
 
-@register(
-    "theta_sketch_overlap",
-    sql=f"""
+_THETA_SQL = f"""
     WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
     h AS (
         SELECT DISTINCT event_type,
@@ -744,8 +744,10 @@ _KMV_K = 64
            COALESCE(ex.exact_common, 0) AS exact_common
     FROM est LEFT JOIN ex
       ON est.event_a = ex.event_a AND est.event_b = ex.event_b
-    """,
-)
+    """
+
+
+@register("theta_sketch_overlap", sql=_THETA_SQL)
 def theta_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] Theta/KMV sketch set-overlap estimation (Bar-Yossef et al.
     RANDOM'02; the Datasketches theta framework): per event type, a
@@ -778,3 +780,71 @@ def theta_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return xsketch.theta_overlap_report(km, du, _KMV_K)
 
 
+@register(
+    "streaming_kmv_minima",
+    # Shares the theta/KMV sketch oracle VERBATIM — the fifth
+    # batch/streaming twin family (quantile, frequency-grid,
+    # heavy-hitter, mergeable-distinct, now mergeable-overlap).
+    sql=_THETA_SQL,
+)
+def streaming_kmv_minima(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] The KMV/theta k-minimum-values sketch MAINTAINED AS
+    STREAMING STATE: events drain through a file stream in 4
+    micro-batches; each event type's k=64 smallest distinct user hashes
+    live in the state store across batches
+    (``streaming/stateful.kmv_minima_with_state``), merged per batch by
+    k-min-of-union — the textbook KMV merge, whose telescoping equals
+    the batch ``ext/sketch.kmv_sketch`` output EXACTLY regardless of
+    batch composition (minima only improve; a discarded hash is
+    permanently outranked).  The final per-type snapshot feeds the SAME
+    ``ext/sketch.theta_overlap_report`` readout the batch query uses, so
+    this query shares ``theta_sketch_overlap``'s DuckDB oracle verbatim:
+    a cross-engine hash proof that resumable streaming sketch state
+    equals the batch sketch equals the replayed oracle.
+
+    Hashing stays JVM-side (``kmv_hash`` sha256-prefix BEFORE the
+    stateful operator); the Python merge truncates to the k smallest
+    after every Arrow chunk, so its working set is O(k + chunk), never
+    the micro-batch's distinct-hash count.  State
+    is O(k)=64 longs per event type FOREVER — the resident
+    audience-overlap monitor at 100 TB ingest, beside the ddsketch
+    (quantiles), count-min (frequencies), Misra-Gries (heavy-hitter) and
+    HLL (distinct) twins; flatness CI-pinned in
+    tests/test_scale_probe_stream.py."""
+    from dvh_airflow_kafka_spark.ext.sketch import (
+        kmv_hash,
+        theta_overlap_report,
+    )
+    from dvh_airflow_kafka_spark.streaming.stateful import (
+        kmv_minima_with_state,
+        read_event_stream,
+        run_drain,
+    )
+
+    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
+
+    def _write(src: str) -> None:
+        # 4 files -> 4 micro-batches; k-min-of-union is a mergeable,
+        # order-free reduction, so batch composition is irrelevant
+        _staged_range_write(ev, src, 4)
+
+    src = _staged_stream_src("stream_kmv", sf_dir, _write)
+    stream = read_event_stream(spark, src).select(
+        F.col("event_type").alias("g"),
+        kmv_hash(F.col("user_id")).alias("h"),
+    )
+    emitted = run_drain(
+        kmv_minima_with_state(stream, k=_KMV_K),
+        mode="update",
+        shuffle_partitions=8,
+    ).table
+    # update-mode emission history -> each group's LATEST snapshot (the
+    # seq counter is monotone per group; the window partitions by group)
+    w = Window.partitionBy("g").orderBy(F.col("seq").desc())
+    km = (
+        emitted.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(F.col("g").alias("event_type"), "kmins")
+    )
+    du = ev.distinct().localCheckpoint(eager=False)
+    return theta_overlap_report(km, du, _KMV_K)

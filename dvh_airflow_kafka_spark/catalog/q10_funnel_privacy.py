@@ -8,9 +8,15 @@ from __future__ import annotations
 import datetime as dt
 
 from dvh_airflow_kafka_spark.ext import text as xtext
+from dvh_airflow_kafka_spark.ext.sketch import (
+    HLL_M as _HLL_M,
+    HLL_REM as _HLL_REM,
+    HLL_SALT as _HLL_SALT,
+)
 from dvh_airflow_kafka_spark.io import load_table
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from dvh_airflow_kafka_spark.catalog._core import (
+    _scratch_dir,
     _stage_frame,
     _staged_range_write,
     _staged_stream_src,
@@ -1394,58 +1400,73 @@ def doc_compression_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # p=8: 256 registers, 24-bit remainder; alpha_256 * m^2 with
 # alpha_m = 0.7213 / (1 + 1.079/m) (Flajolet et al. 2007).  Single
-# source of truth is ext/sketch (the kernels the Spark side runs);
-# these aliases keep the oracle SQL below in lockstep with them.
-from dvh_airflow_kafka_spark.ext.sketch import (  # noqa: E402
-    HLL_M as _HLL_M,
-    HLL_REM as _HLL_REM,
-    HLL_SALT as _HLL_SALT,
-)
-
-
-@register(
-    "hll_register_distinct",
-    sql=f"""
-    WITH h AS (
-        SELECT event_type,
+# source of truth is ext/sketch (the kernels the Spark side runs); the
+# two fragments below are the one SQL form of that arithmetic, shared by
+# every HLL oracle (here and in the ingest family's monitor readout).
+def _hll_registers_sql(src: str, group: str) -> str:
+    """HLL register CTEs over ``src`` (``group``, user_id): ``hll_h``
+    hashes each user, ``hll_r`` splits the hash into bucket and rho,
+    ``hll_regs`` keeps the register maximum ``m_rho`` per (``group``,
+    bucket)."""
+    return f"""hll_h AS (
+        SELECT {group},
                ('0x' || substr(sha256('{_HLL_SALT}|'
                                       || CAST(user_id AS VARCHAR)), 1, 8)
                )::BIGINT AS u
-        FROM events
-    ), r AS (
-        SELECT event_type, u // {_HLL_REM} AS bucket,
+        FROM {src}
+    ), hll_r AS (
+        SELECT {group}, u // {_HLL_REM} AS bucket,
                CASE WHEN (u % {_HLL_REM}) = 0 THEN 25
                     ELSE 25 - length(bin(u % {_HLL_REM})) END AS rho
-        FROM h
-    ), regs AS (
-        SELECT event_type, bucket, MAX(rho) AS m_rho
-        FROM r GROUP BY 1, 2
-    ), est AS (
-        SELECT event_type,
+        FROM hll_h
+    ), hll_regs AS (
+        SELECT {group}, bucket, MAX(rho) AS m_rho
+        FROM hll_r GROUP BY {group}, bucket
+    )"""
+
+
+def _hll_estimate_sql(regs: str, group: str) -> str:
+    """HLL estimator CTEs over the registers ``regs`` (``group``, bucket,
+    m_rho): ``hll_est`` sums the nonzero registers, ``hll_raw`` takes the
+    raw estimate, ``hll_readout`` holds (``group``, n_nonzero,
+    hll_estimate) with the linear-counting branch, rounded to 4 places."""
+    return f"""hll_est AS (
+        SELECT {group},
                COUNT(*) AS n_nonzero,
                SUM(power(2.0, -m_rho)) AS s_nz
-        FROM regs GROUP BY event_type
-    ), x AS (
-        SELECT event_type, COUNT(DISTINCT user_id) AS n_exact
-        FROM events GROUP BY 1
-    ), raw AS (
-        SELECT e.event_type, e.n_nonzero,
+        FROM {regs} GROUP BY {group}
+    ), hll_raw AS (
+        SELECT {group}, n_nonzero,
                (0.7213 / (1 + 1.079 / {_HLL_M}.0))
                    * {_HLL_M}.0 * {_HLL_M}.0
-                   / (e.s_nz + ({_HLL_M} - e.n_nonzero) * 1.0) AS re
-        FROM est e
+                   / (s_nz + ({_HLL_M} - n_nonzero) * 1.0) AS re
+        FROM hll_est
+    ), hll_readout AS (
+        SELECT {group}, n_nonzero,
+               ROUND(CASE WHEN re <= 2.5 * {_HLL_M}
+                           AND n_nonzero < {_HLL_M}
+                          THEN {_HLL_M}.0 * ln({_HLL_M}.0
+                                   / ({_HLL_M} - n_nonzero))
+                          ELSE re END, 4) AS hll_estimate
+        FROM hll_raw
+    )"""
+
+
+_HLL_SQL = f"""
+    WITH {_hll_registers_sql("events", "event_type")},
+    {_hll_estimate_sql("hll_regs", "event_type")}, x AS (
+        SELECT event_type, COUNT(DISTINCT user_id) AS n_exact
+        FROM events GROUP BY 1
     )
     SELECT r.event_type,
            CAST(x.n_exact AS BIGINT) AS n_exact,
            CAST(r.n_nonzero AS BIGINT) AS n_nonzero_regs,
-           ROUND(CASE WHEN r.re <= 2.5 * {_HLL_M}
-                       AND r.n_nonzero < {_HLL_M}
-                      THEN {_HLL_M}.0 * ln({_HLL_M}.0
-                               / ({_HLL_M} - r.n_nonzero))
-                      ELSE r.re END, 4) AS hll_estimate
-    FROM raw r JOIN x ON x.event_type = r.event_type
-    """,
-)
+           r.hll_estimate
+    FROM hll_readout r JOIN x ON x.event_type = r.event_type
+    """
+
+
+@register("hll_register_distinct", sql=_HLL_SQL)
 def hll_register_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] Hand-rolled HyperLogLog with a FULL SQL oracle — the
     cross-engine-checkable counterpart of ``hll_mergeable_distinct``
@@ -1495,6 +1516,62 @@ def hll_register_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("user_id").cast("long").alias("n_exact")
     )
     return hll_estimate_report(regs, exact)
+
+
+@register(
+    "streaming_hll_registers",
+    # Shares the hand-rolled HyperLogLog oracle VERBATIM — the fourth
+    # batch/streaming twin family (quantile, frequency-grid,
+    # heavy-hitter, now mergeable-distinct).
+    sql=_HLL_SQL,
+)
+def streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[EXT] The HyperLogLog register grid MAINTAINED AS STREAMING STATE:
+    events drain through a file stream in 4 micro-batches and the sketch
+    is an unwatermarked streaming groupBy over (event_type, bucket)
+    keeping MAX(rho) — register maxima merge by max across micro-batches
+    (the same max-merge law ``hll_register_distinct`` proves across
+    days), so the complete-mode final snapshot equals the batch register
+    grid EXACTLY and the estimator readout reproduces the batch query
+    bit-for-bit: this query shares its DuckDB oracle verbatim.  State is
+    O(m=256) registers per event type FOREVER — the resident
+    distinct-users monitor at 100 TB ingest, beside the ddsketch
+    (quantiles), count-min (frequencies) and Misra-Gries (heavy-hitter)
+    twins; flatness CI-pinned in tests/test_scale_probe_stream.py.
+
+    The register projection and estimator are the shared
+    ``ext/sketch.hll_bucket_rho`` / ``hll_estimate_report`` kernels the
+    batch query also uses — twin equality is by construction, not by
+    parallel maintenance of two codepaths."""
+    from dvh_airflow_kafka_spark.ext.sketch import (
+        hll_bucket_rho,
+        hll_estimate_report,
+    )
+    from dvh_airflow_kafka_spark.streaming.stateful import (
+        read_event_stream,
+        run_drain,
+    )
+
+    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
+
+    def _write(src: str) -> None:
+        # 4 files -> 4 micro-batches; register maxima are a mergeable
+        # elementwise max, so batch composition is irrelevant
+        _staged_range_write(ev, src, 4)
+
+    src = _staged_stream_src("stream_hll", sf_dir, _write)
+    regs = (
+        hll_bucket_rho(
+            read_event_stream(spark, src), "event_type", elem_col="user_id"
+        )
+        .groupBy("event_type", "bucket")
+        .agg(F.max("rho").alias("m_rho"))
+    )
+    snapshot = run_drain(regs, mode="complete", shuffle_partitions=8).table
+    exact = ev.groupBy("event_type").agg(
+        F.count_distinct("user_id").cast("long").alias("n_exact")
+    )
+    return hll_estimate_report(snapshot, exact)
 
 
 @register(
@@ -1557,30 +1634,18 @@ def tokenizer_fertility_by_lang(
 @register(
     "hll_cumulative_user_curve",
     sql=f"""
-    WITH h AS (
+    WITH ev AS (
         SELECT strftime(CAST(date_trunc('day', ts) AS DATE), '%Y-%m-%d')
                    AS day,
-               ('0x' || substr(sha256('{_HLL_SALT}|'
-                                      || CAST(user_id AS VARCHAR)), 1, 8)
-               )::BIGINT AS u
+               user_id
         FROM events
-    ), r AS (
-        SELECT day, u // {_HLL_REM} AS bucket,
-               CASE WHEN (u % {_HLL_REM}) = 0 THEN 25
-                    ELSE 25 - length(bin(u % {_HLL_REM})) END AS rho
-        FROM h
-    ), p AS (
-        SELECT day, bucket, MAX(rho) AS p_rho FROM r GROUP BY day, bucket
-    ), days AS (SELECT DISTINCT day FROM p
+    ), {_hll_registers_sql("ev", "day")},
+    days AS (SELECT DISTINCT day FROM hll_regs
     ), cr AS (
-        SELECT d.day, p.bucket, MAX(p.p_rho) AS m_rho
-        FROM days d JOIN p ON p.day <= d.day
+        SELECT d.day, p.bucket, MAX(p.m_rho) AS m_rho
+        FROM days d JOIN hll_regs p ON p.day <= d.day
         GROUP BY d.day, p.bucket
-    ), est AS (
-        SELECT day, COUNT(*) AS n_nonzero,
-               SUM(power(2.0, -m_rho)) AS s_nz
-        FROM cr GROUP BY day
-    ), fd AS (
+    ), {_hll_estimate_sql("cr", "day")}, fd AS (
         SELECT user_id,
                MIN(strftime(CAST(date_trunc('day', ts) AS DATE),
                             '%Y-%m-%d')) AS f
@@ -1591,22 +1656,12 @@ def tokenizer_fertility_by_lang(
         SELECT d.day, CAST(SUM(fdc.c) AS BIGINT) AS n_exact_cum
         FROM days d JOIN fdc ON fdc.f <= d.day
         GROUP BY d.day
-    ), raw AS (
-        SELECT e.day, e.n_nonzero,
-               (0.7213 / (1 + 1.079 / {_HLL_M}.0))
-                   * {_HLL_M}.0 * {_HLL_M}.0
-                   / (e.s_nz + ({_HLL_M} - e.n_nonzero) * 1.0) AS re
-        FROM est e
     )
     SELECT r.day,
            ex.n_exact_cum,
            CAST(r.n_nonzero AS BIGINT) AS n_nonzero_regs,
-           ROUND(CASE WHEN r.re <= 2.5 * {_HLL_M}
-                       AND r.n_nonzero < {_HLL_M}
-                      THEN {_HLL_M}.0 * ln({_HLL_M}.0
-                               / ({_HLL_M} - r.n_nonzero))
-                      ELSE r.re END, 4) AS hll_estimate
-    FROM raw r JOIN ex ON ex.day = r.day
+           r.hll_estimate
+    FROM hll_readout r JOIN ex ON ex.day = r.day
     """,
 )
 def hll_cumulative_user_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2327,10 +2382,6 @@ def cdc_batched_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the target once with the dedup'd batch broadcast — the standard
     incremental-warehouse shape (bucket the target to drop the
     anti-join exchange at 100 TB)."""
-    import os
-    import shutil
-    import tempfile
-
     from dvh_airflow_kafka_spark.operators.maintenance import (
         delete_where,
         merge_upsert,
@@ -2359,8 +2410,8 @@ def cdc_batched_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("row_key").orderBy(
         F.col("ts_us").desc(), F.col("event_id").desc()
     )
-    target = tempfile.mkdtemp(prefix="cdc_target_") + "/t"
-    try:
+    with _scratch_dir("cdc_target_") as tmp:
+        target = f"{tmp}/t"
         ch.limit(0).write.parquet(target)  # empty target, changelog schema
         for b in batches:
             compact = (
@@ -2371,13 +2422,9 @@ def cdc_batched_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             merge_upsert(spark, target, compact, keys=["row_key"])
             delete_where(spark, target, F.col("op") == "D")
         rows = spark.read.parquet(target).collect()
-    finally:
-        shutil.rmtree(os.path.dirname(target), ignore_errors=True)
     return spark.createDataFrame(rows, ch.schema).select(
         "row_key",
         F.col("event_id").alias("last_event_id"),
         F.col("ts_us").alias("last_ts_us"),
         "val_milli",
     )
-
-

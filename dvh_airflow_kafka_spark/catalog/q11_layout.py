@@ -2052,9 +2052,3 @@ def wavelet_synopsis_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.abs(F.col("coef")).desc(), "level", "pos")
         .limit(_WAVELET_TOPK)
     )
-
-
-# Extended relational coverage (TPC-H q4/q6/q7/q8/q12/q13/q14/q17/q18/q19/
-# q21/q22 shapes + as-of join) registers itself on import. Bottom of the
-# module: relational.py imports `register` from here mid-initialisation.
-from dvh_airflow_kafka_spark import relational as _relational  # noqa: E402,F401

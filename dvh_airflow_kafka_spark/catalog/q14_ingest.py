@@ -47,10 +47,12 @@ from dvh_airflow_kafka_spark.catalog._core import (
 from dvh_airflow_kafka_spark.catalog.q01_reference import (
     _FLAGSHIP_FILTERS as _INGEST_FILTERS,
 )
+from dvh_airflow_kafka_spark.catalog.q03_curation import _ddsketch_sql
+from dvh_airflow_kafka_spark.catalog.q10_funnel_privacy import (
+    _hll_estimate_sql,
+    _hll_registers_sql,
+)
 from dvh_airflow_kafka_spark.ext.sketch import (
-    HLL_M as _HLL_M,
-    HLL_REM as _HLL_REM,
-    HLL_SALT as _HLL_SALT,
     ddsketch_report,
     hll_estimate_report,
     verify_candidate_counts,
@@ -284,16 +286,18 @@ def _ingest_drains(spark: SparkSession, prefix: str):
 
 def _section(
     df: DataFrame,
-    section: str,
+    section: str | Column,
     dim: str | Column,
     n: Column,
     x: Column | None = None,
 ) -> DataFrame:
-    """One report section: per row of ``df``, the ``section`` name, the
-    ``dim`` key (a Column, or a literal string), ``n`` as a long and the
-    double ``x`` (NULL unless given)."""
+    """One report section: per row of ``df``, the ``section`` name and
+    the ``dim`` key (each a Column, or a literal string), ``n`` as a
+    long and the double ``x`` (NULL unless given)."""
     return df.select(
-        F.lit(section).alias("section"),
+        (F.lit(section) if isinstance(section, str) else section).alias(
+            "section"
+        ),
         (F.lit(dim) if isinstance(dim, str) else dim).alias("dim"),
         n.cast("long").alias("n"),
         (F.lit(None).cast("double") if x is None else x).alias("x"),
@@ -352,8 +356,23 @@ def _monitor_sections(spark: SparkSession, dirs, admitted: DataFrame) -> list:
     exact = admitted.groupBy("event_type").agg(
         F.count_distinct("user_id").cast("long").alias("n_exact")
     )
-    hll = hll_estimate_report(merged["hll"], exact).localCheckpoint(
-        eager=False
+    # one pass over the estimate emits both HLL rows per event type
+    hll = hll_estimate_report(merged["hll"], exact).select(
+        "event_type",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.lit("hll").alias("s"),
+                    F.col("n_nonzero_regs").alias("n"),
+                    F.col("hll_estimate").alias("x"),
+                ),
+                F.struct(
+                    F.lit("hll_exact").alias("s"),
+                    F.col("n_exact").alias("n"),
+                    F.lit(None).cast("double").alias("x"),
+                ),
+            )
+        ).alias("r"),
     )
     dd = ddsketch_report(spark, merged["dd"])
     mg = verify_candidate_counts(
@@ -363,10 +382,7 @@ def _monitor_sections(spark: SparkSession, dirs, admitted: DataFrame) -> list:
     )
     et = F.col("event_type")
     return [
-        _section(
-            hll, "hll", et, F.col("n_nonzero_regs"), F.col("hll_estimate")
-        ),
-        _section(hll, "hll_exact", et, F.col("n_exact")),
+        _section(hll, F.col("r.s"), et, F.col("r.n"), F.col("r.x")),
         _section(
             dd,
             "ddsketch",
@@ -470,74 +486,17 @@ def _monitor_sql(src: str) -> str:
     """The monitor readout (``_monitor_sections``) replayed over the
     admitted rows ``src``: the HLL and ddsketch arithmetic of the
     certified standalone queries, exact heavy users above N/k."""
-    return f"""h AS (
-        SELECT event_type,
-               ('0x' || substr(sha256('{_HLL_SALT}|'
-                                      || CAST(user_id AS VARCHAR)), 1, 8)
-               )::BIGINT AS u
-        FROM {src}
-    ), r2 AS (
-        SELECT event_type, u // {_HLL_REM} AS bucket,
-               CASE WHEN (u % {_HLL_REM}) = 0 THEN 25
-                    ELSE 25 - length(bin(u % {_HLL_REM})) END AS rho
-        FROM h
-    ), regs AS (
-        SELECT event_type, bucket, MAX(rho) AS m_rho
-        FROM r2 GROUP BY 1, 2
-    ), est AS (
-        SELECT event_type,
-               COUNT(*) AS n_nonzero,
-               SUM(power(2.0, -m_rho)) AS s_nz
-        FROM regs GROUP BY event_type
-    ), hraw AS (
-        SELECT event_type, n_nonzero,
-               (0.7213 / (1 + 1.079 / {_HLL_M}.0))
-                   * {_HLL_M}.0 * {_HLL_M}.0
-                   / (s_nz + ({_HLL_M} - n_nonzero) * 1.0) AS re
-        FROM est
-    ), s_hll AS (
+    return f"""{_hll_registers_sql(src, "event_type")},
+    {_hll_estimate_sql("hll_regs", "event_type")}, s_hll AS (
         SELECT 'hll' AS section, event_type AS dim,
-               CAST(n_nonzero AS BIGINT) AS n,
-               ROUND(CASE WHEN re <= 2.5 * {_HLL_M}
-                           AND n_nonzero < {_HLL_M}
-                          THEN {_HLL_M}.0 * ln({_HLL_M}.0
-                                   / ({_HLL_M} - n_nonzero))
-                          ELSE re END, 4) AS x
-        FROM hraw
-    ), {_hll_exact_sql(src)}, v AS (
-        SELECT event_type,
-               CAST(floor("value" * 1000000 + 0.5) AS BIGINT) AS vm
-        FROM {src}
-    ), bk AS (
-        SELECT event_type,
-               CAST(length(bin(vm)) - 1 AS BIGINT) AS b,
-               CAST((vm >> greatest(length(bin(vm)) - 1 - 4, 0)) & 15
-                    AS BIGINT) AS s
-        FROM v WHERE vm >= 1
-    ), c AS (
-        SELECT event_type, b, s, CAST(COUNT(*) AS BIGINT) AS c
-        FROM bk GROUP BY event_type, b, s
-    ), cum AS (
-        SELECT event_type, b, s, c,
-               CAST(CASE WHEN b >= 4 THEN (s + 17) << (b - 4)
-                         ELSE s + 1 END AS BIGINT) AS hi,
-               CAST(SUM(c) OVER (PARTITION BY event_type
-                                 ORDER BY b, s) AS BIGINT) AS cum,
-               CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS nn
-        FROM c
-    ), q AS (SELECT unnest([50, 90, 99]) AS q_pct
-    ), hit AS (
-        SELECT cum.event_type, q.q_pct, cum.hi,
-               row_number() OVER (PARTITION BY cum.event_type, q.q_pct
-                                  ORDER BY cum.b, cum.s) AS rn
-        FROM cum, q
-        WHERE cum.cum >= floor((q.q_pct * cum.nn + 99) / 100)
-    ), s_dd AS (
+               CAST(n_nonzero AS BIGINT) AS n, hll_estimate AS x
+        FROM hll_readout
+    ), {_hll_exact_sql(src)}, {_ddsketch_sql(src, "event_type")}, s_dd AS (
         SELECT 'ddsketch' AS section,
                event_type || '|p' || q_pct AS dim,
-               CAST(hi AS BIGINT) AS n,
+               CAST(value_micro_hi AS BIGINT) AS n,
                CAST(NULL AS DOUBLE) AS x
-        FROM hit WHERE rn = 1
+        FROM dd_quantiles
     ), s_mg AS (
         SELECT 'mg_user' AS section,
                CAST(user_id AS VARCHAR) AS dim,

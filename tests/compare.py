@@ -114,3 +114,24 @@ def compare_query(spark, name: str, fn, sql: str, sf_dir: str) -> dict:
         diffs = [(a, b) for a, b in zip(cs, cd) if a != b]
         out["first_diffs"] = diffs[:3]
     return out
+
+
+# --------------------------------------------------------------------------
+# Shared by the catalog family tests
+# --------------------------------------------------------------------------
+
+
+def run_query(spark, sf_dir: str, name: str):
+    """The catalog query ``name`` over the tables in ``sf_dir``."""
+    from dvh_airflow_kafka_spark.catalog import REGISTRY
+
+    return REGISTRY[name].fn(spark, sf_dir)
+
+
+def twin_rows(spark, sf_dir: str, batch: str, stream: str) -> list:
+    """The sorted result rows of the batch query ``batch`` and of its
+    streaming twin ``stream``, which share one oracle."""
+    return [
+        sorted(map(tuple, run_query(spark, sf_dir, n).collect()))
+        for n in (batch, stream)
+    ]

@@ -1,5 +1,6 @@
 """Bloom-probed dedup: the textbook guarantees — zero false negatives,
-real pruning, and exact equivalence with the plain anti-join."""
+real pruning, and exact equivalence with the plain anti-join — and the
+streaming set-bit twin of the batch Bloom filter."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from dvh_airflow_kafka_spark.ext.bloom import (
     build_bloom,
 )
 from dvh_airflow_kafka_spark.io import load_table
+from tests.compare import twin_rows
 
 
 def _key(cols):
@@ -66,3 +68,31 @@ def test_bloom_dedup_idempotent(spark, sf_dir):
     first = bloom_dedup(batch, sink, ["event_id"])
     sink2 = sink.unionByName(first.select("event_id"))
     assert bloom_dedup(first, sink2, ["event_id"]).count() == 0
+
+
+def test_streaming_bloom_matches_batch_twin_and_bits_law(spark, sf_dir):
+    # result-level twin law: the streaming-bits readout reproduces the
+    # batch Bloom dedup exactly
+    batch, stream = twin_rows(
+        spark, sf_dir, "bloom_dedup_insert", "streaming_bloom_bits"
+    )
+    assert batch == stream
+    assert len(batch) > 0
+    # bits-level twin law: the DRAINED streaming state snapshot equals
+    # the batch build_bloom frame EXACTLY (not just any superset — extra
+    # set bits would be invisible to the result-level check above, since
+    # they only shrink the fast path)
+    from dvh_airflow_kafka_spark.catalog.q05_chunking import _bloom_bits_snapshot
+
+    sink = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") % 2 == 0)
+        .select("event_id")
+    )
+    key = F.concat_ws("\x1f", F.col("event_id").cast("string"))
+    batch_bits = {r["pos"] for r in build_bloom(sink, key).collect()}
+    stream_bits = {
+        r["pos"] for r in _bloom_bits_snapshot(spark, sf_dir).collect()
+    }
+    assert stream_bits == batch_bits
+    assert len(batch_bits) > 0

@@ -1,4 +1,5 @@
-"""Laws for ext/graph.bfs_min_hops and ext/sketch KMV theta sketches."""
+"""Laws for ext/graph.bfs_min_hops and ext/sketch KMV theta sketches,
+batch and streaming."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from dvh_airflow_kafka_spark.ext.sketch import (
     kmv_estimate,
     kmv_sketch,
 )
+from tests.compare import twin_rows
 
 
 def _edges(spark, pairs):
@@ -143,3 +145,11 @@ def test_kmv_estimate_within_error_envelope(spark):
 def test_kmv_universe_matches_hash_width(spark):
     assert KMV_UNIVERSE == 16**15
     assert _py_hash(123) < KMV_UNIVERSE
+
+
+def test_streaming_kmv_matches_batch_twin(spark, sf_dir):
+    batch, stream = twin_rows(
+        spark, sf_dir, "theta_sketch_overlap", "streaming_kmv_minima"
+    )
+    assert batch == stream
+    assert len(batch) > 0

@@ -1,5 +1,6 @@
 """Deterministic hash split/sample: stability across runs and
-re-partitionings, fraction accuracy, and stratum uniformity."""
+re-partitionings, fraction accuracy, and stratum uniformity; the
+incremental mixture rebalance and its streaming twin."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from dvh_airflow_kafka_spark.ext.sampling import (
     stratified_hash_sample,
 )
 from dvh_airflow_kafka_spark.io import load_table
+from tests.compare import run_query, twin_rows
 
 
 def test_split_stable_under_repartition(spark, sf_dir):
@@ -256,3 +258,47 @@ def test_temperature_mixture_drops_null_sources(spark):
     assert kept  # k large enough that srcA keeps everything
     assert all(r.source == "srcA" for r in kept)
     assert len(kept) == 20
+
+
+def test_rebalance_merge_law_and_budget(spark, sf_dir):
+    from dvh_airflow_kafka_spark.catalog.q04_sampling import (
+        _REBALANCE_BUDGET,
+    )
+    from dvh_airflow_kafka_spark.ext.text import token_count_ws
+
+    rows = run_query(spark, sf_dir, "mixture_rebalance_incremental").collect()
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("source").isNotNull()
+    )
+    direct = {
+        r["source"]: (r["n"], r["t"])
+        for r in docs.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(token_count_ws(F.col("text"))).alias("t"),
+        )
+        .collect()
+    }
+    assert {r["source"] for r in rows} == set(direct)
+    for r in rows:
+        # merged partials equal the direct one-pass aggregate
+        assert (r["n_docs"], r["n_tokens"]) == direct[r["source"]], r
+        # the increment is a subset of the total
+        assert 0 <= r["inc_docs"] <= r["n_docs"]
+        assert 0 <= r["inc_tokens"] <= r["n_tokens"]
+        assert r["w_sqrt"] * r["w_sqrt"] <= r["n_tokens"]
+        assert (r["w_sqrt"] + 1) * (r["w_sqrt"] + 1) > r["n_tokens"]
+    # floor-division shares never oversubscribe the ppm pool / budget
+    assert sum(r["share_ppm"] for r in rows) <= 1_000_000
+    assert sum(r["token_budget"] for r in rows) <= _REBALANCE_BUDGET
+
+
+def test_streaming_mixture_matches_batch_twin(spark, sf_dir):
+    batch, stream = twin_rows(
+        spark,
+        sf_dir,
+        "mixture_rebalance_incremental",
+        "streaming_mixture_rebalance",
+    )
+    assert batch == stream
+    assert len(batch) > 0

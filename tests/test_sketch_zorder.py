@@ -1,11 +1,25 @@
-"""Misra-Gries superset guarantee + Z-order layout skipping evidence."""
+"""Sketch laws: the Misra-Gries superset guarantee (batch kernel,
+resumable feed, streaming twin), the ddsketch quantile bounds and its
+streaming twin, and Z-order layout skipping evidence."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from dvh_airflow_kafka_spark.catalog import _DDSKETCH_QS
+from dvh_airflow_kafka_spark.ext.sketch import _mg_feed
 from dvh_airflow_kafka_spark.io import load_table
+from tests.compare import run_query, twin_rows
+
+
+def _freqs(texts):
+    out: dict[str, int] = {}
+    for t in texts:
+        for tok in t.split():
+            out[tok] = out.get(tok, 0) + 1
+    return out
 
 
 def test_misra_gries_candidates_cover_heavy_hitters(spark, sf_dir):
@@ -167,3 +181,85 @@ def test_countmin_never_underestimates_and_merges(spark, sf_dir):
         for k, v in part.items():
             merged[k] = merged.get(k, 0) + v
     assert merged == whole
+
+
+def test_ddsketch_quantile_bounds_vs_exact(spark, sf_dir):
+    """The sketch's reported bucket upper bound brackets the exact
+    percentile: hi ≥ exact, and hi ≤ exact · (1 + 1/16) + 1 (one
+    sub-bucket of relative width, +1 for integer truncation)."""
+    rows = run_query(spark, sf_dir, "ddsketch_value_quantiles").collect()
+    vals = np.array(
+        [
+            int(np.floor(r.value * 1_000_000 + 0.5))
+            for r in load_table(spark, sf_dir, "events")
+            .select("value")
+            .collect()
+        ],
+        dtype=np.int64,
+    )
+    assert rows and {r.q_pct for r in rows} == set(_DDSKETCH_QS)
+    for r in rows:
+        # exact rank-percentile over this event_type's values
+        sub = np.sort(
+            np.array(
+                [
+                    int(np.floor(v * 1_000_000 + 0.5))
+                    for (v,) in load_table(spark, sf_dir, "events")
+                    .filter(F.col("event_type") == r.event_type)
+                    .select("value")
+                    .collect()
+                ],
+                dtype=np.int64,
+            )
+        )
+        rank = -(-r.q_pct * len(sub) // 100)  # ceil
+        exact = int(sub[rank - 1])
+        assert r.value_micro_hi >= exact, (r, exact)
+        assert r.value_micro_hi <= exact + exact // 16 + 1, (r, exact)
+    assert vals.min() >= 1  # the vm >= 1 guard drops nothing on this data
+
+
+def test_streaming_ddsketch_equals_batch_sketch(spark, sf_dir):
+    """Mergeability, engine-level: the streaming complete-mode snapshot
+    must equal the batch sketch row-for-row."""
+    batch, stream = twin_rows(
+        spark, sf_dir, "ddsketch_value_quantiles", "streaming_ddsketch_quantiles"
+    )
+    assert batch == stream
+
+
+def test_mg_feed_retains_every_heavy_hitter():
+    # adversarial mix: one dominant token, a mid token, and a long tail of
+    # singletons that forces constant decrement churn at k=4
+    texts = ["hot " * 40 + "warm " * 12] + [f"tail{i}" for i in range(60)]
+    k = 4
+    counters: dict[str, int] = {}
+    _mg_feed(counters, texts, k)
+    assert len(counters) <= k
+    n = sum(_freqs(texts).values())
+    for tok, c in _freqs(texts).items():
+        if c > n / k:
+            assert tok in counters, (tok, c, n, counters)
+
+
+def test_mg_feed_chunked_equals_single_pass():
+    # the streaming-state law: resuming the counters across chunk
+    # boundaries is EXACTLY one pass over the concatenation
+    texts = [f"a b c d{i % 7} e{i % 3} a" for i in range(50)]
+    one: dict[str, int] = {}
+    _mg_feed(one, texts, 5)
+    chunked: dict[str, int] = {}
+    for lo in range(0, 50, 9):
+        _mg_feed(chunked, texts[lo : lo + 9], 5)
+    assert one == chunked
+
+
+def test_streaming_mg_matches_batch_twin_and_bounds_emissions(spark, sf_dir):
+    batch, stream = twin_rows(
+        spark,
+        sf_dir,
+        "frequent_tokens_bounded_state",
+        "streaming_frequent_tokens",
+    )
+    assert batch == stream
+    assert len(batch) > 0

@@ -470,7 +470,8 @@ def test_run_drain_failure_contract(spark, tmp_path, monkeypatch):
 
 
 # --------------------------------------------------------------------------
-# shingle-index probe updater (streaming_neardup_gate's stateful kernel)
+# applyInPandasWithState updaters driven directly: the shingle-index probe
+# (streaming_neardup_gate), KMV minima and Misra-Gries kernels
 # --------------------------------------------------------------------------
 
 
@@ -682,3 +683,44 @@ def test_priority_topk_updater_laws():
     expect = sorted(rows, key=lambda r: (-r[3], r[1]))[:5]
     assert st1._v[1] == [r[1] for r in expect]
     assert st1._v[3] == [r[3] for r in expect]
+
+
+def test_kmv_updater_chunked_equals_single_pass():
+    # the streaming-state law: k-min-of-union resumed across batch
+    # boundaries telescopes to the k-min over the concatenation — and a
+    # hash discarded in an early batch never re-enters
+    from dvh_airflow_kafka_spark.streaming.stateful import _make_kmv_updater
+
+    hashes = [((h * 2654435761) % 997) for h in range(300)]  # dups included
+    k = 16
+    expect = sorted(set(hashes))[:k]
+
+    upd = _make_kmv_updater(k)
+    one = _FakeState()
+    list(upd(("g",), iter([pd.DataFrame({"h": hashes})]), one))
+    chunked = _FakeState()
+    for lo in range(0, 300, 37):
+        out = list(
+            upd(("g",), iter([pd.DataFrame({"h": hashes[lo : lo + 37]})]), chunked)
+        )
+        assert len(out) == 1 and len(out[0]) == 1  # one snapshot row/batch
+        assert len(out[0]["kmins"][0]) <= k
+    assert one._v[1] == chunked._v[1] == expect
+    # seq is the per-batch monotone snapshot counter the reader keys on
+    assert chunked._v[0] == len(range(0, 300, 37)) and one._v[0] == 1
+
+
+def test_mg_updater_emits_at_most_k_per_shard_per_batch():
+    # drive the applyInPandasWithState updater directly with a fake state
+    from dvh_airflow_kafka_spark.streaming.stateful import _make_mg_updater
+
+    upd = _make_mg_updater(8)
+    state = _FakeState()
+    texts = pd.DataFrame({"text": [f"t{i} t{i} common" for i in range(100)]})
+    out = list(upd((3,), iter([texts]), state))
+    assert len(out) == 1 and len(out[0]) <= 8
+    toks, counts = state._v
+    assert len(toks) <= 8 and len(toks) == len(counts)
+    # resume: feeding more data through the SAME state keeps the bound
+    out2 = list(upd((3,), iter([texts]), state))
+    assert len(out2[0]) <= 8

@@ -1,7 +1,7 @@
 """Laws for ext/stats (order statistics by counting) and containment
 pairs — pinned against numpy/direct computation on seeded data, so the
 kernels hold independently of the catalog oracles that also exercise
-them."""
+them — and the week-over-week drift monitor built on them."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from dvh_airflow_kafka_spark.ext import stats as xstats
 from dvh_airflow_kafka_spark.ext.dedup import ngram_containment_pairs
+from tests.compare import run_query
 
 
 def _df(spark, rows, schema):
@@ -269,3 +270,24 @@ def test_containment_symmetric_on_equal_docs(spark):
     df = _df(spark, [(1, text), (2, text)], "doc_id long, text string")
     r = ngram_containment_pairs(df, "doc_id", "text", threshold=0.9).collect()[0]
     assert r["containment_a"] == 1.0 and r["containment_b"] == 1.0
+
+
+def test_drift_monitor_week_pairs_and_chi2_per_week(spark, sf_dir):
+    import datetime as dt
+
+    rows = run_query(spark, sf_dir, "quality_drift_monitor").collect()
+    assert rows
+    by_week: dict[str, set] = {}
+    for r in rows:
+        d = dt.date.fromisoformat(r["week"])
+        assert d.weekday() == 0  # Monday-truncated weeks
+        assert r["n_prev"] > 0 and r["n_cur"] > 0
+        assert r["ks_num"] >= 0 and 0.0 <= r["ks_stat"] <= 1.0
+        by_week.setdefault(r["week"], set()).add(r["mix_chi2_micro"])
+    # the mix chi-square is a WEEK-level statistic: one value per week,
+    # repeated across that week's event-type rows
+    for wk, vals in by_week.items():
+        assert len(vals) == 1, (wk, vals)
+    # the first week has no predecessor -> it never appears as a pair
+    weeks = sorted(by_week)
+    assert "2024-01-01" not in weeks

@@ -239,3 +239,12 @@ def test_bpe_staged_pairs_argmax_matches_learner(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_learn_merges(docs, "text", n_merges=8)
     assert got == {i: m for i, m in enumerate(merges)}
+
+
+def test_bpe_piece_vocab_partial_oracle(spark, sf_dir):
+    from dvh_airflow_kafka_spark.catalog import REGISTRY
+    from tests.compare import compare_query
+
+    qd = REGISTRY["bpe_piece_vocab"]
+    res = compare_query(spark, "bpe_piece_vocab", qd.fn, qd.sql, sf_dir)
+    assert res["match"], res
